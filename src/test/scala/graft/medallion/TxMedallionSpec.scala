@@ -1,5 +1,6 @@
 package graft.medallion
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -128,6 +129,37 @@ class TxMedallionSpec extends SparkTestBase {
       "a compaction commit must not be re-read as new data")
     assert(t.silver.state().txns(TxMedallion.SilverCursor) == t.bronze.version,
       "silver's cursor must advance past the compaction commit")
+    assert(goldSet(t.gold.read()) ==
+      goldSet(Medallion.batchGold(spark, rawPath, dayStart)))
+  }
+
+  test("a steady trigger of the same shape compiles no generated code") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+
+    val gen = new EventGenerator(seed = 53)
+    val registry = new InMemorySchemaRegistry
+    val Seq(b1, b2, b3) = gen.events(120, duplicateEvery = 6).grouped(40).toSeq
+    val base = tmpDir("tx-medallion-codegen")
+    val rawPath = s"$base/raw"
+    val ckpt = s"$base/_checkpoints"
+    val dayStart = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val t = TxMedallion.tables(spark, base)
+    val stream = MemoryStream[KafkaEnvelope]
+
+    // RawIngest and bronze run as streaming queries on cloned sessions:
+    // the codegen cache must outlive each query's session
+    def trigger(batch: Seq[graft.gen.ProductEvent], offset: Int): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      stream.addData(gen.envelopes(batch, registry, ConfluentWire, offset))
+      RawIngest.run(stream.toDF(), registry, ConfluentWire, rawPath, s"$ckpt/raw")
+        .awaitTermination()
+      TxMedallion.run(spark, rawPath, t, ckpt, dayStart)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    trigger(b1, 0) // fresh tables: the first trigger plans differently
+    trigger(b2, 40) // the warm trigger
+    assert(trigger(b3, 80) == 0L, "a steady trigger recompiled generated classes")
     assert(goldSet(t.gold.read()) ==
       goldSet(Medallion.batchGold(spark, rawPath, dayStart)))
   }
