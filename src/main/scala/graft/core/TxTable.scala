@@ -5,7 +5,7 @@ import java.util.UUID
 import scala.annotation.tailrec
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -50,6 +50,19 @@ import org.json4s.jackson.JsonMethods
   * relocatable. The commit throughput ceiling (one manifest per
   * commit) is the known design property shared with the original:
   * batch small writes upstream.
+  *
+  * Row-level verbs. [[merge]], [[mergeConditional]], [[mergeScd2]],
+  * [[delete]], [[deleteKeys]], [[deleteMergeOnRead]], [[update]],
+  * [[updateMergeOnRead]] and [[replaceWhere]] share one private
+  * rewrite core: the provenance collect that names the files holding
+  * affected rows, one null-safe key condition over quoted column
+  * references, one SET projection (both updates), one deletion-vector
+  * path (both merge-on-read verbs), and one commit tail — the
+  * (writer, batch) gate, the rename and logical-conflict checks, the
+  * cleanup of every staged data, change and sidecar file on abort,
+  * then Remove/Add/Dv/Cdf. Each verb keeps only its own row logic:
+  * which rows survive in the files it rewrites, which rows it adds,
+  * and what its change record holds.
   */
 class TxTable(spark: SparkSession, val tablePath: String,
               checkpointInterval: Int = 16) {
@@ -1582,9 +1595,9 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * schema/constraints, or appended files whose stats cannot prove
     * them disjoint from the predicate.
     */
-  def replaceWhere(predicate: org.apache.spark.sql.Column, df0: DataFrame,
+  def replaceWhere(predicate: Column, df0: DataFrame,
                    partitionBy: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val snap = state()
     val df = computeGenerated(snap, physicalize(snap, df0))
     val stagedNew = stageData(df, partitionBy = partitionBy.map(physicalName(snap, _)))
@@ -1610,14 +1623,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
     }
     enforceConstraints(effectiveChecks(snap), stagedNew, schema, stagedNew,
       "replaceWhere into")
-    val candidates = prunedFiles(snap, predicate)
-    val touched =
-      if (candidates.isEmpty) Seq.empty[String]
-      else logicalize(snap, readState(snap.copy(files = candidates)))
-        .withColumn("__file", input_file_name())
-        .where(predicate)
-        .select("__file").distinct().collect()
-        .map(r => new Path(new java.net.URI(r.getString(0))).getName).toSeq
+    val touched = filesMatching(snap, predicate)
     if (touched.isEmpty && stagedNew.isEmpty) return // provable no-op
     // one cached read of the touched files feeds the survivor rewrite
     // and the delete half of the change record
@@ -1630,30 +1636,14 @@ class TxTable(spark: SparkSession, val tablePath: String,
           .unionByName(
             logicalize(snap, readStagedNew).withColumn(ChangeTypeCol, lit("insert")),
             allowMissingColumns = true))
-      if (touched.isEmpty)
-        (Seq.empty[(String, Option[FileStats])],
-          stageData(cdfFrame, prefix = "cdf", collectStats = false))
-      else stageDataAndCdf(physicalize(snap,
-        touchedRows.where(not(coalesce(predicate, lit(false))))), cdfFrame)
+      stageRewrite(
+        if (touched.isEmpty) Nil
+        else Seq(physicalize(snap, touchedRows.where(not(coalesce(predicate, lit(false)))))),
+        cdfFrame)
     } finally if (touched.nonEmpty) touchedRows.unpersist()
-    val mayMatch = addsMayMatchPredicate(snap, predicate)
-    fireBeforeCommitHook()
-    commitLoop(s"replaceWhere into $tablePath") { st =>
-      requireRenamesStable(snap, st, stagedNew ++ stagedSurv ++ stagedCdf,
-        "replaceWhere into")
-      findConflict(snap, st, touched.toSet, mayMatch).foreach { why =>
-        (stagedNew ++ stagedSurv ++ stagedCdf).foreach { case (f, _) =>
-          fs.delete(new Path(root, f), false)
-        }
-        throw new java.util.ConcurrentModificationException(
-          s"conflicting concurrent commit on $tablePath during replaceWhere: " +
-            s"$why; rerun replaceWhere() against the new state")
-      }
-      Some(touched.map(Remove(_)) ++
-        (stagedSurv ++ stagedNew).map { case (p, s) => Add(p, s) } ++
-        stagedCdf.map { case (p, _) => Cdf(p) } :+
-        Meta(schema.toDDL))
-    }
+    commitRowLevel("replaceWhere", snap,
+      Rewrite(touched, stagedSurv ++ stagedNew, stagedCdf),
+      addsMayMatchPredicate(snap, predicate)) { _ => Seq(Meta(schema.toDDL)) }
   }
 
   /** DYNAMIC partition overwrite (the published
@@ -2038,7 +2028,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
   }
 
   private def merge0(source0: DataFrame, keys0: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, input_file_name}
+    import org.apache.spark.sql.functions.lit
     // surface → physical at the boundary; everything below is physical
     val snap = state()
     val source = computeGenerated(snap, physicalize(snap, source0))
@@ -2052,20 +2042,8 @@ class TxTable(spark: SparkSession, val tablePath: String,
     // the append path re-maps from the ORIGINAL surface frame: the
     // already-physicalized one would trip the retired-name guard
     if (snap.files.isEmpty) { append(source0); return }
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    // NULL-SAFE key matching throughout: under plain-equality
-    // semi/anti joins a NULL key component never matches, so a
-    // null-keyed upsert would APPEND a duplicate instead of replacing
-    // — and a CDC replica applying post-images by merge could never
-    // converge with an upstream in-place update of a null-keyed row.
-    // EqualNullSafe is still an equi-join key for the planner, so the
-    // join strategy is unchanged.
-    def keyCond(l: String, r: String) =
-      keys.map(k => col(s"$l.`$k`") <=> col(s"$r.`$k`")).reduce(_ && _)
-    val touched = readState(snap).withColumn("__file", input_file_name()).as("t")
-      .join(srcKeys.as("s"), keyCond("t", "s"), "left_semi")
-      .select("__file").distinct().collect()
-      .map(r => new Path(new java.net.URI(r.getString(0))).getName).toSeq
+    val srcKeys = source.select(keys.map(qcol(_)): _*).distinct()
+    val touched = filesWithKeys(withFile(readState(snap)), srcKeys, keys)
     // ONE cached read of the touched files feeds the survivor set AND
     // the change record — without the cache the rewrite would rescan
     // them once per consumer
@@ -2075,65 +2053,39 @@ class TxTable(spark: SparkSession, val tablePath: String,
       // survivors of the touched files (keys not replaced) + all
       // source rows; files without a matching key are untouched by
       // construction
-      val survivors =
-        if (touched.isEmpty) None
-        else Some(touchedRows.as("t")
-          .join(srcKeys.as("s"), keyCond("t", "s"), "left_anti"))
-      val data = survivors match {
-        case None => source
+      val data =
+        if (touched.isEmpty) source
         // survivors may carry pre-declaration rows (null generated
         // values) — backfill them or the merge's own gate rejects its
         // carried rows; source rows were computed/validated above
-        case Some(sv) => recomputeGenerated(snap, sv)
+        else recomputeGenerated(snap, touchedRows.as("t")
+          .join(srcKeys.as("s"), keyCond(keys, "t", "s"), "left_anti"))
           .unionByName(source, allowMissingColumns = true)
-      }
       // row-level change record, committed ATOMICALLY with the
       // rewrite: replaced target rows (pre-image), their replacements
       // (post-image), and genuinely new keys (insert) — what lets an
       // incremental consumer survive an upstream merge
       // (readChangeFeed) instead of hard-failing on the removes
-      val cdfFrame = {
-        import org.apache.spark.sql.functions.lit
-        val pre = touchedRows.as("t")
-          .join(srcKeys.as("s"), keyCond("t", "s"), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-        val tgtKeys = touchedRows.select(keys.map(col): _*).distinct()
-        val post = source.as("t")
-          .join(tgtKeys.as("s"), keyCond("t", "s"), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_postimage"))
-        val ins = source.as("t")
-          .join(tgtKeys.as("s"), keyCond("t", "s"), "left_anti")
-          .withColumn(ChangeTypeCol, lit("insert"))
-        pre.unionByName(post, allowMissingColumns = true)
-          .unionByName(ins, allowMissingColumns = true)
-      }
+      val tgtKeys = touchedRows.select(keys.map(qcol(_)): _*).distinct()
+      def changes(rows: DataFrame, keyRows: DataFrame, how: String, kind: String) =
+        rows.as("t").join(keyRows.as("s"), keyCond(keys, "t", "s"), how)
+          .withColumn(ChangeTypeCol, lit(kind))
+      val cdfFrame = changes(touchedRows, srcKeys, "left_semi", "update_preimage")
+        .unionByName(changes(source, tgtKeys, "left_semi", "update_postimage"),
+          allowMissingColumns = true)
+        .unionByName(changes(source, tgtKeys, "left_anti", "insert"),
+          allowMissingColumns = true)
       val (s1, s2) = stageDataAndCdf(data, cdfFrame)
       (s1, s2, data)
     } finally if (touched.nonEmpty) touchedRows.unpersist()
-    // snap's constraint set is authoritative: any concurrent DDL bumps
-    // the version and the strict rule below aborts the merge anyway
-    enforceConstraints(effectiveChecks(snap), staged,
-      mergeSchemas(snap.schema, newData.schema, widenOn(snap)), staged ++ stagedCdf, "merge into")
-    fireBeforeCommitHook()
-    commitLoop(s"merge into $tablePath") { st =>
-      requireRenamesStable(snap, st, staged ++ stagedCdf, "merge into")
-      // LOGICAL conflict rule (Delta's ConcurrentAppend/DeleteRead
-      // exceptions): a concurrent commit aborts the merge only if it
-      // could break the replace-by-key contract — it touched a file
-      // this merge rewrites, changed schema/constraints, or appended
-      // files whose key ranges might overlap the source keys
-      findConflict(snap, st, touched.toSet, mayMatch).foreach { why =>
-        (staged ++ stagedCdf).foreach { case (f, _) =>
-          fs.delete(new Path(root, f), false)
-        }
-        throw new java.util.ConcurrentModificationException(
-          s"conflicting concurrent commit on $tablePath during merge: $why; " +
-            "rerun merge() against the new state")
-      }
-      Some(touched.map(Remove(_)) ++ staged.map { case (p, s) => Add(p, s) } ++
-        stagedCdf.map { case (p, _) => Cdf(p) } ++
-        identitySync :+
-        Meta(mergeSchemas(st.schema, newData.schema, widenOn(st)).toDDL))
+    // LOGICAL conflict rule (Delta's ConcurrentAppend/DeleteRead exceptions):
+    // a concurrent commit aborts the merge only if it could break the
+    // replace-by-key contract — it touched a file this merge rewrites,
+    // changed schema/constraints, or appended files whose key ranges
+    // might overlap the source keys
+    commitRowLevel("merge", snap, Rewrite(touched, staged, stagedCdf), mayMatch,
+      checkUnder = Some(mergeSchemas(snap.schema, newData.schema, widenOn(snap)))) { st =>
+      identitySync :+ Meta(mergeSchemas(st.schema, newData.schema, widenOn(st)).toDDL)
     }
   }
 
@@ -2236,8 +2188,8 @@ class TxTable(spark: SparkSession, val tablePath: String,
       bySource: Seq[TxTable.BySourceClause],
       txn: Option[TxTable.TxnId],
       evolveSchema: Boolean): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, input_file_name, lit, when}
-    import TxTable.{BySourceDelete, BySourceUpdate, MatchedDelete, MatchedUpdate}
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
+    import TxTable.{BySourceUpdate, MatchedUpdate}
     val snap = state()
     val surfaceCols: Seq[String] = snap.schema
       .map(_.fields.toSeq.map(_.name).filterNot(snap.dropped.contains)
@@ -2305,12 +2257,8 @@ class TxTable(spark: SparkSession, val tablePath: String,
         s"cursor-only conditional merge into $tablePath"))
       return
     }
-    def keyCond(l: String, r: String) =
-      keys.map(k => col(s"$l.`$k`") <=> col(s"$r.`$k`")).reduce(_ && _)
-    def fileNames(rows: Array[Row]): Seq[String] =
-      rows.map(r => new Path(new java.net.URI(r.getString(0))).getName).toSeq
-    val srcKeys = source0.select(keys.map(k => col(s"`$k`")): _*).distinct()
-    val tgtAll = logicalize(snap, readState(snap)).withColumn("__file", input_file_name())
+    val srcKeys = source0.select(keys.map(qcol(_)): _*).distinct()
+    val tgtAll = withFile(logicalize(snap, readState(snap)))
     // ONE provenance pass finds both file classes — files holding a
     // matching key (bounds the rewrite set and licenses the insert
     // anti-join below), and files holding an unmatched row some
@@ -2321,15 +2269,15 @@ class TxTable(spark: SparkSession, val tablePath: String,
         .map(c => coalesce(expr(c), lit(false))).getOrElse(lit(true))).reduce(_ || _)
     val fileFlags = tgtAll.as("t")
       .join(srcKeys.withColumn("__gmark", lit(true)).as("s"),
-        keyCond("t", "s"), "left_outer")
+        keyCond(keys, "t", "s"), "left_outer")
       .withColumn("__gmatch", coalesce(col("__gmark"), lit(false)))
       .where(col("__gmatch") || bySourceOr)
-      .groupBy(col("__file"))
+      .groupBy(col(FileCol))
       .agg(org.apache.spark.sql.functions.max(when(col("__gmatch"), 1).otherwise(0)).as("__hasm"),
         org.apache.spark.sql.functions.max(when(!col("__gmatch") && bySourceOr, 1).otherwise(0)).as("__hasb"))
       .collect()
-    def flagged(idx: Int): Seq[String] = fileNames(
-      fileFlags.filter(_.getInt(idx) == 1))
+    def flagged(idx: Int): Seq[String] =
+      fileFlags.filter(_.getInt(idx) == 1).map(r => fileName(r.getString(0))).toSeq
     val matchedFiles = flagged(1)
     val bySourceFiles = flagged(2)
     val rewriteFiles =
@@ -2337,10 +2285,10 @@ class TxTable(spark: SparkSession, val tablePath: String,
     // a source key absent from the matching files is absent from the
     // whole table — provenance found every file holding any match
     val tgtMatchKeys = logicalize(snap, readState(snap.copy(files = matchedFiles)))
-      .select(keys.map(k => col(s"`$k`")): _*).distinct()
+      .select(keys.map(qcol(_)): _*).distinct()
     val insertRows = notMatchedInsert.map { ins0 =>
       val anti = source0.as("s")
-        .join(tgtMatchKeys.as("t"), keyCond("s", "t"), "left_anti")
+        .join(tgtMatchKeys.as("t"), keyCond(keys, "s", "t"), "left_anti")
       val filtered = ins0.condition
         .map(c => anti.where(coalesce(expr(c), lit(false)))).getOrElse(anti)
       if (ins0.values.isEmpty) filtered
@@ -2397,7 +2345,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
         .otherwise(lit(-1))
     val classified = tgtRows.as("t")
       .join(source0.withColumn("__s_present", lit(true)).as("s"),
-        keyCond("t", "s"), "left_outer")
+        keyCond(keys, "t", "s"), "left_outer")
       .withColumn("__m_idx", mIdx)
       .withColumn("__b_idx", bIdx)
     val kind = when(col("__m_idx") >= 0, kindOf(col("__m_idx"), matched))
@@ -2407,10 +2355,10 @@ class TxTable(spark: SparkSession, val tablePath: String,
     if (rewriteFiles.nonEmpty) withKind.persist()
     try {
       def tCol(c: String): org.apache.spark.sql.Column =
-        if (surfaceCols.contains(c)) col(s"t.`$c`")
+        if (surfaceCols.contains(c)) qcol(c, "t")
         else lit(null).cast(source0.schema(c).dataType)
       def sCol(c: String): org.apache.spark.sql.Column =
-        if (srcCols.contains(c)) col(s"s.`$c`") else col(s"t.`$c`")
+        if (srcCols.contains(c)) qcol(c, "s") else qcol(c, "t")
       def updValue(c: String, set: Map[String, String]) =
         if (set.isEmpty) sCol(c) // UPDATE SET *
         else set.get(c).map(expr).getOrElse(tCol(c))
@@ -2426,7 +2374,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
           when(p, v).otherwise(els)
         }.as(c)
       }
-      val preCols = surfaceCols.map(c => col(s"t.`$c`").as(c))
+      val preCols = surfaceCols.map(c => qcol(c, "t").as(c))
       def toPhysG(df: DataFrame) = recomputeGenerated(snap, physicalize(snap, df))
       val keptAndUpdated = toPhysG(withKind.where(col("__kind") =!= 2)
         .select(outCols.map(rewProj): _*))
@@ -2449,33 +2397,15 @@ class TxTable(spark: SparkSession, val tablePath: String,
         physInsert.map(_.withColumn(ChangeTypeCol, lit("insert"))).toSeq)
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val (staged, stagedCdf) = stageDataAndCdf(newData, cdfData)
-      enforceConstraints(effectiveChecks(snap), staged,
-        mergeSchemas(snap.schema, newData.schema, widenOn(snap)), staged ++ stagedCdf,
-        "conditional merge into")
       val mayMatch: Seq[(String, Option[FileStats])] => Boolean =
         if (bySource.nonEmpty) _.nonEmpty // by-source reads every unmatched row
         else auditMayMatch
-      fireBeforeCommitHook()
       val identitySync = identitySyncActions(snap, newData)
-      commitLoop(s"conditional merge into $tablePath") { st =>
-        if (txnGate(st, txn, staged ++ stagedCdf, "conditional merge into")) {
-          None // already committed by a previous attempt of this batch
-        } else {
-          requireRenamesStable(snap, st, staged ++ stagedCdf, "conditional merge into")
-          findConflict(snap, st, rewriteFiles.toSet, mayMatch).foreach { why =>
-            (staged ++ stagedCdf).foreach { case (f, _) =>
-              fs.delete(new Path(root, f), false)
-            }
-            throw new java.util.ConcurrentModificationException(
-              s"conflicting concurrent commit on $tablePath during conditional " +
-                s"merge: $why; rerun against the new state")
-          }
-          Some(rewriteFiles.map(Remove(_)) ++ staged.map { case (p, s) => Add(p, s) } ++
-            stagedCdf.map { case (p, _) => Cdf(p) } ++
-            identitySync ++
-            txn.map(t => Txn(t.writerId, t.batchId)).toSeq :+
-            Meta(mergeSchemas(st.schema, newData.schema, widenOn(st)).toDDL))
-        }
+      commitRowLevel("mergeConditional", snap,
+        Rewrite(rewriteFiles, staged, stagedCdf), mayMatch,
+        checkUnder = Some(mergeSchemas(snap.schema, newData.schema, widenOn(snap))),
+        txn = txn) { st =>
+        identitySync :+ Meta(mergeSchemas(st.schema, newData.schema, widenOn(st)).toDDL)
       }
     } finally if (rewriteFiles.nonEmpty) withKind.unpersist()
   }
@@ -2529,7 +2459,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
 
   private def scd2Merge0(source0: DataFrame, keys0: Seq[String], version: Long,
       evolveSchema: Boolean): Unit = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit, when}
+    import org.apache.spark.sql.functions.{col, lit, when}
     // surface → physical at the boundary; everything below is physical
     val snap = state()
     val source = physicalize(snap, source0)
@@ -2571,18 +2501,16 @@ class TxTable(spark: SparkSession, val tablePath: String,
         "tracked attributes) or drop them")
     val attrs = business.filterNot(keys.contains)
     val cur = readState(snap).where(col(ScdToCol).isNull)
-    // NULL-SAFE key matching throughout (the merge0 contract): a
-    // null-keyed dimension row must match its source row, not be
-    // re-inserted as "new" every epoch
-    def keyCond(l: String, r: String) =
-      keys.map(k => col(s"$l.`$k`") <=> col(s"$r.`$k`")).reduce(_ && _)
-    // null-safe attribute comparison: any tracked attribute differing
+    // NULL-SAFE key matching throughout ([[keyCond]]): a null-keyed
+    // dimension row must match its source row, not be re-inserted as
+    // "new" every epoch. Null-safe attribute comparison: any tracked
+    // attribute differing
     // makes the key "changed"; a key-only table can never change.
     // A NEW attribute's stored value is NULL on every existing row,
     // so a non-null source value is a change by definition.
-    val joined = cur.alias("t").join(source.alias("s"), keyCond("t", "s"))
-    val differs = (attrs.map(a => !(col(s"t.$a") <=> col(s"s.$a"))) ++
-      newAttrs.map(a => col(s"s.`$a`").isNotNull))
+    val joined = cur.alias("t").join(source.alias("s"), keyCond(keys, "t", "s"))
+    val differs = (attrs.map(a => !(qcol(a, "t") <=> qcol(a, "s"))) ++
+      newAttrs.map(a => qcol(a, "s").isNotNull))
       .reduceOption(_ || _).getOrElse(lit(false))
     val nonMonotone = joined.where(differs && col(s"t.$ScdFromCol") >= version)
       .limit(1).collect()
@@ -2591,21 +2519,18 @@ class TxTable(spark: SparkSession, val tablePath: String,
         s"row it closes (e.g. ${nonMonotone.headOption.getOrElse("")}) — " +
         "change epochs must be strictly increasing per key")
     val changedKeys = joined.where(differs)
-      .select(keys.map(k => col(s"t.`$k`").as(k)): _*).distinct().persist()
+      .select(keys.map(k => qcol(k, "t").as(k)): _*).distinct().persist()
     try {
       // files to rewrite: ONLY those holding a current row of a changed
       // key — history-only files are untouched by construction
-      val touched = readState(snap).withColumn("__file", input_file_name()).as("t")
-        .where(col(ScdToCol).isNull)
-        .join(changedKeys.as("c"), keyCond("t", "c"), "left_semi")
-        .select("__file").distinct().collect()
-        .map(r => new Path(new java.net.URI(r.getString(0))).getName).toSeq
+      val touched = filesWithKeys(withFile(readState(snap)).where(col(ScdToCol).isNull),
+        changedKeys, keys)
       // rows entering the table at this epoch: brand-new keys + the new
       // current rows of changed keys (identical-attribute rows are in
       // neither set — the no-op)
-      val newRows = stamped.as("t").join(cur.as("c"), keyCond("t", "c"), "left_anti")
+      val newRows = stamped.as("t").join(cur.as("c"), keyCond(keys, "t", "c"), "left_anti")
         .unionByName(stamped.as("t")
-          .join(changedKeys.as("c"), keyCond("t", "c"), "left_semi"))
+          .join(changedKeys.as("c"), keyCond(keys, "t", "c"), "left_semi"))
       if (touched.isEmpty && newRows.isEmpty) return // provable no-op
       val touchedRows = readState(snap.copy(files = touched))
       if (touched.nonEmpty) touchedRows.persist()
@@ -2614,14 +2539,14 @@ class TxTable(spark: SparkSession, val tablePath: String,
         // backfill pre-declaration generated nulls on the rewrite (see
         // recomputeGenerated) — carried rows must pass their own gate
         val rewritten = recomputeGenerated(snap, touchedRows.as("t")
-          .join(marked.as("m"), keyCond("t", "m"), "left")
+          .join(marked.as("m"), keyCond(keys, "t", "m"), "left")
           .select(col("t.*") +: Seq(col("m.__scd_chg")): _*)
           .withColumn(ScdToCol,
             when(col(ScdToCol).isNull && col("__scd_chg") === 1, lit(version))
               .otherwise(col(ScdToCol)))
           .drop("__scd_chg"))
         val closingPre = touchedRows.as("t").where(col(ScdToCol).isNull)
-          .join(changedKeys.as("c"), keyCond("t", "c"), "left_semi")
+          .join(changedKeys.as("c"), keyCond(keys, "t", "c"), "left_semi")
         // allowMissingColumns: under evolution the rewritten history
         // rows lack the new attributes (they read NULL); otherwise the
         // schemas are identical and the flag is inert
@@ -2634,25 +2559,10 @@ class TxTable(spark: SparkSession, val tablePath: String,
             .unionByName(newRows.withColumn(ChangeTypeCol, lit("insert")),
               allowMissingColumns = true))
       } finally if (touched.nonEmpty) touchedRows.unpersist()
-      val evolved = mergeSchemas(snap.schema, stamped.schema, widenOn(snap))
-      enforceConstraints(effectiveChecks(snap), staged,
-        evolved, staged ++ stagedCdf, "scd2 merge into")
-      fireBeforeCommitHook()
-      commitLoop(s"scd2 merge into $tablePath") { st =>
-        requireRenamesStable(snap, st, staged ++ stagedCdf, "scd2 merge into")
-        findConflict(snap, st, touched.toSet, mayMatch).foreach { why =>
-          (staged ++ stagedCdf).foreach { case (f, _) =>
-            fs.delete(new Path(root, f), false)
-          }
-          throw new java.util.ConcurrentModificationException(
-            s"conflicting concurrent commit on $tablePath during scd2 merge: " +
-              s"$why; rerun mergeScd2() against the new state")
-        }
-        Some(touched.map(Remove(_)) ++ staged.map { case (p, s) => Add(p, s) } ++
-          stagedCdf.map { case (p, _) => Cdf(p) } ++
-          (if (newAttrs.isEmpty) Nil
-           else Seq(Meta(mergeSchemas(st.schema, stamped.schema,
-             widenOn(st)).toDDL))))
+      commitRowLevel("mergeScd2", snap, Rewrite(touched, staged, stagedCdf), mayMatch,
+        checkUnder = Some(mergeSchemas(snap.schema, stamped.schema, widenOn(snap)))) { st =>
+        if (newAttrs.isEmpty) Nil
+        else Seq(Meta(mergeSchemas(st.schema, stamped.schema, widenOn(st)).toDDL))
       }
     } finally changedKeys.unpersist()
   }
@@ -2682,17 +2592,11 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * rewritten, in one atomic commit. Same concurrency contract as
     * [[merge]].
     */
-  def delete(predicate: org.apache.spark.sql.Column): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
+  def delete(predicate: Column): Unit = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val snap = state()
     if (snap.files.isEmpty) return
-    val candidates = prunedFiles(snap, predicate)
-    if (candidates.isEmpty) return
-    val touched = logicalize(snap, readState(snap.copy(files = candidates)))
-      .withColumn("__file", input_file_name())
-      .where(predicate)
-      .select("__file").distinct().collect()
-      .map(r => new Path(new java.net.URI(r.getString(0))).getName).toSeq
+    val touched = filesMatching(snap, predicate)
     if (touched.isEmpty) return
     // one cached read of the touched files feeds both the survivor
     // rewrite and the delete change record
@@ -2703,26 +2607,14 @@ class TxTable(spark: SparkSession, val tablePath: String,
         physicalize(snap,
           touchedRows.where(not(coalesce(predicate, lit(false))))),
         physicalize(snap, touchedRows.where(predicate)
-          .withColumn(ChangeTypeCol, org.apache.spark.sql.functions.lit("delete"))))
+          .withColumn(ChangeTypeCol, lit("delete"))))
     } finally touchedRows.unpersist()
-    val mayMatch = addsMayMatchPredicate(snap, predicate)
-    fireBeforeCommitHook()
-    commitLoop(s"delete from $tablePath") { st =>
-      // LOGICAL conflict rule: abort only when a concurrent commit
-      // touched a rewritten file, changed schema/constraints, or
-      // appended files that might hold predicate-matching rows this
-      // delete would then miss
-      findConflict(snap, st, touched.toSet, mayMatch).foreach { why =>
-        (staged ++ stagedCdf).foreach { case (f, _) =>
-          fs.delete(new Path(root, f), false)
-        }
-        throw new java.util.ConcurrentModificationException(
-          s"conflicting concurrent commit on $tablePath during delete: $why; " +
-            "rerun delete() against the new state")
-      }
-      Some(touched.map(Remove(_)) ++ staged.map { case (p, s) => Add(p, s) } ++
-        stagedCdf.map { case (p, _) => Cdf(p) })
-    }
+    // LOGICAL conflict rule: abort only when a concurrent commit
+    // touched a rewritten file, changed schema/constraints, or
+    // appended files that might hold predicate-matching rows this
+    // delete would then miss
+    commitRowLevel("delete", snap, Rewrite(touched, staged, stagedCdf),
+      addsMayMatchPredicate(snap, predicate))()
   }
 
   /** BULK KEY-SET DELETE: remove every row whose key tuple appears in
@@ -2736,45 +2628,30 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * deletes the null-keyed row). Key columns speak surface names.
     */
   def deleteKeys(keys0: DataFrame, keyCols0: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit}
+    import org.apache.spark.sql.functions.lit
     require(keyCols0.nonEmpty, "deleteKeys needs at least one key column")
     val snap = state()
     if (snap.files.isEmpty) return
     val keyCols = keyCols0.map(physicalName(snap, _))
     val dead = physicalize(snap, keys0)
-      .select(keyCols.map(col): _*).distinct().persist()
+      .select(keyCols.map(qcol(_)): _*).distinct().persist()
     try {
-      def keyCond(l: String, r: String) =
-        keyCols.map(k => col(s"$l.`$k`") <=> col(s"$r.`$k`")).reduce(_ && _)
-      val touched = readState(snap).withColumn("__file", input_file_name()).as("t")
-        .join(dead.as("s"), keyCond("t", "s"), "left_semi")
-        .select("__file").distinct().collect()
-        .map(r => new Path(new java.net.URI(r.getString(0))).getName).toSeq
+      val touched = filesWithKeys(withFile(readState(snap)), dead, keyCols)
       if (touched.isEmpty) return
       val touchedRows = readState(snap.copy(files = touched)).persist()
       val (staged, stagedCdf) = try {
         stageDataAndCdf(
           recomputeGenerated(snap, touchedRows.as("t")
-            .join(dead.as("s"), keyCond("t", "s"), "left_anti")),
+            .join(dead.as("s"), keyCond(keyCols, "t", "s"), "left_anti")),
           touchedRows.as("t")
-            .join(dead.as("s"), keyCond("t", "s"), "left_semi")
+            .join(dead.as("s"), keyCond(keyCols, "t", "s"), "left_semi")
             .withColumn(ChangeTypeCol, lit("delete")))
       } finally touchedRows.unpersist()
-      val mayMatch = addsMayMatchKeys(dead, keyCols)
-      fireBeforeCommitHook()
-      commitLoop(s"deleteKeys from $tablePath") { st =>
-        requireRenamesStable(snap, st, staged ++ stagedCdf, "deleteKeys from")
-        findConflict(snap, st, touched.toSet, mayMatch).foreach { why =>
-          (staged ++ stagedCdf).foreach { case (f, _) =>
-            fs.delete(new Path(root, f), false)
-          }
-          throw new java.util.ConcurrentModificationException(
-            s"conflicting concurrent commit on $tablePath during deleteKeys: " +
-              s"$why; rerun deleteKeys() against the new state")
-        }
-        Some(touched.map(Remove(_)) ++ staged.map { case (p, s) => Add(p, s) } ++
-          stagedCdf.map { case (p, _) => Cdf(p) })
-      }
+      // the dead keys' ranges bound the conflict rule, as a merge
+      // source's do (the key set is distinct, so the dup proof holds)
+      val (mayMatch, _) = auditSourceKeys(snap, dead, keyCols,
+        "deleteKeys key set is not distinct", syncIdentity = false)
+      commitRowLevel("deleteKeys", snap, Rewrite(touched, staged, stagedCdf), mayMatch)()
     } finally dead.unpersist()
   }
 
@@ -2801,78 +2678,11 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * null or false survive; same delete change record, same strict
     * concurrency rule) — only the physical trade differs.
     */
-  def deleteMergeOnRead(predicate: org.apache.spark.sql.Column,
-                        rewriteAtFraction: Double = 0.5): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    require(rewriteAtFraction > 0.0 && rewriteAtFraction <= 1.0,
-      s"rewriteAtFraction must be in (0, 1], got $rewriteAtFraction")
-    val snap = state()
-    if (snap.files.isEmpty) return
-    val schema = snap.schema.getOrElse(throw new IllegalStateException(
-      s"table $tablePath has files but no recorded schema"))
-    val candidates = prunedFiles(snap, predicate)
-    if (candidates.isEmpty) return
-    val fsv = fs
-    // matching rows with their physical positions; rows ALREADY masked
-    // by an existing vector are excluded (they are not live, must not
-    // re-enter the change feed, and their positions are already in the
-    // old sidecar the union merge brings forward)
-    val raw = logicalize(snap, spark.read.schema(schema)
-      .parquet(candidates.map(f => new Path(root, f).toString): _*)
-      .withColumn(DvFileCol, col("_metadata.file_name"))
-      .withColumn(DvIdxCol, col("_metadata.row_index")))
-      .where(coalesce(predicate, lit(false)))
-    val existingDv = candidates.flatMap(f => snap.dvs.get(f).map(d => f -> d.dvFile))
-    val hits = (if (existingDv.isEmpty) raw
-                else raw.join(deletedPairs(existingDv),
-                  Seq(DvFileCol, DvIdxCol), "left_anti")).persist()
-    try {
-      val written = writeDvSidecars(hits.select(DvFileCol, DvIdxCol),
-        snap.dvs.map { case (f, d) => f -> d.dvFile })
-      if (written.isEmpty) return
-      def totalRows(f: String): Option[Long] =
-        snap.stats.get(f).map(_.rows)
-          .orElse(footerStats(new Path(root, f)).map(_.rows))
-      // n is the file's CUMULATIVE masked count (old vector unioned in)
-      val (rewrite, keepDv) = written.partition { case (f, _, n) =>
-        totalRows(f).exists(t => n.toDouble >= t * rewriteAtFraction)
-      }
-      val rewriteFiles = rewrite.map(_._1)
-      // past-threshold files materialize: survivors = rows their OLD
-      // vector kept minus the new matches; their fresh sidecars die
-      val cdfFrame = physicalize(snap, hits.drop(DvFileCol, DvIdxCol)
-        .withColumn(ChangeTypeCol, lit("delete")))
-      val (staged, stagedCdf) =
-        if (rewriteFiles.isEmpty)
-          (Seq.empty[(String, Option[FileStats])],
-            stageData(cdfFrame, prefix = "cdf", collectStats = false))
-        else stageDataAndCdf(physicalize(snap,
-          logicalize(snap, readState(snap.copy(files = rewriteFiles)))
-            .where(not(coalesce(predicate, lit(false))))), cdfFrame)
-      rewrite.foreach { case (_, dv, _) => fsv.delete(new Path(root, dv), false) }
-      val mayMatch = addsMayMatchPredicate(snap, predicate)
-      fireBeforeCommitHook()
-      commitLoop(s"merge-on-read delete from $tablePath") { st =>
-        // LOGICAL conflict rule, same as the copy-on-write verbs; the
-        // "touched" set is every file whose vector this commit sets or
-        // drops — a concurrent Dv on one of those would be overwritten
-        // (lost update), so it conflicts via the Dv check
-        findConflict(snap, st, written.map(_._1).toSet, mayMatch).foreach { why =>
-          (staged ++ stagedCdf).foreach { case (f, _) =>
-            fsv.delete(new Path(root, f), false)
-          }
-          keepDv.foreach { case (_, dv, _) => fsv.delete(new Path(root, dv), false) }
-          throw new java.util.ConcurrentModificationException(
-            s"conflicting concurrent commit on $tablePath during delete: $why; " +
-              "rerun deleteMergeOnRead() against the new state")
-        }
-        Some(rewriteFiles.map(Remove(_)) ++
-          staged.map { case (p, s) => Add(p, s) } ++
-          keepDv.map { case (f, dv, n) => Dv(f, dv, n) } ++
-          stagedCdf.map { case (p, _) => Cdf(p) } ++
-          (if (keepDv.nonEmpty) protocolBumpV2(st) else Nil))
-      }
-    } finally hits.unpersist()
+  def deleteMergeOnRead(predicate: Column, rewriteAtFraction: Double = 0.5): Unit = {
+    import org.apache.spark.sql.functions.lit
+    maskMatching("deleteMergeOnRead", predicate, rewriteAtFraction) { snap =>
+      hits => (None, physicalize(snap, hits.withColumn(ChangeTypeCol, lit("delete"))))
+    }
   }
 
   /** One distributed job: repartition the new deleted positions by
@@ -2933,82 +2743,28 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * update_preimage/update_postimage change record land in ONE atomic
     * commit; same strict concurrency contract as [[merge]].
     */
-  def update(predicate: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, when}
+  def update(predicate: Column, set: Map[String, Column]): Unit = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
     require(set.nonEmpty, "update needs at least one SET assignment")
     val snap = state()
     if (snap.files.isEmpty) return
-    val schema = snap.schema.getOrElse(throw new IllegalStateException(
-      s"table $tablePath has files but no recorded schema"))
-    // assignments and predicate speak SURFACE (logical) names;
-    // dropped physical columns are invisible here (and rewrites stop
-    // carrying them, by the same projection)
-    val logicalFields = schema.fields
-      .filterNot(f => snap.dropped.contains(f.name))
-      .map(f => logicalField(snap, f))
-    val unknown = set.keySet -- logicalFields.map(_.name)
-    require(unknown.isEmpty,
-      s"update sets unknown column(s) ${unknown.mkString(", ")} — " +
-        s"table columns are ${logicalFields.map(_.name).mkString(", ")}")
-    val candidates = prunedFiles(snap, predicate)
-    if (candidates.isEmpty) return
-    val touched = logicalize(snap, readState(snap.copy(files = candidates)))
-      .withColumn("__file", input_file_name())
-      .where(predicate)
-      .select("__file").distinct().collect()
-      .map(r => new Path(new java.net.URI(r.getString(0))).getName).toSeq
-    if (touched.isEmpty) return
     val cond = coalesce(predicate, lit(false))
-    // one projection evaluates every assignment against the original
-    // row, then swaps in the new values only where the predicate holds
-    def applySet(df: DataFrame): DataFrame = df.select(logicalFields.map { f =>
-      set.get(f.name) match {
-        case Some(expr) =>
-          when(cond, expr.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }.toIndexedSeq: _*)
+    val project = setProjection(snap, set, cond)
+    val touched = filesMatching(snap, predicate)
+    if (touched.isEmpty) return
     // one cached read of the touched files feeds the rewrite and both
     // sides of the change record
     val touchedRows = logicalize(snap,
       readState(snap.copy(files = touched))).persist()
-    // generated columns over the rewrite: recompute (refreshes values
-    // whose inputs this update changed, backfills pre-declaration
-    // nulls); explicitly-SET ones keep the caller's value for the gate
-    val setPhys = set.keySet.map(physicalName(snap, _))
     val (staged, stagedCdf) = try {
-      val pre = physicalize(snap, touchedRows.where(cond)
-        .withColumn(ChangeTypeCol, lit("update_preimage")))
-      // the post-image mirrors the staged rewrite, nulls backfilled —
-      // a CDC consumer must see the row as it now exists
-      val post = recomputeGenerated(snap, physicalize(snap,
-        applySet(touchedRows.where(cond))
-          .withColumn(ChangeTypeCol, lit("update_postimage"))), setPhys)
-      stageDataAndCdf(
-        recomputeGenerated(snap,
-          physicalize(snap, applySet(touchedRows)), setPhys),
-        pre.unionByName(post, allowMissingColumns = true))
+      stageDataAndCdf(project(touchedRows),
+        updateRecord(snap, touchedRows.where(cond), project))
     } finally touchedRows.unpersist()
-    enforceConstraints(effectiveChecks(snap), staged, schema,
-      staged ++ stagedCdf, "update of")
-    val mayMatch = addsMayMatchPredicate(snap, predicate)
-    fireBeforeCommitHook()
-    commitLoop(s"update $tablePath") { st =>
-      // LOGICAL conflict rule, same as merge/delete: unrelated
-      // concurrent appends (stats-provably no matching row) commit
-      // freely; anything that could hide a matching row aborts
-      findConflict(snap, st, touched.toSet, mayMatch).foreach { why =>
-        (staged ++ stagedCdf).foreach { case (f, _) =>
-          fs.delete(new Path(root, f), false)
-        }
-        throw new java.util.ConcurrentModificationException(
-          s"conflicting concurrent commit on $tablePath during update: $why; " +
-            "rerun update() against the new state")
-      }
-      Some(touched.map(Remove(_)) ++ staged.map { case (p, s) => Add(p, s) } ++
-        stagedCdf.map { case (p, _) => Cdf(p) })
-    }
+    // LOGICAL conflict rule, same as merge/delete: unrelated
+    // concurrent appends (stats-provably no matching row) commit
+    // freely; anything that could hide a matching row aborts
+    commitRowLevel("update", snap, Rewrite(touched, staged, stagedCdf),
+      addsMayMatchPredicate(snap, predicate), checkUnder = snap.schema)()
   }
 
   /** Merge-on-read UPDATE (deletion vectors + append — the published
@@ -3032,107 +2788,17 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * pair lands in the same atomic commit, under the same strict
     * concurrency rule — only the physical trade differs.
     */
-  def updateMergeOnRead(predicate: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column],
+  def updateMergeOnRead(predicate: Column, set: Map[String, Column],
       rewriteAtFraction: Double = 0.5): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    import org.apache.spark.sql.functions.lit
     require(set.nonEmpty, "update needs at least one SET assignment")
-    require(rewriteAtFraction > 0.0 && rewriteAtFraction <= 1.0,
-      s"rewriteAtFraction must be in (0, 1], got $rewriteAtFraction")
-    val snap = state()
-    if (snap.files.isEmpty) return
-    val schema = snap.schema.getOrElse(throw new IllegalStateException(
-      s"table $tablePath has files but no recorded schema"))
-    val logicalFields = schema.fields
-      .filterNot(f => snap.dropped.contains(f.name))
-      .map(f => logicalField(snap, f))
-    val unknown = set.keySet -- logicalFields.map(_.name)
-    require(unknown.isEmpty,
-      s"update sets unknown column(s) ${unknown.mkString(", ")} — " +
-        s"table columns are ${logicalFields.map(_.name).mkString(", ")}")
-    val candidates = prunedFiles(snap, predicate)
-    if (candidates.isEmpty) return
-    val fsv = fs
-    // matching LIVE rows with their physical positions — rows already
-    // masked by an existing vector are excluded (not live; their
-    // positions ride forward in the sidecar union merge)
-    val raw = logicalize(snap, spark.read.schema(schema)
-      .parquet(candidates.map(f => new Path(root, f).toString): _*)
-      .withColumn(DvFileCol, col("_metadata.file_name"))
-      .withColumn(DvIdxCol, col("_metadata.row_index")))
-      .where(coalesce(predicate, lit(false)))
-    val existingDv = candidates.flatMap(f => snap.dvs.get(f).map(d => f -> d.dvFile))
-    val hits = (if (existingDv.isEmpty) raw
-                else raw.join(deletedPairs(existingDv),
-                  Seq(DvFileCol, DvIdxCol), "left_anti")).persist()
-    try {
+    maskMatching("updateMergeOnRead", predicate, rewriteAtFraction,
+      checked = true) { snap =>
       // every hit matched the predicate, so SET applies unconditionally
       // — but still against the PRE-update row (one projection)
-      def applySet(df: DataFrame): DataFrame = df.select(logicalFields.map { f =>
-        set.get(f.name) match {
-          case Some(expr) => expr.cast(f.dataType).as(f.name)
-          case None => col(s"`${f.name}`")
-        }
-      }.toIndexedSeq: _*)
-      val written = writeDvSidecars(hits.select(DvFileCol, DvIdxCol),
-        snap.dvs.map { case (f, d) => f -> d.dvFile })
-      if (written.isEmpty) return
-      def totalRows(f: String): Option[Long] =
-        snap.stats.get(f).map(_.rows)
-          .orElse(footerStats(new Path(root, f)).map(_.rows))
-      // n is the file's CUMULATIVE masked count (old vector unioned in)
-      val (rewrite, keepDv) = written.partition { case (f, _, n) =>
-        totalRows(f).exists(t => n.toDouble >= t * rewriteAtFraction)
-      }
-      val rewriteFiles = rewrite.map(_._1)
-      // past-threshold files materialize: survivors = rows their OLD
-      // vector kept minus the matching rows (whose updated versions
-      // are appended globally below); their fresh sidecars die
-      val stagedSurvivors =
-        if (rewriteFiles.isEmpty) Seq.empty[(String, Option[FileStats])]
-        else stageData(physicalize(snap,
-          logicalize(snap, readState(snap.copy(files = rewriteFiles)))
-            .where(not(coalesce(predicate, lit(false))))))
-      rewrite.foreach { case (_, dv, _) => fsv.delete(new Path(root, dv), false) }
-      val setPhys = set.keySet.map(physicalName(snap, _))
-      val updatedRows = applySet(hits.drop(DvFileCol, DvIdxCol))
-      val pre = physicalize(snap, hits.drop(DvFileCol, DvIdxCol)
-        .withColumn(ChangeTypeCol, lit("update_preimage")))
-      val post = recomputeGenerated(snap, physicalize(snap,
-        updatedRows.withColumn(ChangeTypeCol, lit("update_postimage"))), setPhys)
-      val (stagedNew, stagedCdf) = stageDataAndCdf(
-        recomputeGenerated(snap, physicalize(snap, updatedRows), setPhys),
-        pre.unionByName(post, allowMissingColumns = true))
-      try enforceConstraints(effectiveChecks(snap), stagedNew ++ stagedSurvivors,
-        schema, stagedNew ++ stagedSurvivors ++ stagedCdf, "update of")
-      catch { case e: Throwable =>
-        // the staged data/cdf files were cleaned by enforceConstraints;
-        // the uncommitted sidecars must not outlive the failure either
-        keepDv.foreach { case (_, dv, _) => fsv.delete(new Path(root, dv), false) }
-        throw e
-      }
-      val mayMatch = addsMayMatchPredicate(snap, predicate)
-      fireBeforeCommitHook()
-      commitLoop(s"merge-on-read update $tablePath") { st =>
-        // LOGICAL conflict rule, same as update/deleteMergeOnRead; the
-        // touched set is every file whose vector this commit sets or
-        // drops (a concurrent Dv there would be a lost update)
-        findConflict(snap, st, written.map(_._1).toSet, mayMatch).foreach { why =>
-          (stagedNew ++ stagedSurvivors ++ stagedCdf).foreach { case (f, _) =>
-            fsv.delete(new Path(root, f), false)
-          }
-          keepDv.foreach { case (_, dv, _) => fsv.delete(new Path(root, dv), false) }
-          throw new java.util.ConcurrentModificationException(
-            s"conflicting concurrent commit on $tablePath during update: $why; " +
-              "rerun updateMergeOnRead() against the new state")
-        }
-        Some(rewriteFiles.map(Remove(_)) ++
-          (stagedSurvivors ++ stagedNew).map { case (p, s) => Add(p, s) } ++
-          keepDv.map { case (f, dv, n) => Dv(f, dv, n) } ++
-          stagedCdf.map { case (p, _) => Cdf(p) } ++
-          (if (keepDv.nonEmpty) protocolBumpV2(st) else Nil))
-      }
-    } finally hits.unpersist()
+      val project = setProjection(snap, set, lit(true))
+      hits => (Some(project(hits)), updateRecord(snap, hits, project))
+    }
   }
 
   /** Physically delete data files no live snapshot in the retention
@@ -3371,42 +3037,222 @@ class TxTable(spark: SparkSession, val tablePath: String,
     }
   }
 
-  /** `addsMayMatch` for [[merge]]: a key-equality match requires every
-    * key column to land inside the source's [min, max] for that key —
-    * a necessary (not sufficient) condition, so range-disjoint appends
-    * are provably benign and anything else conservatively conflicts.
-    * Costs one tiny aggregate over the (already persisted) source.
+  // ---- the row-level rewrite core ----
+
+  /** Staged files: (name, footer stats). */
+  private type Staged = Seq[(String, Option[FileStats])]
+
+  /** A quoted column reference, optionally qualified: a name such as
+    * `a.b` stays one column instead of a struct-field path.
     */
-  private def addsMayMatchKeys(source: DataFrame, keys: Seq[String])
-      : Seq[(String, Option[FileStats])] => Boolean = {
-    import org.apache.spark.sql.GraftColumnBridge.{CmpShape, PredShape}
-    import org.apache.spark.sql.functions.{col, lit, max, min, sum, when}
-    val aggs = keys.flatMap(k =>
-      Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k"))) :+
-      keys.map(k => sum(when(col(k).isNull, 1L).otherwise(0L)))
-        .reduce(_ + _).as("__nnull")
-    val row = source.agg(aggs.head, aggs.drop(1): _*).collect().head
-    // a NULL key component is invisible to min/max range shapes (and
-    // an all-null file PRUNES under any comparison) — a source holding
-    // one must treat every concurrent append as possibly matching
-    val hasNullKey = !row.isNullAt(2 * keys.size) && row.getLong(2 * keys.size) > 0L
-    val shapes: Seq[PredShape] = keys.zipWithIndex.flatMap { case (k, i) =>
-      val (mn, mx) = (row.get(2 * i), row.get(2 * i + 1))
-      if (mn == null || mx == null) Nil
-      else Seq(CmpShape(k, ">=", mn), CmpShape(k, "<=", mx))
-    }
-    adds =>
-      (hasNullKey && adds.nonEmpty) ||
-      shapes.isEmpty || { // no usable bounds (empty/all-null source): conservative
-        val stats = adds.collect { case (p, Some(s)) => p -> s }.toMap
-        TxTable.filesToRead(adds.map(_._1), stats, shapes).nonEmpty
+  private def qcol(name: String, qualifier: String = ""): Column = {
+    import org.apache.spark.sql.functions.col
+    val quoted = s"`${name.replace("`", "``")}`"
+    col(if (qualifier.isEmpty) quoted else s"$qualifier.$quoted")
+  }
+
+  /** NULL-SAFE equality of `keys` between the frames aliased `l` and
+    * `r`. Under plain equality a NULL key component never matches, so
+    * a null-keyed upsert would APPEND a duplicate instead of replacing
+    * it, and a CDC replica could never converge with an upstream
+    * in-place update of a null-keyed row. EqualNullSafe is still an
+    * equi-join key for the planner, so the join strategy is unchanged.
+    */
+  private def keyCond(keys: Seq[String], l: String, r: String): Column =
+    keys.map(k => qcol(k, l) <=> qcol(k, r)).reduce(_ && _)
+
+  /** Tag each row with the file it was read from — on the scan side,
+    * before any join or shuffle erases the provenance.
+    */
+  private def withFile(df: DataFrame): DataFrame =
+    df.withColumn(FileCol, org.apache.spark.sql.functions.input_file_name())
+
+  private def fileName(uri: String): String = new Path(new java.net.URI(uri)).getName
+
+  /** The provenance collect (the published Delta MERGE strategy): the
+    * names of the files `rows`, tagged by [[withFile]], came from.
+    */
+  private def touchedFiles(rows: DataFrame): Seq[String] =
+    rows.select(FileCol).distinct().collect().map(r => fileName(r.getString(0))).toSeq
+
+  /** Files among the stat- and bloom-pruned candidates that hold a row
+    * where `predicate` (surface names) is true.
+    */
+  private def filesMatching(snap: State, predicate: Column): Seq[String] = {
+    val candidates = prunedFiles(snap, predicate)
+    if (candidates.isEmpty) Nil
+    else touchedFiles(withFile(logicalize(snap, readState(snap.copy(files = candidates))))
+      .where(predicate))
+  }
+
+  /** Files of the tagged read `rows` holding a key tuple of `keyRows`. */
+  private def filesWithKeys(rows: DataFrame, keyRows: DataFrame,
+      keys: Seq[String]): Seq[String] =
+    touchedFiles(rows.as("t").join(keyRows.as("s"), keyCond(keys, "t", "s"), "left_semi"))
+
+  /** The SET projection of [[update]] and [[updateMergeOnRead]]:
+    * assignments name surface columns (checked), cast to the column's
+    * type, and are all evaluated against the PRE-update row (`SET
+    * a = b, b = a` swaps) on the rows where `cond` holds; other rows
+    * pass through. The result is physical with generated columns
+    * recomputed (refreshing values whose inputs changed, backfilling
+    * pre-declaration nulls); an explicitly SET one keeps the caller's
+    * value for the write gate. Dropped columns are invisible here, so
+    * rewrites stop carrying them.
+    */
+  private def setProjection(snap: State, set: Map[String, Column],
+      cond: Column): DataFrame => DataFrame = {
+    import org.apache.spark.sql.functions.when
+    val schema = snap.schema.getOrElse(throw new IllegalStateException(
+      s"table $tablePath has files but no recorded schema"))
+    val fields = schema.fields
+      .filterNot(f => snap.dropped.contains(f.name))
+      .map(f => logicalField(snap, f))
+    val unknown = set.keySet -- fields.map(_.name)
+    require(unknown.isEmpty,
+      s"update sets unknown column(s) ${unknown.mkString(", ")} — " +
+        s"table columns are ${fields.map(_.name).mkString(", ")}")
+    val setPhys = set.keySet.map(physicalName(snap, _))
+    df => recomputeGenerated(snap, physicalize(snap, df.select(fields.map { f =>
+      set.get(f.name) match {
+        case Some(e) => when(cond, e.cast(f.dataType)).otherwise(qcol(f.name)).as(f.name)
+        case None => qcol(f.name)
       }
+    }.toIndexedSeq: _*)), setPhys)
+  }
+
+  /** An update's change record: `hits` as stored (pre-images) and as
+    * rewritten by `project` (post-images, as the row now exists).
+    */
+  private def updateRecord(snap: State, hits: DataFrame,
+      project: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    physicalize(snap, hits.withColumn(ChangeTypeCol, lit("update_preimage")))
+      .unionByName(project(hits).withColumn(ChangeTypeCol, lit("update_postimage")),
+        allowMissingColumns = true)
+  }
+
+  /** Stage a verb's data rows and change record in one write
+    * ([[stageDataAndCdf]]); with no data rows, the record alone.
+    */
+  private def stageRewrite(data: Seq[DataFrame], cdf: DataFrame): (Staged, Staged) =
+    if (data.isEmpty) (Nil, stageData(cdf, prefix = "cdf", collectStats = false))
+    else stageDataAndCdf(data.reduce(_.unionByName(_, allowMissingColumns = true)), cdf)
+
+  /** The deletion-vector path of [[deleteMergeOnRead]] and
+    * [[updateMergeOnRead]]. It finds the LIVE rows matching
+    * `predicate` with their `_metadata` positions (rows an existing
+    * vector already masks are excluded: they are not live, must not
+    * re-enter the change feed, and their positions ride forward in
+    * the sidecar union merge), writes the per-file sidecars
+    * ([[writeDvSidecars]]), and splits the written files at
+    * `rewriteAtFraction` of their rows: files past it materialize
+    * copy-on-write (survivors = rows their OLD vector kept minus the
+    * new matches; their fresh sidecars die), the rest keep the
+    * vector. `stage`, given the snapshot, maps the hits (surface
+    * names) to the verb's extra data rows and its change record.
+    */
+  private def maskMatching(verb: String, predicate: Column, rewriteAtFraction: Double,
+      checked: Boolean = false)
+      (stage: State => DataFrame => (Option[DataFrame], DataFrame)): Unit = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    require(rewriteAtFraction > 0.0 && rewriteAtFraction <= 1.0,
+      s"rewriteAtFraction must be in (0, 1], got $rewriteAtFraction")
+    val snap = state()
+    if (snap.files.isEmpty) return
+    val schema = snap.schema.getOrElse(throw new IllegalStateException(
+      s"table $tablePath has files but no recorded schema"))
+    val stageHits = stage(snap)
+    val candidates = prunedFiles(snap, predicate)
+    if (candidates.isEmpty) return
+    val cond = coalesce(predicate, lit(false))
+    val raw = logicalize(snap, spark.read.schema(schema)
+      .parquet(candidates.map(f => new Path(root, f).toString): _*)
+      .withColumn(DvFileCol, col("_metadata.file_name"))
+      .withColumn(DvIdxCol, col("_metadata.row_index")))
+      .where(cond)
+    val existingDv = candidates.flatMap(f => snap.dvs.get(f).map(d => f -> d.dvFile))
+    val hits = (if (existingDv.isEmpty) raw
+                else raw.join(deletedPairs(existingDv),
+                  Seq(DvFileCol, DvIdxCol), "left_anti")).persist()
+    try {
+      val written = writeDvSidecars(hits.select(DvFileCol, DvIdxCol),
+        snap.dvs.map { case (f, d) => f -> d.dvFile })
+      if (written.isEmpty) return
+      def totalRows(f: String): Option[Long] =
+        snap.stats.get(f).map(_.rows)
+          .orElse(footerStats(new Path(root, f)).map(_.rows))
+      // n is the file's CUMULATIVE masked count (old vector unioned in)
+      val (rewrite, keepDv) = written.partition { case (f, _, n) =>
+        totalRows(f).exists(t => n.toDouble >= t * rewriteAtFraction)
+      }
+      val rewriteFiles = rewrite.map(_._1)
+      val survivors = if (rewriteFiles.isEmpty) None
+        else Some(physicalize(snap, logicalize(snap,
+          readState(snap.copy(files = rewriteFiles))).where(not(cond))))
+      val (extra, cdf) = stageHits(hits.drop(DvFileCol, DvIdxCol))
+      val (staged, stagedCdf) = stageRewrite(survivors.toSeq ++ extra, cdf)
+      rewrite.foreach { case (_, dv, _) => fs.delete(new Path(root, dv), false) }
+      // the conflict set is every file whose vector this commit sets or
+      // drops: a concurrent Dv there would be a lost update
+      commitRowLevel(verb, snap, Rewrite(rewriteFiles, staged, stagedCdf, keepDv),
+        addsMayMatchPredicate(snap, predicate),
+        checkUnder = if (checked) Some(schema) else None)()
+    } finally hits.unpersist()
+  }
+
+  /** What one row-level verb commits: the files it removes, the data
+    * and change files it staged, and the deletion vectors
+    * (file, sidecar, masked rows) it sets.
+    */
+  private case class Rewrite(removes: Seq[String], adds: Staged, cdf: Staged,
+                             dvs: Seq[(String, String, Long)] = Nil) {
+    /** Every file this verb wrote, deleted when it aborts. */
+    def staged: Staged = adds ++ cdf ++ dvs.map { case (_, dv, _) => dv -> None }
+  }
+
+  /** The one commit tail of the row-level verbs. Before the claim it
+    * checks the staged data against the CHECK set under `checkUnder`
+    * (when given — snap's set is authoritative, since any concurrent
+    * DDL aborts below anyway) and fires the race hook. Per claim it
+    * runs the (writer, batch) gate, then aborts — deleting every
+    * staged data, change and sidecar file — on a concurrent rename or
+    * a [[findConflict]] hit among the files the verb removes or
+    * re-masks; otherwise it commits Remove/Add/Dv/Cdf plus the verb's
+    * `extra` actions for the claimed state.
+    */
+  private def commitRowLevel(verb: String, snap: State, rw: Rewrite,
+      mayMatch: Staged => Boolean, checkUnder: Option[StructType] = None,
+      txn: Option[TxnId] = None)(extra: State => Seq[Action] = _ => Nil): Unit = {
+    val staged = rw.staged
+    checkUnder.foreach(enforceConstraints(effectiveChecks(snap), rw.adds, _, staged,
+      s"$verb on"))
+    fireBeforeCommitHook()
+    val touched = (rw.removes ++ rw.dvs.map(_._1)).toSet
+    commitLoop(s"$verb on $tablePath") { st =>
+      if (txnGate(st, txn, staged, s"$verb on")) {
+        None // already committed by a previous attempt of this batch
+      } else {
+        requireRenamesStable(snap, st, staged, s"$verb on")
+        findConflict(snap, st, touched, mayMatch).foreach { why =>
+          staged.foreach { case (f, _) => fs.delete(new Path(root, f), false) }
+          throw new java.util.ConcurrentModificationException(
+            s"conflicting concurrent commit on $tablePath during $verb: $why; " +
+              s"rerun $verb() against the new state")
+        }
+        Some(rw.removes.map(Remove(_)) ++ rw.adds.map { case (p, s) => Add(p, s) } ++
+          rw.dvs.map { case (f, dv, n) => Dv(f, dv, n) } ++
+          rw.cdf.map { case (p, _) => Cdf(p) } ++
+          (if (rw.dvs.nonEmpty) protocolBumpV2(st) else Nil) ++
+          extra(st) ++ txn.map(t => Txn(t.writerId, t.batchId)))
+      }
+    }
   }
 
   /** ONE aggregate job over the (persisted) merge source that proves
     * key uniqueness AND collects everything else the commit needs from
-    * the source: the key-range shapes for [[addsMayMatchKeys]]'
-    * conflict closure and (for [[merge]]) the identity high-water
+    * the source: the key-range shapes for the conflict rule's
+    * closure and (for [[merge]]) the identity high-water
     * sync. Replaces three sequential driver-blocking jobs — the
     * duplicate-key count, the min/max/null-count aggregate and the
     * per-identity-column aggregate — with a single two-level
@@ -4048,6 +3894,8 @@ object TxTable {
   /** Helper columns the merge-on-read paths tag rows with — reserved
     * names, dropped before any result surfaces.
     */
+  /** The provenance column of the row-level verbs' file collect. */
+  private[core] val FileCol = "__file"
   private[core] val DvFileCol = "__graft_dv_file"
   private[core] val DvIdxCol = "__graft_dv_idx"
 

@@ -33,22 +33,29 @@ object CdcApply {
   private val TypeRank = Map(
     "insert" -> 3, "update_postimage" -> 3, "delete" -> 1, "update_preimage" -> 0)
 
-  /** The slice's net effect: (surviving rows to upsert, dead keys). */
-  private[graft] def net(batch: DataFrame, keys: Seq[String])
-      : (DataFrame, DataFrame) = {
+  /** Each key's winning action in the slice (see the ranking above);
+    * pre-images never win, so they are dropped up front.
+    */
+  private def winners(batch: DataFrame, keys: Seq[String]): DataFrame = {
     val rank = TypeRank.foldLeft(lit(-1)) { case (acc, (t, r)) =>
       when(col(TxTable.ChangeTypeCol) === t, lit(r)).otherwise(acc)
     }
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(TxTable.CommitVersionCol).desc, rank.desc)
-    val winners = batch
+    batch
       .where(col(TxTable.ChangeTypeCol) =!= "update_preimage")
       .withColumn("__rk", row_number().over(w))
       .where(col("__rk") === 1)
       .drop("__rk")
-    val live = winners.where(col(TxTable.ChangeTypeCol) =!= "delete")
+  }
+
+  /** The slice's net effect: (surviving rows to upsert, dead keys). */
+  private[graft] def net(batch: DataFrame, keys: Seq[String])
+      : (DataFrame, DataFrame) = {
+    val won = winners(batch, keys)
+    val live = won.where(col(TxTable.ChangeTypeCol) =!= "delete")
       .drop(TxTable.ChangeTypeCol, TxTable.CommitVersionCol)
-    val dead = winners.where(col(TxTable.ChangeTypeCol) === "delete")
+    val dead = won.where(col(TxTable.ChangeTypeCol) === "delete")
       .select(keys.map(col): _*).distinct()
     (live, dead)
   }
@@ -119,17 +126,9 @@ object CdcApply {
     */
   def applyAtomic(target: TxTable, batch: DataFrame, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "CDC application needs at least one key column")
-    val rank = TypeRank.foldLeft(lit(-1)) { case (acc, (t, r)) =>
-      when(col(TxTable.ChangeTypeCol) === t, lit(r)).otherwise(acc)
-    }
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(TxTable.CommitVersionCol).desc, rank.desc)
-    val src = batch
-      .where(col(TxTable.ChangeTypeCol) =!= "update_preimage")
-      .withColumn("__rk", row_number().over(w))
-      .where(col("__rk") === 1)
+    val src = winners(batch, keys)
       .withColumn("__cdc_dead", col(TxTable.ChangeTypeCol) === "delete")
-      .drop("__rk", TxTable.ChangeTypeCol, TxTable.CommitVersionCol)
+      .drop(TxTable.ChangeTypeCol, TxTable.CommitVersionCol)
     if (src.isEmpty) return
     val dataCols = src.columns.toSeq.filterNot(_ == "__cdc_dead")
     val managed = target.generatedColumns.keySet ++ target.identityColumns.keySet

@@ -19,7 +19,10 @@ import org.apache.spark.sql.functions._
   * After: merge = 3, update/delete = 2, scd2 = 5. Each execution is a
   * sequential driver round-trip on the commit path, so the count is
   * the latency floor of a small transactional write — pin it against
-  * regression.
+  * regression. The remaining row-level verbs are pinned at the counts
+  * they ran before they moved onto the shared rewrite core: deleteKeys
+  * 3, mergeBuilder update-all + insert-all 3, deleteMergeOnRead 2,
+  * updateMergeOnRead 2, replaceWhere 4.
   */
 class MergeJobCountSpec extends SparkTestBase {
 
@@ -97,5 +100,46 @@ class MergeJobCountSpec extends SparkTestBase {
       s"mergeScd2 ran $n SQL executions — expected audit + non-monotone probe " +
         "+ touched collect + no-op probe + one fused staging write (was 7 " +
         "before the round-13 fusion)")
+  }
+
+  test("deleteKeys = 3 actions: key audit, touched-file collect, fused staging write") {
+    val t = freshTable()
+    val dead = spark.range(0, 5).select(col("id").as("k"))
+    dead.count()
+    val n = executionsDuring { t.deleteKeys(dead, Seq("k")) }
+    assert(n <= 3, s"deleteKeys ran $n SQL executions — expected <= 3")
+  }
+
+  test("mergeBuilder update-all + insert-all = 3 actions") {
+    val t = freshTable()
+    val src = spark.range(95, 105).select(col("id").as("k"), lit(-1L).as("v"))
+    src.count()
+    val n = executionsDuring {
+      t.mergeBuilder(src, Seq("k")).whenMatchedUpdateAll()
+        .whenNotMatchedInsertAll().run()
+    }
+    assert(n <= 3, s"mergeBuilder ran $n SQL executions — expected <= 3")
+  }
+
+  test("deleteMergeOnRead = 2 actions: sidecar write and fused staging write") {
+    val t = freshTable()
+    val n = executionsDuring { t.deleteMergeOnRead(col("k") < 5) }
+    assert(n <= 2, s"deleteMergeOnRead ran $n SQL executions — expected <= 2")
+  }
+
+  test("updateMergeOnRead = 2 actions: sidecar write and fused staging write") {
+    val t = freshTable()
+    val n = executionsDuring {
+      t.updateMergeOnRead(col("k") < 5, Map("v" -> lit(0L)))
+    }
+    assert(n <= 2, s"updateMergeOnRead ran $n SQL executions — expected <= 2")
+  }
+
+  test("replaceWhere = 4 actions: staged write, scope check, touched collect, fused write") {
+    val t = freshTable()
+    val repl = spark.range(0, 5).select(col("id").as("k"), lit(7L).as("v"))
+    repl.count()
+    val n = executionsDuring { t.replaceWhere(col("k") < 5, repl) }
+    assert(n <= 4, s"replaceWhere ran $n SQL executions — expected <= 4")
   }
 }

@@ -123,6 +123,17 @@ class Scd2Spec extends SparkTestBase {
       ("a", 1L, Some(2L)), ("a2", 2L, Some(3L)), ("a3", 3L, None)))
   }
 
+  test("a changed attribute whose name contains a dot closes and re-inserts its key") {
+    val t = new TxTable(spark, tmpDir("scd2-dot"))
+    t.mergeScd2(Seq((1L, "a"), (2L, "b")).toDF("id", "a.b"), Seq("id"), 1L)
+    t.mergeScd2(Seq((1L, "a2"), (2L, "b")).toDF("id", "a.b"), Seq("id"), 2L)
+    val got = t.read().select(col("id"), col("`a.b`"), col(F), col(T))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSeq.sorted
+    assert(got == Seq((1L, "a", 1L, Some(2L)), (1L, "a2", 2L, None),
+      (2L, "b", 1L, None)), got.toString)
+  }
+
   test("a rename race aborts the merge and cleans its staged files") {
     val dir = tmpDir("scd2-race")
     val t = new TxTable(spark, dir)

@@ -1223,6 +1223,49 @@ class TxTableSpec extends SparkTestBase {
       == ((11L to 100L) :+ 1000L).toSet)
   }
 
+  test("delete and deleteMergeOnRead abort on a concurrent column rename, leaving no staged file") {
+    val dir = tmpDir("txtable-delete-rename")
+    val t = new TxTable(spark, dir)
+    t.append((1L to 10L).map(i => (i, s"r$i")).toDF("id", "v"))
+    // data, change-record and deletion-vector files in the table root
+    def dataFiles(): Set[String] = new java.io.File(dir).listFiles()
+      .map(_.getName)
+      .filter(n => n.endsWith(".parquet") || (n.startsWith("dv-") && n.endsWith(".bin")))
+      .toSet
+    val before = dataFiles()
+    t.beforeCommitHook = () => t.renameColumn("v", "w")
+    val e = intercept[java.util.ConcurrentModificationException](
+      t.delete(col("id") <= 5L))
+    assert(e.getMessage.contains("rename"), e.getMessage)
+    assert(dataFiles() == before, "the aborted delete must delete its staged files")
+    t.beforeCommitHook = () => t.renameColumn("w", "u")
+    val e2 = intercept[java.util.ConcurrentModificationException](
+      t.deleteMergeOnRead(col("id") <= 2L))
+    assert(e2.getMessage.contains("rename"), e2.getMessage)
+    assert(dataFiles() == before,
+      "the aborted merge-on-read delete must delete its change files and sidecars")
+    // the reruns commit against the renamed surface
+    t.delete(col("id") <= 5L)
+    t.deleteMergeOnRead(col("id") === 6L)
+    assert(t.read().columns.toSeq == Seq("id", "u"))
+    assert(t.read().select("id").as[Long].collect().toSet == (7L to 10L).toSet)
+  }
+
+  test("update and the other row-level verbs accept a column name containing a dot") {
+    val t = table()
+    t.append((1L to 10L).map(i => (i, s"r$i")).toDF("k", "a.b"))
+    t.update(col("k") < 5L, Map("k" -> (col("k") + 100L)))
+    t.update(col("k") === 7L, Map("a.b" -> lit("seven")))
+    t.updateMergeOnRead(col("k") === 8L, Map("a.b" -> lit("eight")))
+    t.merge(Seq((9L, "nine"), (11L, "eleven")).toDF("k", "a.b"), Seq("k"))
+    t.deleteKeys(Seq(10L).toDF("k"), Seq("k"))
+    val got = t.read().select(col("k"), col("`a.b`")).as[(Long, String)]
+      .collect().toSet
+    assert(got == Set((101L, "r1"), (102L, "r2"), (103L, "r3"), (104L, "r4"),
+      (5L, "r5"), (6L, "r6"), (7L, "seven"), (8L, "eight"), (9L, "nine"),
+      (11L, "eleven")), got.toString)
+  }
+
   // ---- partitioned writes (value-pure files) ----
 
   test("partitioned append writes value-pure files that prune exactly") {

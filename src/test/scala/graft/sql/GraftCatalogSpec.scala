@@ -193,6 +193,17 @@ class GraftCatalogSpec extends SparkTestBase {
     assert(new TxTable(spark, s"$base/dml").version == 3)
   }
 
+  test("SQL UPDATE works on a table with a column name containing a dot") {
+    sql(s"CREATE TABLE $cat.dotted (k BIGINT, `a.b` STRING)")
+    sql(s"INSERT INTO $cat.dotted VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    withExtSession { s2 =>
+      s2.sql(s"UPDATE $cat.dotted SET k = k + 100 WHERE k < 2")
+      s2.sql(s"UPDATE $cat.dotted SET `a.b` = concat(`a.b`, '!') WHERE k = 3")
+      assert(s2.sql(s"SELECT k, `a.b` FROM $cat.dotted").collect().toSet ==
+        Set(Row(101L, "a"), Row(2L, "b"), Row(3L, "c!")))
+    }
+  }
+
   test("SQL MERGE INTO maps the full clause family onto the conditional merge") {
     sql(s"CREATE TABLE $cat.mrg (k BIGINT, v STRING)")
     sql(s"INSERT INTO $cat.mrg VALUES (1, 'a'), (2, 'b'), (3, 'c')")
