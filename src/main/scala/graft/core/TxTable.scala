@@ -1399,6 +1399,20 @@ class TxTable(spark: SparkSession, val tablePath: String,
     else relationFor(s)
   }
 
+  /** RE-ADD after dropColumn: each column of `df` whose physical slot
+    * was dropped gets a FRESH physical slot, mapped in the same commit
+    * — the old files' values stay dead, the new column starts null
+    * everywhere it is absent (normal evolution semantics). Returns the
+    * surface → fresh physical map and `st` with it mapped; the writer
+    * commits the map as `RenameCol` actions.
+    */
+  private def withReadds(st: State, df: DataFrame): (Map[String, String], State) = {
+    val readds = df.columns
+      .filter(c => st.dropped.contains(st.toPhysicalName.getOrElse(c, c)))
+      .map(l => l -> s"${l}_${UUID.randomUUID().toString.take(8)}").toMap
+    (readds, st.copy(renames = st.renames ++ readds.map(_.swap)))
+  }
+
   /** Append `df` atomically. `txn` makes the commit idempotent per
     * (writerId, batchId): a batch at or below the writer's recorded
     * high-water mark is skipped (staged files removed), which is what
@@ -1425,14 +1439,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
       appendWithIdentity(df0, txn, partitionBy, filesPerValue)
       return
     }
-    // RE-ADD after dropColumn: a surface name whose physical slot was
-    // dropped gets a FRESH physical slot, mapped in the same commit —
-    // the old files' values stay dead, the new column starts null
-    // everywhere it is absent (normal evolution semantics)
-    val readds = df0.columns
-      .filter(c => snap0.dropped.contains(snap0.toPhysicalName.getOrElse(c, c)))
-      .map(l => l -> s"${l}_${UUID.randomUUID().toString.take(8)}").toMap
-    val snap = snap0.copy(renames = snap0.renames ++ readds.map(_.swap))
+    val (readds, snap) = withReadds(snap0, df0)
     val df = computeGenerated(snap, physicalize(snap, df0))
     val staged = stageData(df,
       partitionBy = partitionBy.map(physicalName(snap, _)),
@@ -1473,12 +1480,9 @@ class TxTable(spark: SparkSession, val tablePath: String,
       prevStaged = Nil
       if (txnGate(st, txn, Nil, "identity append to")) None
       else {
-        // RE-ADD after dropColumn, same as the plain append path —
-        // computed per claim attempt since st moves under retries
-        val readds = df0.columns
-          .filter(c => st.dropped.contains(st.toPhysicalName.getOrElse(c, c)))
-          .map(l => l -> s"${l}_${UUID.randomUUID().toString.take(8)}").toMap
-        val stv = st.copy(renames = st.renames ++ readds.map(_.swap))
+        // re-add slots are computed per claim attempt since st moves
+        // under retries
+        val (readds, stv) = withReadds(st, df0)
         val (df, hws) = assignIdentity(stv,
           computeGenerated(stv, physicalize(stv, df0)))
         // race-window instrumentation AFTER the mark is read and the
@@ -1546,10 +1550,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
     */
   def overwrite(df0: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
     val snap0 = state()
-    val readds = df0.columns
-      .filter(c => snap0.dropped.contains(snap0.toPhysicalName.getOrElse(c, c)))
-      .map(l => l -> s"${l}_${UUID.randomUUID().toString.take(8)}").toMap
-    val snap = snap0.copy(renames = snap0.renames ++ readds.map(_.swap))
+    val (readds, snap) = withReadds(snap0, df0)
     val df = computeGenerated(snap, physicalize(snap, df0))
     val staged = stageData(df, partitionBy = partitionBy.map(physicalName(snap, _)))
     var checkedFor: Map[String, String] = null

@@ -232,12 +232,7 @@ object CorpusBuild {
 
   /** The session's built artifact over the testdata corpus. */
   private[graft] def artifact(s: SparkSession, dir: String): TxTable =
-    IndexCache.memo(s"corpus-build:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_corpusbuild_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "corpus-build", dir) { p =>
       run(Tables.load(s, dir, "documents"), p)
     }
 
@@ -248,13 +243,8 @@ object CorpusBuild {
     * version rides along for the within-epoch immutability law.
     */
   private[graft] def epoch0Extended(s: SparkSession, dir: String): (TxTable, Long) =
-    IndexCache.memo(s"corpus-epoch0:${s.sparkContext.applicationId}:$dir") {
+    IndexCache.scratch(s, "corpus-epoch0", dir) { p =>
       val srcNum = substring(col("source"), 4, 10).cast("int")
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_corpusepoch0_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       val docs = Tables.load(s, dir, "documents")
       val t0 = run(docs.where(srcNum < 10), p)
       val v0 = t0.version

@@ -77,12 +77,7 @@ object CrawlRefresh {
     * into and reads back.
     */
   private[graft] def corpusTable(s: SparkSession, dir: String): TxTable =
-    IndexCache.memo(s"crawl-corpus:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_crawlcorpus_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "crawl-corpus", dir) { p =>
       val t = new TxTable(s, p)
       t.append(Tables.load(s, dir, "documents").where(srcNum < 10)
         .select(col("doc_id"), col("source"), col("text")))
@@ -164,12 +159,7 @@ object CrawlRefresh {
     * Built once per (session, dir); returns the directory.
     */
   private[graft] def crawlFixture(s: SparkSession, dir: String): String =
-    IndexCache.memo(s"crawl-fixture:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_crawlslices_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "crawl-fixture", dir) { p =>
       val newDocs = Tables.load(s, dir, "documents").where(srcNum >= 10)
         .select(col("doc_id"), col("source"), col("text"))
       // doc_id-range split via ntile: a fixture-scale global window
@@ -327,12 +317,7 @@ object CrawlRefresh {
     * directory so the batch fixture's glob stays untouched.
     */
   private[graft] def refetchFixture(s: SparkSession, dir: String): String =
-    IndexCache.memo(s"crawl-refetch:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_crawlrefetch_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "crawl-refetch", dir) { p =>
       Warc.writeShards(
         Tables.load(s, dir, "documents")
           .where(srcNum < 10 && col("doc_id") % 13 === 0)
@@ -1021,13 +1006,7 @@ object CrawlRefresh {
     */
   private def crawlStreamState(s: SparkSession, dir: String)
       : (TxTable, TxTable, TxTable) =
-    IndexCache.memo(s"crawl-stream:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val base = s"${sys.props("java.io.tmpdir")}/graft_crawlstream_$tag"
-      val hp = new org.apache.hadoop.fs.Path(base)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(hp, true)
+    IndexCache.scratch(s, "crawl-stream", dir) { base =>
       val corpus = new TxTable(s, s"$base/corpus")
       corpus.append(Tables.load(s, dir, "documents").where(srcNum < 10)
         .select(col("doc_id"), col("source"), col("text")))
@@ -1045,6 +1024,8 @@ object CrawlRefresh {
       val vocab = s.read.parquet(s"$base/artifact.vocab")
       val src = crawlFixture(s, dir)
       val watch = s"$base/arrivals"
+      val fs = new org.apache.hadoop.fs.Path(watch)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.mkdirs(new org.apache.hadoop.fs.Path(watch))
       def arrive(slice: String): Unit =
         org.apache.hadoop.fs.FileUtil.copy(
@@ -1094,14 +1075,7 @@ object CrawlRefresh {
     * audit state are proven refetch-immune by hash, not argument.
     */
   def qCrawlRefreshSuppress(s: SparkSession, dir: String): DataFrame = {
-    val (corpus, audit) = IndexCache.memo(
-      s"crawl-suppress:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val base = s"${sys.props("java.io.tmpdir")}/graft_crawlsuppress_$tag"
-      val hp = new org.apache.hadoop.fs.Path(base)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(hp, true)
+    val (corpus, audit) = IndexCache.scratch(s, "crawl-suppress", dir) { base =>
       val corpus = new TxTable(s, s"$base/corpus")
       corpus.append(Tables.load(s, dir, "documents").where(srcNum < 10)
         .select(col("doc_id"), col("source"), col("text")))
@@ -1109,6 +1083,8 @@ object CrawlRefresh {
       index.create(indexSchema)
       val audit = new TxTable(s, s"$base/audit")
       val watch = s"$base/arrivals"
+      val fs = new org.apache.hadoop.fs.Path(watch)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.mkdirs(new org.apache.hadoop.fs.Path(watch))
       def arrive(srcDir: String, slice: String): Unit =
         org.apache.hadoop.fs.FileUtil.copy(
@@ -1146,12 +1122,7 @@ object CrawlRefresh {
     * ([[Warc.writeShards]]'s contract), the accounting one keyed agg.
     */
   private[graft] def wetFixture(s: SparkSession, dir: String): String =
-    IndexCache.memo(s"warc-wet:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_warcwet_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "warc-wet", dir) { p =>
       val fetches = parseFetches(Warc.read(s, crawlFixture(s, dir)))
       // seq disambiguates the refetch (day-2) record of a page; the
       // record id carries it too (WARC ids must be unique)

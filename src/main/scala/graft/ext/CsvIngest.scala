@@ -56,12 +56,7 @@ object CsvIngest {
     concat(col("text"), lit("\n\"tail, quoted, delimited\""))).otherwise(col("text"))
 
   private[graft] def csvFixture(s: SparkSession, dir: String): String =
-    IndexCache.memo(s"csv-fixture:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val base = s"${sys.props("java.io.tmpdir")}/graft_csv_$tag"
-      val hp = new org.apache.hadoop.fs.Path(base)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "csv-fixture", dir) { base =>
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), mutatedText.as("text"))
         .repartition(4, col("doc_id"))

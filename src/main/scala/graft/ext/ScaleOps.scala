@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{IndexCache, Tables}
 
 /** Scale-path utilities: sketch aggregates, Bloom-filter incremental
   * dedup, and salted aggregation for skewed keys — the techniques the
@@ -238,7 +238,7 @@ object ScaleOps {
     // convention): table registrations live in one session's in-memory
     // catalog, so a memo hit from an earlier SparkSession would hand a
     // later one table names its own catalog never saw (TABLE_NOT_FOUND)
-    graft.core.IndexCache.memo(
+    IndexCache.memo(
       s"bucketed-join:${s.sparkContext.applicationId}:$dir:buckets=16") {
       val tag = dir.replaceAll("[^a-zA-Z0-9]+", "_").stripPrefix("_").stripSuffix("_")
       val li = s"lineitem_bkt_$tag"
@@ -312,29 +312,28 @@ object ScaleOps {
   private def datekey: Column =
     floor(unix_timestamp(col("o_orderdate")) / 86400L).cast("long")
 
+  /** A fixture table built once per (session, dir) by `build` at its
+    * [[IndexCache.scratch]] path; every call returns a fresh handle.
+    */
+  private def txFixture(s: SparkSession, name: String, dir: String)(
+      build: graft.core.TxTable => Unit): graft.core.TxTable =
+    new graft.core.TxTable(s, IndexCache.scratch(s, name, dir) { p =>
+      build(new graft.core.TxTable(s, p)); p
+    })
+
   /** ACID orders table clustered by epoch-day (`repartitionByRange` +
     * in-file sort), built ONCE per (session, data dir) — the at-ingest
     * lifecycle: a production table is written time-clustered so its
     * per-file footer stats make every later time probe open only the
     * overlapping files ([[graft.core.TxTable.scan]]).
     */
-  private[ext] def clusteredOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-skip:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txskip_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def clusteredOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-skip", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(datekey.as("o_datekey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(16, col("o_datekey"))
         .sortWithinPartitions("o_datekey"))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** ACID orders table PARTITIONED BY a GENERATED month column
     * (`o_monthkey GENERATED AS o_epochsec div 2678400`,
@@ -346,18 +345,11 @@ object ScaleOps {
     * builder asserts the derived prune actually drops the cold months,
     * so the query fails loudly if derivation ever silently stops.
     */
-  private[graft] def gencolOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
+  private[graft] def gencolOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
     // NOTE: distinct memo key/tmp path from q_tx_gencol's fixture —
     // a shared key would hand one query the other's table
-    val path = graft.core.IndexCache.memo(
-      s"tx-gencolpart:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txgencolpart_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    txFixture(s, "tx-gencolpart", dir) { t =>
       import org.apache.spark.sql.types._
-      val t = new graft.core.TxTable(s, p)
       t.create(StructType(Seq(
         StructField("o_epochsec", LongType), StructField("o_orderpriority", StringType),
         StructField("o_totalprice", DoubleType), StructField("o_monthkey", LongType))))
@@ -373,10 +365,7 @@ object ScaleOps {
       require(pruned.size < st.files.size / 4 && pruned.nonEmpty,
         s"generated-column derivation must prune the month partitions: " +
           s"opened ${pruned.size} of ${st.files.size}")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The window aggregate through the generated-partition layout: the
     * filter names ONLY the base second-resolution column; the answer
@@ -442,25 +431,15 @@ object ScaleOps {
     * maintenance on the hot region, O(region) not O(table)); the cold
     * files carry untouched. Built once per (session, dir).
     */
-  private[ext] def scopedCompactOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-compactwhere:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txcompactwhere_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def scopedCompactOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-compactwhere", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(datekey.as("o_datekey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(16, col("o_datekey"))
         .sortWithinPartitions("o_datekey"))
       t.compact(where =
         Some(col("o_datekey") >= TxSkipLo && col("o_datekey") <= TxSkipHi))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The window aggregate THROUGH A SCAN over the scoped-compacted
     * table: matches the oracle only if the scoped rewrite preserved
@@ -481,22 +460,13 @@ object ScaleOps {
     * shared source (whose `q_tx_skip` is graded in the same run).
     * Built once per (session, dir).
     */
-  private[ext] def clonedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-clone:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txclone_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val clone = clusteredOrdersTable(s, dir).cloneTo(p)
+  private[ext] def clonedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-clone", dir) { t =>
+      val clone = clusteredOrdersTable(s, dir).cloneTo(t.tablePath)
       import s.implicits._
       clone.append(Seq((0L, "0-EXTRA", 1.0d))
         .toDF("o_datekey", "o_orderpriority", "o_totalprice"))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The window aggregate THROUGH THE CLONE's scan: matches the oracle
     * only if the linked files + re-rooted stats answer the probe
@@ -513,15 +483,8 @@ object ScaleOps {
     * The copy-on-write rewrite touches only the files whose key range
     * contains a matched key ([[graft.core.TxTable.merge]]).
     */
-  private[ext] def mergedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-merge:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txmerge_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def mergedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-merge", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       t.append(base.repartitionByRange(8, col("o_orderkey"))
@@ -536,10 +499,7 @@ object ScaleOps {
         .withColumn("o_orderkey",
           col("o_orderkey") + base.agg(max(col("o_orderkey"))).head.getLong(0) + 1L)
       t.merge(updates.unionByName(inserts), Seq("o_orderkey"))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-MERGE table aggregated by priority: matches the oracle's
     * SQL reconstruction (anti-join + union) ONLY if the upsert
@@ -558,15 +518,8 @@ object ScaleOps {
     * new keys insert with channel, every untouched row reads channel
     * NULL. The upstream-added-a-column-mid-stream CDC case.
     */
-  private[ext] def mergeEvolvedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-mergevo:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txmergevo_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def mergeEvolvedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-mergevo", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       t.append(base.repartitionByRange(8, col("o_orderkey"))
@@ -589,10 +542,7 @@ object ScaleOps {
           "o_totalprice" -> "s.o_totalprice",
           "o_channel" -> "s.o_channel"))
         .run()
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   def qTxMergeEvolve(s: SparkSession, dir: String): DataFrame =
     mergeEvolvedOrdersTable(s, dir).read()
@@ -610,15 +560,8 @@ object ScaleOps {
     * SOURCE clauses (delete one unmatched key slice, re-label
     * another). Built once per (session, dir).
     */
-  private[ext] def condMergedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-mergecond:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txmergecond_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def condMergedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-mergecond", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       t.append(base.repartitionByRange(8, col("o_orderkey"))
@@ -639,10 +582,7 @@ object ScaleOps {
         .whenNotMatchedBySourceUpdate(
           Map("o_orderpriority" -> "'9-BYSRC'"), "t.o_orderkey % 97 = 13")
         .run()
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-conditional-MERGE table aggregated by priority: matches
     * the oracle's per-clause SQL reconstruction ONLY if every clause
@@ -658,15 +598,8 @@ object ScaleOps {
     * three survive byte-identical — the daily-reprocess verb, graded.
     * Built once per (session, dir).
     */
-  private[ext] def dynPartOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-dynpart:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txdynpart_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def dynPartOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-dynpart", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       t.append(base, partitionBy = Seq("o_orderpriority"))
@@ -675,10 +608,7 @@ object ScaleOps {
           col("o_orderkey") % 2 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
       t.overwriteDynamic(recomputed, Seq("o_orderpriority"))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-dynamic-overwrite table aggregated by priority: matches
     * the oracle ONLY if exactly the two frame-present partitions were
@@ -697,18 +627,13 @@ object ScaleOps {
     * on every call (conf survives, the memo does the data work once).
     */
   private[ext] def sqlCatalogOrders(s: SparkSession, dir: String): String = {
-    val tag = (dir + "_" + s.sparkContext.applicationId)
-      .replaceAll("[^a-zA-Z0-9]+", "_")
+    val tag = IndexCache.scratchTag(s, dir)
     val cat = s"graft_sqlq_$tag"
     s.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.sql.GraftCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$cat.base",
-      s"${sys.props("java.io.tmpdir")}/graft_txsql_$tag")
-    graft.core.IndexCache.memo(
-      s"tx-sql:${s.sparkContext.applicationId}:$dir") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_txsql_$tag"
-      val hp = new org.apache.hadoop.fs.Path(base)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+      IndexCache.scratchPath(s, "tx-sql", dir))
+    IndexCache.scratch(s, "tx-sql", dir) { base =>
       val src = s"orders_src_$tag"
       Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
@@ -756,18 +681,13 @@ object ScaleOps {
     * fully-qualified SQL name; built once per (session, dir).
     */
   private[ext] def callMaintainedParts(s: SparkSession, dir: String): String = {
-    val tag = (dir + "_" + s.sparkContext.applicationId)
-      .replaceAll("[^a-zA-Z0-9]+", "_")
+    val tag = IndexCache.scratchTag(s, dir)
     val cat = s"graft_callq_$tag"
     s.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.sql.GraftCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$cat.base",
-      s"${sys.props("java.io.tmpdir")}/graft_txcall_$tag")
-    graft.core.IndexCache.memo(
-      s"tx-call:${s.sparkContext.applicationId}:$dir") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_txcall_$tag"
-      val hp = new org.apache.hadoop.fs.Path(base)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+      IndexCache.scratchPath(s, "tx-call", dir))
+    IndexCache.scratch(s, "tx-call", dir) { base =>
       val src = s"part_src_$tag"
       Tables.load(s, dir, "part")
         .select(col("p_partkey"), col("p_brand"), col("p_retailprice"))
@@ -823,18 +743,13 @@ object ScaleOps {
     * semantics. Built once per (session, dir).
     */
   private[ext] def defaultsCustomersTable(s: SparkSession, dir: String): String = {
-    val tag = (dir + "_" + s.sparkContext.applicationId)
-      .replaceAll("[^a-zA-Z0-9]+", "_")
+    val tag = IndexCache.scratchTag(s, dir)
     val cat = s"graft_dfltq_$tag"
     s.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.sql.GraftCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$cat.base",
-      s"${sys.props("java.io.tmpdir")}/graft_txdflt_$tag")
-    graft.core.IndexCache.memo(
-      s"tx-defaults:${s.sparkContext.applicationId}:$dir") {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_txdflt_$tag"
-      val hp = new org.apache.hadoop.fs.Path(base)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+      IndexCache.scratchPath(s, "tx-defaults", dir))
+    IndexCache.scratch(s, "tx-defaults", dir) { base =>
       val src = s"cust_src_$tag"
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -902,15 +817,8 @@ object ScaleOps {
     * schema; batch 3 arrives narrow again and upcasts on write. Built
     * once per (session, dir).
     */
-  private[ext] def widenedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-widen:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txwiden_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def widenedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-widen", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         .withColumn("units", col("o_orderkey") % 1000)
@@ -925,10 +833,7 @@ object ScaleOps {
       t.append(base.where(col("o_orderkey") % 3 === 2)
         .withColumn("units", col("units").cast("int"))
         .withColumn("score", col("score").cast("float")))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The widened table aggregated by priority (count, the long-range
     * `units` sum, the float→double `score` sum, revenue): matches the
@@ -954,24 +859,14 @@ object ScaleOps {
     * from even being scanned; only files actually containing matches
     * rewrite), built once per (session, dir).
     */
-  private[ext] def deletedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-delete:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txdelete_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def deletedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-delete", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(datekey.as("o_datekey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(16, col("o_datekey"))
         .sortWithinPartitions("o_datekey"))
       t.delete(col("o_datekey") >= TxSkipLo && col("o_datekey") <= TxSkipHi)
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-DELETE table aggregated by priority: matches the
     * oracle's `WHERE NOT window` reconstruction only if delete removed
@@ -986,15 +881,8 @@ object ScaleOps {
     * collected — the GDPR-/CDC-scale deletion path, applied as
     * distributed semi/anti joins. Built once per (session, dir).
     */
-  private[ext] def delKeysOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-delkeys:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txdelkeys_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def delKeysOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-delkeys", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(8, col("o_orderkey"))
@@ -1002,10 +890,7 @@ object ScaleOps {
       val dead = t.read().select(col("o_orderkey"))
         .where(col("o_orderkey") % 7 === 3)
       t.deleteKeys(dead, Seq("o_orderkey"))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-deleteKeys table aggregated by priority: matches the
     * oracle's modular-complement reconstruction only if the key-set
@@ -1024,15 +909,8 @@ object ScaleOps {
     * invariant, so the query fails loudly if the physical story ever
     * regresses to a rewrite.
     */
-  private[ext] def dvDeletedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-dv:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txdv_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def dvDeletedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-dv", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(8, col("o_orderkey"))
@@ -1043,10 +921,7 @@ object ScaleOps {
       require(st.files.toSet == before && st.dvs.keySet == before,
         s"expected a pure merge-on-read delete (every file masked, none " +
           s"rewritten); got files=${st.files.size}, masked=${st.dvs.size}")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The masked table aggregated by priority: matches the oracle's
     * `WHERE key % 5 <> 1` reconstruction only if the vectors mask
@@ -1068,15 +943,8 @@ object ScaleOps {
     * lost post-image and a leaked pre-image. Built once per
     * (session, dir).
     */
-  private[ext] def dvUpdatedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-dvupd:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txdvupd_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def dvUpdatedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-dvupd", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(8, col("o_orderkey"))
@@ -1091,10 +959,7 @@ object ScaleOps {
         s"expected a pure merge-on-read update (every original file masked " +
           s"and kept, updated rows appended); got files=${st.files.size}, " +
           s"masked=${st.dvs.size}")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The DV-updated table aggregated by priority: matches the oracle's
     * CASE-reconstruction only if the vectors mask exactly the old
@@ -1124,25 +989,15 @@ object ScaleOps {
     * commit (no data copied; on a 100 TB table an O(files) log write),
     * built once per (session, dir).
     */
-  private[ext] def restoredOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-restore:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txrestore_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def restoredOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-restore", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       t.append(base.repartitionByRange(8, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey")) // v0
       t.overwrite(base.where(col("o_orderkey") % 3 === 0)) // v1: shrunk
       t.restore(0L) // v2: metadata-only rollback to the full base
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-RESTORE table aggregated by priority: matches the full
     * plain-orders oracle ONLY if restore re-pointed exactly the v0
@@ -1159,15 +1014,8 @@ object ScaleOps {
     * Copy-on-write: only files whose key range holds a matching key
     * rewrite. Built once per (session, dir).
     */
-  private[ext] def updatedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-update:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txupdate_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def updatedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-update", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(8, col("o_orderkey"))
@@ -1175,10 +1023,7 @@ object ScaleOps {
       t.update(col("o_orderkey") % 7 === 0, Map(
         "o_orderpriority" -> lit("9-UPDATED"),
         "o_totalprice" -> (col("o_totalprice") + lit(5000.0d))))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-UPDATE table aggregated by priority: matches the
     * oracle's CASE-expression reconstruction only if update rewrote
@@ -1195,15 +1040,8 @@ object ScaleOps {
     * interleaved ordering over lexicographic is that EITHER dimension
     * prunes, not just the leading one.
     */
-  private[ext] def zorderOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-zorder:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txzorder_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def zorderOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-zorder", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(datekey.as("o_datekey"), col("o_orderkey"),
           col("o_orderpriority"), col("o_totalprice")))
@@ -1219,10 +1057,7 @@ object ScaleOps {
       require(byDate.size < n && byKey.size < n,
         s"z-order must prune on BOTH dimensions, got date ${byDate.size}/$n, " +
           s"key ${byKey.size}/$n")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The time-window aggregate through the Z-ORDERED layout: same
     * oracle as the flat/range-clustered twins — clustering changes
@@ -1241,18 +1076,9 @@ object ScaleOps {
     * Built once per (session, dir).
     */
   private[ext] def replicaOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-replica:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val srcP = s"${sys.props("java.io.tmpdir")}/graft_txreplsrc_$tag"
-      val dstP = s"${sys.props("java.io.tmpdir")}/graft_txrepldst_$tag"
-      Seq(srcP, dstP).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      }
-      val src = new graft.core.TxTable(s, srcP)
-      val dst = new graft.core.TxTable(s, dstP)
+    val path = IndexCache.scratch(s, "tx-replica", dir) { p =>
+      val src = new graft.core.TxTable(s, s"$p/src")
+      val dst = new graft.core.TxTable(s, s"$p/dst")
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       src.append(base.repartitionByRange(8, col("o_orderkey"))
@@ -1270,7 +1096,7 @@ object ScaleOps {
         .withColumn("o_orderkey", col("o_orderkey") + mx + 1L), Seq("o_orderkey"))
       graft.streaming.CdcApply(dst,
         src.readChangeFeed(cursor, src.version), Seq("o_orderkey"))
-      dstP
+      dst.tablePath
     }
     new graft.core.TxTable(s, path)
   }
@@ -1373,15 +1199,8 @@ object ScaleOps {
     * the generation actually happened (no nulls) and that a WRONG
     * supplied value is rejected.
     */
-  private[ext] def genColOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-gencol:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txgencol_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def genColOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-gencol", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderdate"), col("o_orderpriority"), col("o_totalprice"))
       // seed row establishes the schema, then the declaration
@@ -1395,10 +1214,7 @@ object ScaleOps {
       val bad = scala.util.Try(t.append(base.limit(1)
         .withColumn("o_datekey", lit(-1L))))
       require(bad.isFailure, "wrong supplied generated value must abort")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The time-window aggregate where the probe column EXISTS ONLY
     * because the log computed it: matches the oracle's from-scratch
@@ -1418,15 +1234,8 @@ object ScaleOps {
     * asserts zero data files changed across both renames — an O(1)
     * schema change where a rewrite would be O(table).
     */
-  private[ext] def renamedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-rename:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txrename_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def renamedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-rename", dir) { t =>
       t.append(Tables.load(s, dir, "orders")
         .select(datekey.as("o_datekey"), col("o_orderpriority"), col("o_totalprice"))
         .repartitionByRange(16, col("o_datekey"))
@@ -1436,10 +1245,7 @@ object ScaleOps {
       t.renameColumn("o_totalprice", "revenue_amount")
       require(t.state().files.toSet == before,
         "metadata-only rename must not touch data files")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The time-window aggregate through [[renamedOrdersTable]]'s NEW
     * surface names, with the manifest-stat skip still keyed by the
@@ -1504,15 +1310,8 @@ object ScaleOps {
     * so the query fails loudly if the maintenance op ever stops
     * compacting.
     */
-  private[ext] def compactedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-compact:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txcompact_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def compactedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-compact", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       (0 until 4).foreach { i =>
@@ -1525,10 +1324,7 @@ object ScaleOps {
         s"compaction left ${st.files.size} of $before files")
       require(t.history().exists(_.operation == "REWRITE"),
         "compaction commit lost its rewrite marker")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-COMPACTION table against the UNMODIFIED full-table
     * oracle: the maintenance op must change the file layout and
@@ -1592,23 +1388,13 @@ object ScaleOps {
     * cursor and delta in one atomic commit per step. Built once per
     * (session, dir).
     */
-  private[ext] def ivmViewTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-ivmview:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txivmview_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+  private[ext] def ivmViewTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-ivmview", dir) { v =>
       val src = mergedOrdersTable(s, dir)
-      val v = new graft.core.TxTable(s, p)
       graft.core.IvmAgg.advance(src, v, Seq("o_orderpriority"),
         Seq("o_totalprice"), upTo = Some(0L))
       graft.core.IvmAgg.advance(src, v, Seq("o_orderpriority"), Seq("o_totalprice"))
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The maintained view READ BACK: matches the merged-state oracle
     * only if both chunked advances were exactly-once and complete —
@@ -1629,16 +1415,9 @@ object ScaleOps {
     * group's pre-update max may have been retracted and the folded
     * `greatest` alone would overstate it.
     */
-  private[ext] def ivmMinMaxViewTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-ivmminmax:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txivmminmax_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+  private[ext] def ivmMinMaxViewTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-ivmminmax", dir) { v =>
       val src = mergedOrdersTable(s, dir)
-      val v = new graft.core.TxTable(s, p)
       graft.core.IvmAgg.advance(src, v, Seq("o_orderpriority"),
         Seq("o_totalprice"), cursorId = "ivm-minmax", upTo = Some(0L),
         maxs = Seq("o_totalprice"), mins = Seq("o_totalprice"))
@@ -1646,10 +1425,7 @@ object ScaleOps {
         Seq("o_totalprice"), cursorId = "ivm-minmax",
         maxs = Seq("o_totalprice"), mins = Seq("o_totalprice"),
         onRetract = "recompute")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   def qTxIvmMinmax(s: SparkSession, dir: String): DataFrame =
     ivmMinMaxViewTable(s, dir).read()
@@ -1683,15 +1459,8 @@ object ScaleOps {
     * prunes a probe to a minority of files, so the query fails loudly
     * if the index ever silently stops skipping.
     */
-  private[ext] def bloomOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-bloom:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txbloom_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def bloomOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-bloom", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       t.append(base.repartition(16, col("o_orderkey")))
@@ -1703,10 +1472,7 @@ object ScaleOps {
       val total = t.state().files.size
       require(kept * 2 < total,
         s"bloom index stopped pruning: point probe kept $kept of $total files")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** Needle-in-haystack point lookups through the bloom-indexed scan:
     * five deterministic keys fetched via `isin` — at 100 TB the
@@ -1739,15 +1505,8 @@ object ScaleOps {
     * backfill O(partition), not O(table), at 100 TB. Built once per
     * (session, dir).
     */
-  private[ext] def replacedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-replace:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txreplace_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def replacedOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-replace", dir) { t =>
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       t.append(base, partitionBy = Seq("o_orderpriority"))
@@ -1763,10 +1522,7 @@ object ScaleOps {
       require(removed.size == 1 && (before & after).size == before.size - 1,
         s"replaceWhere should swap exactly the 1-URGENT file: " +
           s"removed ${removed.size} of ${before.size}")
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The post-swap table aggregated by priority: matches the oracle's
     * CASE-projection reconstruction ONLY if replaceWhere deleted
@@ -1790,15 +1546,8 @@ object ScaleOps {
     * separately plus the validity epochs, so the oracle reconstruction
     * catches a wrong close, a missed no-op, or a mis-stamped interval.
     */
-  private[ext] def scd2CustomerTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-scd2:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txscd2_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def scd2CustomerTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-scd2", dir) { t =>
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       t.mergeScd2(base.repartitionByRange(8, col("c_custkey"))
@@ -1810,10 +1559,7 @@ object ScaleOps {
         .withColumn("c_acctbal", col("c_acctbal") +
           when(col("c_custkey") % 20 === 0, lit(250.0d)).otherwise(lit(100.0d))),
         Seq("c_custkey"), 3L)
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   /** The SCD2 dimension EVOLVED mid-history: epoch 4's reload carries
     * a brand-new `c_tier` column under `evolveSchema = true` — every
@@ -1823,15 +1569,8 @@ object ScaleOps {
     * of all four epochs — the warehouse-dimension version of the
     * upstream-added-a-column case.
     */
-  private[ext] def scd2EvolvedCustomerTable(s: SparkSession, dir: String): graft.core.TxTable = {
-    val path = graft.core.IndexCache.memo(
-      s"tx-scd2evo:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_txscd2evo_$tag"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
-      val t = new graft.core.TxTable(s, p)
+  private[ext] def scd2EvolvedCustomerTable(s: SparkSession, dir: String): graft.core.TxTable =
+    txFixture(s, "tx-scd2evo", dir) { t =>
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       t.mergeScd2(base.repartitionByRange(8, col("c_custkey"))
@@ -1851,10 +1590,7 @@ object ScaleOps {
         .withColumn("c_tier",
           when(col("c_custkey") % 20 === 0, lit("gold")).otherwise(lit("silver"))),
         Seq("c_custkey"), 4L, evolveSchema = true)
-      p
     }
-    new graft.core.TxTable(s, path)
-  }
 
   def qTxScd2Evolve(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType

@@ -262,13 +262,11 @@ object TextAnalysis {
   private[ext] def jaccardPairsTable(s: SparkSession, dir: String): DataFrame =
     graft.core.IndexCache.memo(
       s"jaccard-pairs:${s.sparkContext.applicationId}:$dir") {
-      // EAGER + timed: the build runs inside the first consumer's
-      // run1 either way; the eager checkpoint makes its cost a
-      // measured, reported number (Bench's artifact_builds line)
-      // instead of an invisible slice of a discarded run
-      graft.core.ArtifactCost.timed("jaccard_pairs") {
-        ngramJaccardPairs(s, dir).localCheckpoint(eager = true)
-      }
+      // EAGER: the build runs inside the first consumer's run1 either
+      // way; the eager checkpoint makes its cost a measured, reported
+      // number (the memo's ArtifactCost entry, Bench's artifact_builds
+      // line) instead of an invisible slice of a discarded run
+      ngramJaccardPairs(s, dir).localCheckpoint(eager = true)
     }
 
   /** [[qNgramJaccard]]'s mining body WITHOUT the graded query's

@@ -32,13 +32,7 @@ object WarcIngest {
     * `collect()` build this replaced existed only for fixture scale).
     */
   private[graft] def warcFixture(s: SparkSession, dir: String): String =
-    IndexCache.memo(s"warc-fixture:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val base = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_warc_$tag")
-      val hp = new org.apache.hadoop.fs.Path(base.toString)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "warc-fixture", dir) { base =>
       val sh = col("doc_id") % 4
       Warc.writeShards(
         Tables.load(s, dir, "documents").select(
@@ -53,8 +47,8 @@ object WarcIngest {
           lit("2026-01-01T00:00:00Z").as("warc_date"),
           lit("text/plain").as("content_type"),
           encode(col("text"), "utf-8").as("payload")),
-        base.toString)
-      base.toString
+        base)
+      base
     }
 
   /** Parse the session's WARC fixture back to rows: route by target
@@ -79,12 +73,7 @@ object WarcIngest {
     * executor-side), built once per session; returns the output dir.
     */
   private[graft] def reshardFixture(s: SparkSession, dir: String): String =
-    IndexCache.memo(s"warc-reshard:${s.sparkContext.applicationId}:$dir") {
-      val tag = (dir + "_" + s.sparkContext.applicationId)
-        .replaceAll("[^a-zA-Z0-9]+", "_")
-      val out = s"${sys.props("java.io.tmpdir")}/graft_warcreshard_$tag"
-      val hp = new org.apache.hadoop.fs.Path(out)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    IndexCache.scratch(s, "warc-reshard", dir) { out =>
       val parsed = Warc.read(s, warcFixture(s, dir))
         .where(col("warc_type") === "conversion")
       Warc.writeShards(

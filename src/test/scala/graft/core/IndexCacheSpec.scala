@@ -1,8 +1,10 @@
 package graft.core
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
 
-class IndexCacheSpec extends AnyFunSuite {
+import graft.SparkTestBase
+
+class IndexCacheSpec extends SparkTestBase {
 
   test("nested memoization never hits ConcurrentHashMap's recursive-update wall") {
     // pre-fix, an outer build memoizing another key threw
@@ -32,5 +34,51 @@ class IndexCacheSpec extends AnyFunSuite {
     threads.foreach(_.start()); threads.foreach(_.join())
     import scala.jdk.CollectionConverters._
     assert(results.asScala.forall(_ == "v") && results.size == 16 && n.get() == 1)
+  }
+
+  test("scratch deletes a stale tree at its path before the build sees it") {
+    val dir = tmpDir("ics-stale-data")
+    val p = IndexCache.scratchPath(spark, "ics-stale", dir)
+    Files.createDirectories(Paths.get(p))
+    Files.writeString(Paths.get(p, "stale.txt"), "left by an earlier process")
+    val got = IndexCache.scratch(spark, "ics-stale", dir) { path =>
+      assert(path == p)
+      assert(!Files.exists(Paths.get(path)), "the stale tree must be gone")
+      Files.createDirectories(Paths.get(path, "built"))
+      path
+    }
+    assert(got == p && Files.exists(Paths.get(p, "built")))
+    assert(!Files.exists(Paths.get(p, "stale.txt")))
+  }
+
+  test("scratch builds each dir once, at a distinct path per dir") {
+    val (d1, d2) = (tmpDir("ics-dir-a"), tmpDir("ics-dir-b"))
+    val builds = scala.collection.mutable.ArrayBuffer.empty[String]
+    def get(d: String): String =
+      IndexCache.scratch(spark, "ics-dirs", d) { path => builds += path; path }
+    val (p1, p2) = (get(d1), get(d2))
+    assert(p1 != p2 && builds.toSeq == Seq(p1, p2))
+    assert(p1.startsWith(s"${sys.props("java.io.tmpdir")}/graft_ics-dirs_"))
+    // a second call per dir rebuilds nothing
+    assert(get(d1) == p1 && get(d2) == p2 && builds.size == 2)
+    assert(IndexCache.scratch[String](spark, "ics-dirs", d1)(_ => fail("must not rebuild")) == p1)
+  }
+
+  test("the ledger charges each build its self time under the key prefix") {
+    val tag = System.nanoTime()
+    val (outer, inner) = (s"ics-self-outer-$tag", s"ics-self-inner-$tag")
+    IndexCache.memo(s"$outer:k") {
+      Thread.sleep(50)
+      IndexCache.memo(s"$inner:k") { Thread.sleep(300); "inner" } + "!"
+    }
+    val ledger = ArtifactCost.snapshot
+    assert(ledger(inner) >= 0.3)
+    // without the nesting rule the outer build would be charged the
+    // inner one's 300 ms as well, and the sum would count it twice
+    assert(ledger(outer) >= 0.05 && ledger(outer) < ledger(inner),
+      s"outer ${ledger(outer)} s, inner ${ledger(inner)} s")
+    // a memo hit records nothing
+    IndexCache.memo[String](s"$outer:k")(fail("must not rebuild"))
+    assert(ArtifactCost.snapshot(outer) == ledger(outer))
   }
 }

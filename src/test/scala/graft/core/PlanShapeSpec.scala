@@ -304,7 +304,7 @@ class PlanShapeSpec extends SparkTestBase {
     val df = graft.SparkEntry.queries("q_ann_pq_append")(spark, dir)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet") ||
-      plan.contains("graft_pqappend"), "stage 1 must scan the grown code table")
+      plan.contains("graft_pq-index-append_"), "stage 1 must scan the grown code table")
   }
 
   test("q_moving_avg: one user-partition exchange serves both window frames") {

@@ -564,7 +564,7 @@ class CrawlRefreshSpec extends SparkTestBase {
         .queryExecution.executedPlan
       def isIndexScan(p: SparkPlan): Boolean = p match {
         case sc: FileSourceScanExec =>
-          sc.relation.location.rootPaths.exists(_.toString.contains("graft_shingleidx"))
+          sc.relation.location.rootPaths.exists(_.toString.contains("graft_shingle-index-dir_"))
         case _ => false
       }
       var offenders = 0

@@ -85,7 +85,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     def isIndexScan(p: SparkPlan): Boolean = p match {
       case sc: FileSourceScanExec =>
-        sc.relation.location.rootPaths.exists(_.toString.contains("graft_shingleidx"))
+        sc.relation.location.rootPaths.exists(_.toString.contains("graft_shingle-index-dir_"))
       case _ => false
     }
     val oldBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -132,7 +132,7 @@ class PqSpec extends SparkTestBase {
       n match {
         case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
         case f: FileSourceScanExec
-          if f.relation.location.rootPaths.exists(_.toString.contains("graft_pqindex")) =>
+          if f.relation.location.rootPaths.exists(_.toString.contains("graft_pq-index-dir_")) =>
           idxScans += f
         case f: FileSourceScanExec
           if f.relation.location.rootPaths.exists(_.toString.contains("embeddings")) =>
