@@ -18,8 +18,8 @@ object Explain {
       else (None, "", args)
     val spark = graft.core.Sessions.local("explain", 8)
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-    // fixture-backed queries (persisted indexes, crawl shards) need the
-    // same prewarm the bench runs
+    // fixture-backed queries (persisted indexes, crawl shards) plan
+    // over their built artifacts
     Prewarm.fixtures(spark, dir)
     rest.drop(1).foreach { q =>
       val df = SparkEntry.queries(q)(spark, dir)

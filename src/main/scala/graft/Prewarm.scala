@@ -4,13 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 import graft.ext._
 
-/** The shared untimed fixture prewarm: build-once artifacts whose
-  * construction is per-process setup, not the graded read — benchmarks
-  * call this outside the measured window so run 1 of a cold process is
-  * comparable to steady state. Every build is attempted even when an
-  * earlier one fails; a failure then fails the prewarm loudly, naming
-  * each failed build, so a run with a missing fixture never reads as a
-  * normal one.
+/** The fixture prewarm: build-once artifacts whose construction is
+  * per-process setup, not the graded read. [[Explain]] calls this
+  * before planning, so fixture-backed plans scan built artifacts.
+  * Every build is attempted even when an earlier one fails; a failure
+  * then fails the prewarm loudly, naming each failed build, so a run
+  * with a missing fixture never reads as a normal one.
   */
 object Prewarm {
   def fixtures(spark: SparkSession, sfDir: String): Unit = {

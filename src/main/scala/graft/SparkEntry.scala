@@ -50,14 +50,9 @@ object SparkEntry {
     *
     * The chain runs on the ACID [[graft.medallion.TxMedallion]]
     * tables — the shape the reference actually has (every sink is a
-    * Delta table), and the FASTER one: silver/gold advance as direct
-    * batch increments over bronze's commit log instead of two more
-    * stream-engine launches, less than half the fixed cost of the
-    * 4-streaming-query chain (PLANS.md pipeline table).
-    * [[graft.pipeline.Pipeline.run]] keeps the literal 4-query
-    * parquet emulation as the reference-faithful variant — both
-    * remain spec'd (MedallionSpec/TxMedallionSpec) and measured
-    * (BenchPipeline).
+    * Delta table): silver and gold advance as batch increments over
+    * bronze's commit log. `perfbench`'s `medallion_stream` workload
+    * times the same `RawIngest.run` + `TxMedallion.run` chain.
     */
   def entry(spark: SparkSession): DataFrame = {
     import spark.implicits._

@@ -4,8 +4,9 @@ package graft.core
   * [[IndexCache.memo]] build (pair tables, trained LM counts, serving
   * indexes, fixture tables and shards) is recorded under its key's
   * prefix, so a one-time build cost stays visible instead of vanishing
-  * into the first consumer's discarded run. [[graft.Bench]] prints the
-  * snapshot as its `artifact_builds` line.
+  * into the first consumer's discarded run. `perfbench`'s
+  * `corpus_curation` reports the snapshot's sum per set-up round as
+  * `setup.artifact_builds_s` (`--trace 1`).
   *
   * Builds are charged SELF time: a build that memoizes another key
   * is not charged for the nested build, which is charged to its own

@@ -62,10 +62,13 @@ object IndexCache {
     (dir + "_" + s.sparkContext.applicationId).replaceAll("[^a-zA-Z0-9]+", "_")
 
   /** Where [[scratch]] builds artifact `name` for (`s`, `dir`):
-    * `<java.io.tmpdir>/graft_<name>_<scratchTag>`.
+    * `<driver temp dir>/graft_<name>_<scratchTag>`. The driver temp
+    * dir ([[org.apache.spark.SparkFiles.getRootDirectory]]) is the
+    * SparkContext's own; Spark deletes it when the context stops, so
+    * no session's artifacts outlive it.
     */
   private[graft] def scratchPath(s: SparkSession, name: String, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${name}_${scratchTag(s, dir)}"
+    s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft_${name}_${scratchTag(s, dir)}"
 
   /** Build-once on-disk artifact: memoized under
     * `name:<applicationId>:dir`; on the one build, [[scratchPath]] is

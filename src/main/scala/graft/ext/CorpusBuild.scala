@@ -233,7 +233,7 @@ object CorpusBuild {
   /** The session's built artifact over the testdata corpus. */
   private[graft] def artifact(s: SparkSession, dir: String): TxTable =
     IndexCache.scratch(s, "corpus-build", dir) { p =>
-      run(Tables.load(s, dir, "documents"), p)
+      run(Tables.load(s, dir, "documents"), s"$p/artifact")
     }
 
   /** The EPOCH-0 artifact: built over the EXISTING corpus (src0-9),
@@ -246,11 +246,11 @@ object CorpusBuild {
     IndexCache.scratch(s, "corpus-epoch0", dir) { p =>
       val srcNum = substring(col("source"), 4, 10).cast("int")
       val docs = Tables.load(s, dir, "documents")
-      val t0 = run(docs.where(srcNum < 10), p)
+      val t0 = run(docs.where(srcNum < 10), s"$p/artifact")
       val v0 = t0.version
       appendIncrement(t0, docs.where(srcNum >= 10)
         .select(col("doc_id"), col("source"), col("text")),
-        s.read.parquet(s"$p.vocab"))
+        s.read.parquet(s"$p/artifact.vocab"))
       (t0, v0)
     }
 

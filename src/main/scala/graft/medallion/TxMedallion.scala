@@ -10,9 +10,8 @@ import graft.core.TxTable
   * shape the reference actually runs (every sink is Delta:
   * /root/reference/notebooks/medallion/bronze.py:15-27, silver.py:31-38,
   * gold.py:37-42), on our own transaction log instead of a missing
-  * jar. Same transforms as [[Medallion]] (shared definitions), with
-  * the guarantees upgraded from single-writer emulation to the real
-  * contract:
+  * jar. The stage transforms are [[Medallion]]'s; this object owns
+  * the sinks and their guarantees:
   *
   *   - **bronze**: the raw stream commits via foreachBatch
   *     `appendBatch` — the (writer, batchId) txn action makes a batch
@@ -49,6 +48,25 @@ object TxMedallion {
     */
   private[medallion] val SilverCursor = "silver@bronze"
 
+  /** Bronze for both drivers: drain the raw table's unconsumed files
+    * into bronze, one exactly-once `appendBatch` per micro-batch, under
+    * the one checkpoint `<checkpointBase>/bronze_tx`. The layout is the
+    * reference's partitioned bronze (bronze.py:25, partitionBy("type")):
+    * value-pure files per type, so downstream type filters prune on
+    * manifest stats alone.
+    */
+  private def drainBronze(spark: SparkSession, rawPath: String, t: Tables,
+                          checkpointBase: String, queryName: String): Unit =
+    Medallion.bronzeTransform(Medallion.streamFrom(spark, rawPath))
+      .writeStream
+      .queryName(queryName)
+      .foreachBatch((batch: DataFrame, id: Long) =>
+        t.bronze.appendBatch(batch, "bronze", id, partitionBy = Seq("type")))
+      .option("checkpointLocation", s"$checkpointBase/bronze_tx")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
   /** One scheduled run of the chain (the AvailableNow analog of the
     * reference's Trigger.Once DAG): drain the raw table into bronze,
     * advance silver over bronze's new commits, rebuild gold. Safe to
@@ -56,18 +74,7 @@ object TxMedallion {
     */
   def run(spark: SparkSession, rawPath: String, t: Tables, checkpointBase: String,
           dayStart: java.sql.Timestamp): Unit = {
-    val bronzeQ = Medallion.bronzeTransform(Medallion.streamFrom(spark, rawPath))
-      .writeStream
-      .queryName("graftTxBronze")
-      // the reference's partitioned bronze layout (bronze.py:25,
-      // partitionBy("type")): value-pure files per type, so downstream
-      // type filters prune on manifest stats alone
-      .foreachBatch((batch: DataFrame, id: Long) =>
-        t.bronze.appendBatch(batch, "bronze", id, partitionBy = Seq("type")))
-      .option("checkpointLocation", s"$checkpointBase/bronze_tx")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    bronzeQ.awaitTermination()
+    drainBronze(spark, rawPath, t, checkpointBase, "graftTxBronze")
 
     val from = t.silver.state().txns.getOrElse(SilverCursor, -1L)
     val to = t.bronze.version
@@ -113,15 +120,7 @@ object TxMedallion {
     */
   def runStreaming(spark: SparkSession, rawPath: String, t: Tables,
                    checkpointBase: String, dayStart: java.sql.Timestamp): Unit = {
-    val bronzeQ = Medallion.bronzeTransform(Medallion.streamFrom(spark, rawPath))
-      .writeStream
-      .queryName("graftTxBronzeStream")
-      .foreachBatch((batch: DataFrame, id: Long) =>
-        t.bronze.appendBatch(batch, "bronze", id, partitionBy = Seq("type")))
-      .option("checkpointLocation", s"$checkpointBase/bronze_tx")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    bronzeQ.awaitTermination()
+    drainBronze(spark, rawPath, t, checkpointBase, "graftTxBronzeStream")
     if (t.bronze.version < 0) return // nothing ingested yet: no schema to stream
 
     val silverQ = Medallion.silverColumns(

@@ -58,10 +58,18 @@ class IndexCacheSpec extends SparkTestBase {
       IndexCache.scratch(spark, "ics-dirs", d) { path => builds += path; path }
     val (p1, p2) = (get(d1), get(d2))
     assert(p1 != p2 && builds.toSeq == Seq(p1, p2))
-    assert(p1.startsWith(s"${sys.props("java.io.tmpdir")}/graft_ics-dirs_"))
+    assert(p1.startsWith(s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft_ics-dirs_"))
     // a second call per dir rebuilds nothing
     assert(get(d1) == p1 && get(d2) == p2 && builds.size == 2)
     assert(IndexCache.scratch[String](spark, "ics-dirs", d1)(_ => fail("must not rebuild")) == p1)
+  }
+
+  test("scratch paths lie under the driver temp dir that Spark deletes on stop") {
+    val root = org.apache.spark.SparkFiles.getRootDirectory()
+    assert(root != "." && root != sys.props("java.io.tmpdir"))
+    val p = IndexCache.scratchPath(spark, "ics-root", tmpDir("ics-root-data"))
+    assert(java.nio.file.Paths.get(p).getParent == java.nio.file.Paths.get(root))
+    assert(p.startsWith(s"$root/graft_ics-root_"))
   }
 
   test("the ledger charges each build its self time under the key prefix") {

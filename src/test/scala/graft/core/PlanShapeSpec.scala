@@ -1,5 +1,8 @@
 package graft.core
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
 import graft.{PlanDump, SparkEntry, SparkTestBase}
 
 /** Physical-plan shape regressions: the properties that make these
@@ -302,9 +305,17 @@ class PlanShapeSpec extends SparkTestBase {
     val (sh2, _) = shape("q_ann_pq_append")
     assert(sh2 == 0, s"expected shuffle-free ADC+R serving, got $sh2")
     val df = graft.SparkEntry.queries("q_ann_pq_append")(spark, dir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("embeddings.parquet") ||
-      plan.contains("graft_pq-index-append_"), "stage 1 must scan the grown code table")
+    // the scans' root paths, not the plan string: the string cuts a
+    // scan's location at spark.sql.maxMetadataStringLength characters,
+    // which a scratch path under the driver temp dir exceeds
+    def scanRoots(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => scanRoots(a.initialPlan)
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+      case _ => (p.children ++ p.subqueries).flatMap(scanRoots)
+    }
+    val roots = scanRoots(df.queryExecution.executedPlan)
+    assert(!roots.exists(_.contains("embeddings.parquet")) ||
+      roots.exists(_.contains("graft_pq-index-append_")), "stage 1 must scan the grown code table")
   }
 
   test("q_moving_avg: one user-partition exchange serves both window frames") {

@@ -308,4 +308,13 @@ class CorpusBuildSpec extends SparkTestBase {
     assert(t.readAt(clusteredVersion).select("doc_id", "pack_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == before)
   }
+
+  test("the session's artifact keeps its vocabulary inside its scratch path") {
+    val t = CorpusBuild.artifact(spark, dir)
+    val p = graft.core.IndexCache.scratchPath(spark, "corpus-build", dir)
+    assert(t.tablePath.startsWith(s"$p/"))
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"${t.tablePath}.vocab")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$p.vocab")),
+      "no sibling vocabulary may sit beside the scratch path")
+  }
 }

@@ -1,60 +1,33 @@
 package graft.medallion
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.codec.ConfluentWire
+import graft.codec.{ConfluentWire, WireFormat}
 import graft.gen.{EventGenerator, KafkaEnvelope}
-import graft.pipeline.Pipeline
-import graft.schema.InMemorySchemaRegistry
+import graft.ingest.RawIngest
+import graft.schema.{InMemorySchemaRegistry, SchemaRegistry}
+
+object MedallionSpec {
+
+  /** The reference's DAG on one envelope source: registry demux ingest
+    * into `<base>/raw`, then one run of the ACID chain; returns gold.
+    */
+  def chainGold(spark: SparkSession, source: DataFrame, registry: SchemaRegistry,
+                wire: WireFormat, base: String, permissive: Boolean = false): DataFrame = {
+    RawIngest.run(source, registry, wire, s"$base/raw", s"$base/_checkpoints/raw",
+      permissive).awaitTermination()
+    val t = TxMedallion.tables(spark, base)
+    TxMedallion.run(spark, s"$base/raw", t, s"$base/_checkpoints",
+      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+    t.gold.read()
+  }
+}
 
 class MedallionSpec extends SparkTestBase {
-
-  private def toEnvelopes(gen: EventGenerator,
-                          es: Seq[graft.gen.ProductEvent],
-                          registry: InMemorySchemaRegistry,
-                          startOffset: Long): Seq[KafkaEnvelope] =
-    gen.envelopes(es, registry, ConfluentWire, startOffset)
-
-  test("end-to-end pipeline: ingest -> bronze -> silver -> gold equals batch recompute") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    val gen = new EventGenerator(seed = 11)
-    val registry = new InMemorySchemaRegistry
-    // duplicates both within and across micro-batches exercise the
-    // state-store dedup (silver.py:23 semantics: first wins, state
-    // survives across batches)
-    val all = gen.events(120, duplicateEvery = 7)
-    val (b1, b2) = all.splitAt(60)
-
-    val stream = MemoryStream[KafkaEnvelope]
-    val paths = Pipeline.Paths(tmpDir("pipeline"))
-    val dayStart = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-
-    stream.addData(toEnvelopes(gen, b1, registry, 0))
-    stream.addData(toEnvelopes(gen, b2, registry, 60))
-    val gold = Pipeline.run(spark, stream.toDF(), registry, ConfluentWire, paths, dayStart)
-
-    assert(gold.count() > 0)
-    val expected = Medallion.batchGold(spark, paths.raw, dayStart)
-      .select("type", "color", "size", "count_type")
-      .collect().map(r => (r.getString(0), Option(r.getString(1)), Option(r.getString(2)), r.getLong(3)))
-      .toSet
-    val actual = gold
-      .select("type", "color", "size", "count_type")
-      .collect().map(r => (r.getString(0), Option(r.getString(1)), Option(r.getString(2)), r.getLong(3)))
-      .toSet
-    assert(actual == expected)
-
-    // dedup happened: total gold counts < raw row count
-    val totalGold = gold.agg(sum("count_type")).collect().head.getLong(0)
-    assert(totalGold < 120)
-    // v1 rows survive with null size/color (mergeSchema semantics, §7.5.5)
-    assert(gold.filter(col("size").isNull).count() > 0)
-  }
+  import MedallionSpec.chainGold
 
   test("pipeline works identically over the Glue wire format") {
     import spark.implicits._
@@ -62,11 +35,12 @@ class MedallionSpec extends SparkTestBase {
     val gen = new EventGenerator(seed = 21)
     val registry = new InMemorySchemaRegistry
     val stream = MemoryStream[KafkaEnvelope]
-    val paths = Pipeline.Paths(tmpDir("pipeline-glue"))
     stream.addData(gen.envelopes(gen.events(45), registry, graft.codec.GlueWire))
-    val gold = Pipeline.run(spark, stream.toDF(), registry, graft.codec.GlueWire, paths,
-      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+    val gold = chainGold(spark, stream.toDF(), registry, graft.codec.GlueWire,
+      tmpDir("pipeline-glue"))
     assert(gold.agg(sum("count_type")).collect().head.getLong(0) == 45)
+    // v1 rows survive with null size/color (mergeSchema semantics, §7.5.5)
+    assert(gold.filter(col("size").isNull).count() > 0)
   }
 
   test("permissive pipeline drops corrupt payloads and completes") {
@@ -80,31 +54,8 @@ class MedallionSpec extends SparkTestBase {
       value = ConfluentWire.frame(id, Array[Byte](9)), offset = 999L)
     val stream = MemoryStream[KafkaEnvelope]
     stream.addData(good :+ corrupt)
-    val paths = Pipeline.Paths(tmpDir("pipeline-permissive"))
-    val gold = Pipeline.run(spark, stream.toDF(), registry, ConfluentWire, paths,
-      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), permissive = true)
+    val gold = chainGold(spark, stream.toDF(), registry, ConfluentWire,
+      tmpDir("pipeline-permissive"), permissive = true)
     assert(gold.agg(sum("count_type")).collect().head.getLong(0) == 30)
-  }
-
-  test("incremental: re-running the pipeline with same checkpoints processes only new data") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    val gen = new EventGenerator(seed = 13)
-    val registry = new InMemorySchemaRegistry
-    val stream = MemoryStream[KafkaEnvelope]
-    val paths = Pipeline.Paths(tmpDir("pipeline-incr"))
-    val dayStart = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-
-    stream.addData(toEnvelopes(gen, gen.events(30), registry, 0))
-    val gold1 = Pipeline.run(spark, stream.toDF(), registry, ConfluentWire, paths, dayStart)
-    val n1 = gold1.agg(sum("count_type")).collect().head.getLong(0)
-    assert(n1 == 30)
-
-    // second run: 15 new events; raw table must grow by exactly 15
-    stream.addData(toEnvelopes(gen, new EventGenerator(seed = 14).events(15), registry, 30))
-    val gold2 = Pipeline.run(spark, stream.toDF(), registry, ConfluentWire, paths, dayStart)
-    val n2 = gold2.agg(sum("count_type")).collect().head.getLong(0)
-    assert(n2 == 45)
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.codec.{ConfluentWire, GlueWire}
 import graft.gen.{EventGenerator, KafkaEnvelope}
-import graft.pipeline.Pipeline
+import graft.medallion.MedallionSpec.chainGold
 
 /** In-process Confluent-REST-API server (JDK HttpServer, port 0) over
   * an [[InMemorySchemaRegistry]] — the fixture that lets the REAL HTTP
@@ -323,9 +323,7 @@ class HttpSchemaRegistrySpec extends SparkTestBase {
         val gen = new EventGenerator(seed = 61)
         val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[KafkaEnvelope]
         stream.addData(gen.envelopes(gen.events(40), reg, wire))
-        val gold = Pipeline.run(spark, stream.toDF(), reg, wire,
-          Pipeline.Paths(tmpDir(s"http-reg-$tag")),
-          java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+        val gold = chainGold(spark, stream.toDF(), reg, wire, tmpDir(s"http-reg-$tag"))
         assert(gold.agg(sum("count_type")).collect().head.getLong(0) == 40L,
           s"wire format $tag through the HTTP registry")
       }
