@@ -61,7 +61,10 @@ object SparkEntry {
     val registry = new InMemorySchemaRegistry
     val stream = MemoryStream[KafkaEnvelope]
     stream.addData(gen.envelopes(gen.events(900, duplicateEvery = 9), registry, ConfluentWire))
-    val base = java.nio.file.Files.createTempDirectory("graft-entry").toString
+    // under the driver temp dir, which Spark deletes when the context
+    // stops (the IndexCache.scratchPath convention)
+    val base = s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft-entry-" +
+      java.util.UUID.randomUUID()
     // dayStart from the epoch, not Timestamp.valueOf: the latter
     // parses in the JVM default TZ, which would empty the gold filter
     // on a non-UTC JVM (generated events are fixed UTC epochs)

@@ -4808,46 +4808,55 @@ object TxTable {
 
   /** Name-keyed schema union: existing column order is preserved, new
     * columns append; an existing column whose type changed fails —
-    * the add-nullable-columns evolution contract (same as the
-    * emulated mergeSchema path, RawIngest §7.5.6) — unless
-    * `allowWiden` (from [[TypeWideningProp]]) and the change is a
-    * legal widening, in which case the column takes the wider type.
+    * the add-nullable-columns evolution contract (Delta's
+    * mergeSchema) — unless `allowWiden` (from [[TypeWideningProp]])
+    * and the change is a legal widening, in which case the column
+    * takes the wider type. A struct column evolves the same way,
+    * recursively: it keeps its committed fields in order, takes the
+    * incoming struct's new fields after them, and a field one side
+    * lacks (or carries as nullable) becomes nullable — the null that
+    * files without it read as. A changed nested leaf type still fails.
     */
   private[core] def mergeSchemas(existing: Option[StructType], incoming: StructType,
                                  allowWiden: Boolean = false): StructType =
-    existing match {
-      // normalize away field metadata: the log stores schema as
-      // parseable DDL, and metadata like a DEFAULT declaration would
-      // make toDDL emit clauses fromDDL cannot read back
-      case None =>
-        StructType(incoming.map(f => StructField(f.name, f.dataType, nullable = true)))
-      case Some(cur) =>
-        val merged = cur.map { f =>
-          incoming.find(_.name == f.name) match {
-            case None => f
-            case Some(g) =>
-              val t =
-                if (g.dataType == f.dataType) f.dataType
-                // a STRICTER incoming nullability shape (non-null array
-                // elements / map values / struct fields) is always
-                // acceptable into the laxer committed type — parquet
-                // normalizes container nullability on read, so frames
-                // rebuilt from expressions routinely arrive strict
-                else if (acceptsStricter(f.dataType, g.dataType)) f.dataType
-                else if (allowWiden) widened(f.dataType, g.dataType).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"column ${f.name}: type ${g.dataType.simpleString} conflicts " +
-                      s"with committed ${f.dataType.simpleString} — not a legal " +
-                      "widening (byte/short/int/long chain, float/double)"))
-                else throw new IllegalArgumentException(
-                  s"column ${f.name}: type ${g.dataType.simpleString} conflicts with " +
-                    s"committed ${f.dataType.simpleString} — evolution adds columns, " +
-                    s"never changes types (set $TypeWideningProp=true for widening)")
-              f.copy(dataType = t)
-          }
-        }
-        val newFields = incoming.filterNot(g => cur.exists(_.name == g.name))
-        StructType((merged ++ newFields).map(f => StructField(f.name, f.dataType, nullable = true)))
+    // normalize away field metadata: the log stores schema as
+    // parseable DDL, and metadata like a DEFAULT declaration would
+    // make toDDL emit clauses fromDDL cannot read back
+    StructType(existing.fold(incoming.fields.toSeq)(mergeFields(_, incoming, allowWiden, ""))
+      .map(f => StructField(f.name, f.dataType, nullable = true)))
+
+  private def mergeFields(cur: StructType, incoming: StructType, allowWiden: Boolean,
+                          prefix: String): Seq[StructField] = {
+    val merged = cur.map { f =>
+      incoming.find(_.name == f.name) match {
+        case None => f.copy(nullable = true)
+        case Some(g) => f.copy(
+          dataType = mergeType(prefix + f.name, f.dataType, g.dataType, allowWiden),
+          nullable = f.nullable || g.nullable)
+      }
+    }
+    merged ++ incoming.filterNot(g => cur.exists(_.name == g.name)).map(_.copy(nullable = true))
+  }
+
+  private def mergeType(name: String, committed: DataType, incoming: DataType,
+                        allowWiden: Boolean): DataType =
+    // a STRICTER incoming nullability shape (non-null array elements /
+    // map values / struct fields) is always acceptable into the laxer
+    // committed type — parquet normalizes container nullability on
+    // read, so frames rebuilt from expressions routinely arrive strict
+    if (incoming == committed || acceptsStricter(committed, incoming)) committed
+    else (committed, incoming) match {
+      case (a: StructType, b: StructType) =>
+        StructType(mergeFields(a, b, allowWiden, s"$name."))
+      case _ if allowWiden => widened(committed, incoming).getOrElse(
+        throw new IllegalArgumentException(
+          s"column $name: type ${incoming.simpleString} conflicts " +
+            s"with committed ${committed.simpleString} — not a legal " +
+            "widening (byte/short/int/long chain, float/double)"))
+      case _ => throw new IllegalArgumentException(
+        s"column $name: type ${incoming.simpleString} conflicts with " +
+          s"committed ${committed.simpleString} — evolution adds columns, " +
+          s"never changes types (set $TypeWideningProp=true for widening)")
     }
 }
 

@@ -7,23 +7,27 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.codec.{ConfluentWire, GlueWire, WireFormat}
+import graft.core.TxTable
 import graft.functions.AvroDecode
 import graft.schema.SchemaRegistry
+import graft.streaming.TxTableSink
 
 /** Kafka(-shaped) → raw table ingest with per-record schema-registry
   * resolution — the reference's signature algorithm (ST10): per
   * micro-batch, collect the distinct schema keys, resolve each id
   * against the registry, decode each group with its own writer schema,
-  * and append all groups to one raw table whose schema widens as new
-  * versions appear (ingest.scala:123-177, ingest_raw.scala:119-156).
+  * and commit the groups to one raw [[TxTable]] whose schema widens as
+  * new versions appear (ingest.scala:123-177, ingest_raw.scala:119-156;
+  * the reference's raw is a Delta table with mergeSchema). Each
+  * micro-batch is one exactly-once commit, keyed by the streaming
+  * query id and the batch id.
   *
   * 100 TB notes (SURVEY.md §7.5.8): the driver-side collect is over
   * the *distinct schema ids* of a batch — bounded by registry size
-  * (~handfuls), never O(rows); the per-group loop is O(#schemas)
-  * appends; decode happens executor-side inside [[AvroDecode]] after
-  * the schema-key filter, so each row is decoded once per batch (the
-  * decoded groups are cached across the dead-letter probe and the
-  * write when a DLQ is configured).
+  * (~handfuls), never O(rows); decode happens executor-side inside
+  * [[AvroDecode]] after the schema-key filter, so each row is decoded
+  * once per batch (the decoded groups are cached across the
+  * dead-letter probe and the write when a DLQ is configured).
   */
 object RawIngest {
 
@@ -131,123 +135,51 @@ object RawIngest {
     } finally keyed.unpersist()
   }
 
-  /** Demux + append each group to the raw parquet table. Appending
-    * files of different (widening) schemas emulates Delta's
-    * mergeSchema=true (ST9); [[readRaw]] merges on read.
-    *
-    * `unifiedWrite = false` mirrors the reference's per-schema-group
-    * append loop (ingest.scala:142-171), which is at-least-once if a
-    * later iteration fails (hazard SURVEY.md §7.5.6). `true` unions
-    * the groups by name (null-padding narrow schemas) and performs
-    * ONE append per micro-batch — all-or-nothing with the checkpoint,
-    * i.e. effectively exactly-once.
+  /** Demux one micro-batch and commit it to the raw table as ONE
+    * exactly-once `appendBatch` under (`writerId`, `batchId`): the
+    * decoded groups are unioned by name with `allowMissingColumns`, so
+    * a narrow schema's rows read the wider one's fields as null, and
+    * the table's schema widens by name, nested struct fields included
+    * ([[TxTable]]'s mergeSchema). A crash before the log claim leaves
+    * the table at its old version; a redelivered batch is a no-op.
     */
   def demuxToTable(batch: DataFrame, registry: SchemaRegistry, wire: WireFormat,
-                   rawPath: String, permissive: Boolean = false,
+                   raw: TxTable, writerId: String, batchId: Long,
+                   permissive: Boolean = false,
                    deadLetterPath: Option[String] = None,
-                   unifiedWrite: Boolean = false,
                    dlqCorrupt: Boolean = true): Unit =
     demux(batch, registry, wire, permissive, deadLetterPath, dlqCorrupt) { groups =>
-      if (unifiedWrite && groups.nonEmpty)
-        groups.reduce(_.unionByName(_, allowMissingColumns = true))
-          .write.mode("append").parquet(rawPath)
-      else
-        groups.foreach(_.write.mode("append").parquet(rawPath)) // SNK4 analog
+      if (groups.nonEmpty)
+        raw.appendBatch(groups.reduce(_.unionByName(_, allowMissingColumns = true)),
+          writerId, batchId)
     }
 
-  private def stagingPath(root: org.apache.hadoop.fs.Path, batchId: Long) =
-    new org.apache.hadoop.fs.Path(root, s".staging_ingest_batch=$batchId")
-
-  private def targetPath(root: org.apache.hadoop.fs.Path, batchId: Long) =
-    new org.apache.hadoop.fs.Path(root, s"ingest_batch=$batchId")
-
-  /** ATOMIC multi-schema batch commit (SURVEY §7.5.6). The per-group
-    * append loop above is at-least-once: a crash between group
-    * appends publishes a partial batch. Here every group is staged
-    * into a dot-prefixed directory — invisible to parquet discovery —
-    * and the whole batch becomes visible via ONE directory rename to
-    * `ingest_batch=<id>/` (atomic on a POSIX/HDFS namespace; on
-    * rename-less object stores this slot is where a manifest commit
-    * goes). Crash before the rename ⇒ readers see nothing of the
-    * batch; crash after ⇒ the foreachBatch replay finds the published
-    * dir and skips ⇒ exactly-once end to end, per batch not per
-    * group. The batch id lands as a partition column — free commit
-    * lineage, and old batches drop by partition predicate.
-    *
-    * Use on a table written exclusively through this mode (mixing
-    * root-level files with partition dirs breaks Spark's partition
-    * discovery).
-    */
-  def demuxToTableAtomic(batch: DataFrame, registry: SchemaRegistry, wire: WireFormat,
-                         rawPath: String, batchId: Long, permissive: Boolean = false,
-                         deadLetterPath: Option[String] = None,
-                         dlqCorrupt: Boolean = true): Unit = {
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(rawPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(targetPath(root, batchId))) return // replay of a published batch
-    stageBatch(batch, registry, wire, rawPath, batchId, permissive, deadLetterPath,
-      dlqCorrupt)
-    publishBatch(spark, rawPath, batchId)
-  }
-
-  /** Stage all decode groups of a batch into the invisible staging
-    * dir (step 1 of [[demuxToTableAtomic]]; package-visible so the
-    * crash-injection spec can stop between the steps).
-    */
-  private[graft] def stageBatch(batch: DataFrame, registry: SchemaRegistry, wire: WireFormat,
-                                rawPath: String, batchId: Long, permissive: Boolean = false,
-                                deadLetterPath: Option[String] = None,
-                                dlqCorrupt: Boolean = true): Unit = {
-    val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(rawPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = stagingPath(root, batchId)
-    fs.mkdirs(root)
-    fs.delete(staging, true) // half-staged leftovers from a prior crash
-    demux(batch, registry, wire, permissive, deadLetterPath, dlqCorrupt) { groups =>
-      groups.foreach(_.write.mode("append").parquet(staging.toString))
-    }
-  }
-
-  /** Publish a staged batch with one atomic rename (step 2). */
-  private[graft] def publishBatch(spark: SparkSession, rawPath: String, batchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(rawPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = stagingPath(root, batchId)
-    val target = targetPath(root, batchId)
-    if (!fs.exists(staging)) return // empty batch staged nothing
-    if (fs.exists(target)) { fs.delete(staging, true); return }
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"batch publish rename failed: $staging -> $target")
-  }
-
-  /** Raw table scan with schema merging across v1/v2-era files. */
+  /** The raw table's current snapshot. */
   def readRaw(spark: SparkSession, rawPath: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(rawPath)
+    new TxTable(spark, rawPath).read()
 
   /** Streaming ingest: foreachBatch demux (SNK3), checkpointed,
     * AvailableNow (the Spark-4 successor of the reference's
-    * Trigger.Once, ST1).
+    * Trigger.Once, ST1). The writer identity of each commit is the
+    * checkpointed streaming query id, so a restart on the same
+    * checkpoint replays under the same key and a fresh checkpoint is a
+    * new writer whose batch 0 commits.
     */
   def run(source: DataFrame, registry: SchemaRegistry, wire: WireFormat,
           rawPath: String, checkpoint: String, permissive: Boolean = false,
           queryName: String = "graftRawIngest",
           deadLetterPath: Option[String] = None,
-          unifiedWrite: Boolean = false,
-          atomic: Boolean = false,
-          dlqCorrupt: Boolean = true): StreamingQuery =
+          dlqCorrupt: Boolean = true): StreamingQuery = {
+    val raw = new TxTable(source.sparkSession, rawPath)
     source.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (atomic)
-          demuxToTableAtomic(batch, registry, wire, rawPath, batchId, permissive,
-            deadLetterPath, dlqCorrupt)
-        else
-          demuxToTable(batch, registry, wire, rawPath, permissive, deadLetterPath,
-            unifiedWrite, dlqCorrupt)
+        demuxToTable(batch, registry, wire, raw,
+          TxTableSink.queryId(batch.sparkSession.sparkContext, "RawIngest.run"), batchId,
+          permissive, deadLetterPath, dlqCorrupt)
       }
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 }

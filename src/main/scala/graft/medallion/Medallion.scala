@@ -2,27 +2,15 @@ package graft.medallion
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.ingest.RawIngest
 
-/** The medallion stages' shared semantics: the raw-table stream
-  * source, the bronze/silver/gold transforms that both
-  * [[TxMedallion]] drivers (batch-incremental `run`, streaming
-  * `runStreaming`) apply, and [[batchGold]], the pure-batch
-  * recomputation their results are checked against.
+/** The medallion stages' shared semantics: the bronze/silver/gold
+  * transforms that both [[TxMedallion]] drivers (batch-incremental
+  * `run`, streaming `runStreaming`) apply, and [[batchGold]], the
+  * pure-batch recomputation their results are checked against.
   */
 object Medallion {
-
-  /** Schema of a staging dir, merged across schema-evolution eras. */
-  private def mergedSchema(spark: SparkSession, path: String): StructType =
-    spark.read.option("mergeSchema", "true").parquet(path).schema
-
-  private[medallion] def streamFrom(spark: SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema(mergedSchema(spark, path))
-      .option("mergeSchema", "true")
-      .parquet(path)
 
   /** bronze: flatten the raw envelope's parsedValue struct (P2). */
   private[medallion] def bronzeTransform(raw: DataFrame): DataFrame =

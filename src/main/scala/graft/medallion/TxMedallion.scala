@@ -7,32 +7,35 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.core.TxTable
 
 /** The medallion chain over [[graft.core.TxTable]] ACID tables — the
-  * shape the reference actually runs (every sink is Delta:
-  * /root/reference/notebooks/medallion/bronze.py:15-27, silver.py:31-38,
-  * gold.py:37-42), on our own transaction log instead of a missing
-  * jar. The stage transforms are [[Medallion]]'s; this object owns
-  * the sinks and their guarantees:
+  * shape the reference actually runs (every stage reads a Delta table
+  * and writes one: the reference's notebooks/medallion/bronze.py:14-27,
+  * silver.py:31-38, gold.py:37-42), on our own transaction log
+  * instead of a missing jar. The stage transforms are [[Medallion]]'s;
+  * this object owns the sinks and their guarantees. Raw is itself a
+  * TxTable ([[graft.ingest.RawIngest]]), so one primitive drives
+  * bronze and silver: append the transformed increment of the
+  * upstream table's commit log since a cursor, with the consumed
+  * upstream version riding in the same commit as the txn high-water
+  * mark of that cursor ([[advance]]). Stage progress and stage output
+  * commit ATOMICALLY — a crash between them cannot double-process or
+  * skip, and a run with nothing new upstream commits nothing.
   *
-  *   - **bronze**: the raw stream commits via foreachBatch
-  *     `appendBatch` — the (writer, batchId) txn action makes a batch
-  *     redelivered after a sink-success/checkpoint-fail crash a no-op
-  *     (exactly-once without relying on the sink's own file log).
-  *   - **silver**: INCREMENTAL batch over bronze's commit log —
-  *     `readChanges` scans only versions added since the last run; the
-  *     consumed bronze version rides in silver's own commit as its txn
-  *     high-water mark, so stage progress and stage output commit
-  *     ATOMICALLY (a crash between them cannot double-process or
-  *     skip). Cross-increment dedup is an anti-join against the
-  *     already-committed eventIds (the state-store-free batch form;
-  *     within an increment, deterministic first-by-timestamp/hash).
+  *   - **bronze**: raw's new commits, flattened, partitioned by
+  *     `type` (the reference's bronze.py:25 layout), cursor
+  *     `bronze@raw`.
+  *   - **silver**: bronze's new commits, deduplicated — within the
+  *     increment deterministically (first by timestamp, content hash
+  *     as tie-break), across increments by an anti-join against the
+  *     already-committed eventIds (the state-store-free batch form) —
+  *     cursor `silver@bronze`.
   *   - **gold**: one atomic `overwrite` of the complete-mode
   *     aggregate — readers see the old or the new day-mix, never the
   *     torn directory a plain overwrite exposes mid-write.
   *
   * At 100 TB this is the production template: each stage is a
   * scheduled incremental job, restart-safe at every boundary, and the
-  * bronze/silver tables stay compactable ([[TxTable.compact]]) and
-  * vacuumable online, with readers snapshot-isolated throughout.
+  * tables stay compactable ([[TxTable.compact]]) and vacuumable
+  * online, with readers snapshot-isolated throughout.
   */
 object TxMedallion {
 
@@ -43,43 +46,42 @@ object TxMedallion {
     new TxTable(spark, s"$base/silver_tx"),
     new TxTable(spark, s"$base/gold_tx"))
 
-  /** Writer id under which silver records the bronze version it has
-    * consumed — progress bookkeeping INSIDE the transaction log.
+  /** Writer ids under which bronze and silver record the upstream
+    * version they have consumed — progress bookkeeping INSIDE the
+    * transaction log.
     */
+  private[medallion] val BronzeCursor = "bronze@raw"
   private[medallion] val SilverCursor = "silver@bronze"
 
-  /** Bronze for both drivers: drain the raw table's unconsumed files
-    * into bronze, one exactly-once `appendBatch` per micro-batch, under
-    * the one checkpoint `<checkpointBase>/bronze_tx`. The layout is the
-    * reference's partitioned bronze (bronze.py:25, partitionBy("type")):
-    * value-pure files per type, so downstream type filters prune on
-    * manifest stats alone.
+  /** The one stage step: read `cursor`'s consumed version from
+    * `downstream`'s log, `transform` the rows `upstream` added since
+    * then up to its head, and append them under `TxnId(cursor, head)`.
+    * Compaction commits upstream add no rows and only move the cursor.
     */
-  private def drainBronze(spark: SparkSession, rawPath: String, t: Tables,
-                          checkpointBase: String, queryName: String): Unit =
-    Medallion.bronzeTransform(Medallion.streamFrom(spark, rawPath))
-      .writeStream
-      .queryName(queryName)
-      .foreachBatch((batch: DataFrame, id: Long) =>
-        t.bronze.appendBatch(batch, "bronze", id, partitionBy = Seq("type")))
-      .option("checkpointLocation", s"$checkpointBase/bronze_tx")
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+  private def advance(upstream: TxTable, downstream: TxTable, cursor: String,
+                      partitionBy: Seq[String] = Nil)(transform: DataFrame => DataFrame): Unit = {
+    val from = downstream.state().txns.getOrElse(cursor, -1L)
+    val head = upstream.version
+    if (head > from)
+      downstream.append(transform(upstream.readChanges(from, head)),
+        Some(TxTable.TxnId(cursor, head)), partitionBy)
+  }
+
+  private def bronze(spark: SparkSession, rawPath: String, t: Tables): Unit =
+    advance(new TxTable(spark, rawPath), t.bronze, BronzeCursor, Seq("type"))(
+      Medallion.bronzeTransform)
 
   /** One scheduled run of the chain (the AvailableNow analog of the
-    * reference's Trigger.Once DAG): drain the raw table into bronze,
-    * advance silver over bronze's new commits, rebuild gold. Safe to
-    * re-run at any time; every stage is idempotent.
+    * reference's Trigger.Once DAG): advance bronze over raw's new
+    * commits and silver over bronze's, rebuild gold. Safe to re-run at
+    * any time; every stage is idempotent. All progress lives in the
+    * tables' logs, so `checkpointBase` is unused; it stays in the
+    * signature for the callers that share it with [[runStreaming]].
     */
   def run(spark: SparkSession, rawPath: String, t: Tables, checkpointBase: String,
           dayStart: java.sql.Timestamp): Unit = {
-    drainBronze(spark, rawPath, t, checkpointBase, "graftTxBronze")
-
-    val from = t.silver.state().txns.getOrElse(SilverCursor, -1L)
-    val to = t.bronze.version
-    if (to > from) {
-      val fresh = t.bronze.readChanges(from, to)
+    bronze(spark, rawPath, t)
+    advance(t.bronze, t.silver, SilverCursor) { fresh =>
       // deterministic first-per-eventId within the increment: earliest
       // timestamp, content hash as the replay-stable tie-break (the
       // upsertBatch convention — batch/partition order never decides)
@@ -95,10 +97,8 @@ object TxMedallion {
       val novel =
         if (t.silver.version < 0) firstPer
         else firstPer.join(t.silver.read().select(col("eventId")), Seq("eventId"), "left_anti")
-      t.silver.append(Medallion.silverColumns(novel),
-        Some(TxTable.TxnId(SilverCursor, to)))
+      Medallion.silverColumns(novel)
     }
-
     t.gold.overwrite(Medallion.goldAgg(t.silver.read(), dayStart))
   }
 
@@ -107,9 +107,10 @@ object TxMedallion {
     * ([[graft.streaming.TxTableSource]]) — the reference's
     * Delta-as-streaming-source pattern
     * (/root/reference/notebooks/medallion/bronze.py:14-17) on the
-    * native log. Differences from [[run]]'s batch-incremental silver:
-    * progress lives in the streaming checkpoint (offset = table
-    * version) instead of a txn cursor, dedup is the state-store
+    * native log. Bronze is [[run]]'s cursor step. Differences from
+    * [[run]]'s batch-incremental silver: progress lives in the
+    * streaming checkpoint (offset = table version) instead of a txn
+    * cursor, dedup is the state-store
     * `dropDuplicates` (the silver.py semantics) instead of an
     * anti-join, and exactly-once is the checkpoint + idempotent
     * `appendBatch` pair — redelivery of a batch after a
@@ -120,7 +121,7 @@ object TxMedallion {
     */
   def runStreaming(spark: SparkSession, rawPath: String, t: Tables,
                    checkpointBase: String, dayStart: java.sql.Timestamp): Unit = {
-    drainBronze(spark, rawPath, t, checkpointBase, "graftTxBronzeStream")
+    bronze(spark, rawPath, t)
     if (t.bronze.version < 0) return // nothing ingested yet: no schema to stream
 
     val silverQ = Medallion.silverColumns(

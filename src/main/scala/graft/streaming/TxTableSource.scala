@@ -203,25 +203,31 @@ class TxTableSink(sqlContext: SQLContext, tablePath: String,
     val batchDF = GraftStreamBridge.asBatchDF(data)
     if (mode == OutputMode.Complete()) table.overwrite(batchDF, partitionCols)
     else {
-      // the checkpointed streaming query id — the writer identity the
-      // (writerId, batchId) idempotence key needs to survive restarts.
-      // A missing identity must fail LOUDLY: any path-keyed fallback
-      // would put two different queries (each with its own batchId
-      // counter restarting at 0) in one idempotence key space, and the
-      // second query's batches would be silently dropped as
-      // "redeliveries" of the first's
-      val queryId = Option(sqlContext.sparkContext
-          .getLocalProperty("sql.streaming.queryId"))
-        .getOrElse(throw new IllegalStateException(
-          "graft-txtable sink: no sql.streaming.queryId local property — " +
-            "addBatch was invoked outside a streaming query; call " +
-            "TxTable.appendBatch(df, writerId, batchId) with an explicit " +
-            "writer identity instead"))
+      val queryId = TxTableSink.queryId(sqlContext.sparkContext, "graft-txtable sink")
       table.appendBatch(batchDF, queryId, batchId, partitionCols)
     }
   }
 
   override def toString: String = s"TxTableSink[$tablePath]"
+}
+
+object TxTableSink {
+
+  /** The checkpointed streaming query id — the writer identity a
+    * (writerId, batchId) idempotence key needs to survive restarts.
+    * A missing identity fails LOUDLY: any path-keyed fallback would put
+    * two different queries (each with its own batchId counter
+    * restarting at 0) in one idempotence key space, and the second
+    * query's batches would be silently dropped as "redeliveries" of
+    * the first's.
+    */
+  def queryId(sc: org.apache.spark.SparkContext, caller: String): String =
+    Option(sc.getLocalProperty("sql.streaming.queryId"))
+      .getOrElse(throw new IllegalStateException(
+        s"$caller: no sql.streaming.queryId local property — the batch was " +
+          "committed outside a streaming query; call " +
+          "TxTable.appendBatch(df, writerId, batchId) with an explicit " +
+          "writer identity instead"))
 }
 
 /** `spark.readStream.format("graft-txtable").option("path", dir)` —

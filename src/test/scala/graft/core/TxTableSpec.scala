@@ -99,6 +99,26 @@ class TxTableSpec extends SparkTestBase {
       t.append(Seq((3, "c")).toDF("id", "v")) // id: int vs committed bigint
     }
     assert(e.getMessage.contains("conflicts"), e.getMessage)
+
+    // nested: a struct column takes new fields by name, after the
+    // committed ones; a batch without them reads them as null
+    val n = table()
+    n.append(spark.sql("SELECT 1L AS id, named_struct('a', 'x', 'size', 'm') AS s"))
+    n.append(spark.sql("SELECT 2L AS id, named_struct('a', 'y') AS s"))
+    n.append(spark.sql(
+      "SELECT 3L AS id, named_struct('a', 'z', 'size', 'l', 'color', 'red') AS s"))
+    assert(n.state().schema.get("s").dataType.asInstanceOf[
+      org.apache.spark.sql.types.StructType].fieldNames.toSeq == Seq("a", "size", "color"))
+    val nested = n.read().orderBy("id")
+      .select("s.a", "s.size", "s.color").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)), Option(r.getString(2)))).toSeq
+    assert(nested == Seq(("x", Some("m"), None), ("y", None, None),
+      ("z", Some("l"), Some("red"))))
+    val ne = intercept[IllegalArgumentException] {
+      n.append(spark.sql("SELECT 4L AS id, named_struct('a', 4) AS s")) // s.a: int vs string
+    }
+    assert(ne.getMessage.contains("column s.a") && ne.getMessage.contains("conflicts"),
+      ne.getMessage)
   }
 
   test("compact swaps the live set in one commit and preserves time travel") {

@@ -5,10 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.codec.{ConfluentWire, GlueWire}
+import graft.core.TxTable
 import graft.gen.EventGenerator
 import graft.schema.InMemorySchemaRegistry
 
 class RawIngestSpec extends SparkTestBase {
+
+  private def tx(path: String): TxTable = new TxTable(spark, path)
 
   test("demux splits a mixed v1/v2 batch by schema and decodes each group (Confluent)") {
     val gen = new EventGenerator(seed = 1)
@@ -16,7 +19,7 @@ class RawIngestSpec extends SparkTestBase {
     val es = gen.events(90)
     val batch = gen.envelopeDF(spark, es, registry, ConfluentWire)
     val raw = tmpDir("raw-confluent")
-    RawIngest.demuxToTable(batch, registry, ConfluentWire, raw)
+    RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(raw), "spec", 0L)
     val out = RawIngest.readRaw(spark, raw).select(col("parsedValue.*"))
     assert(out.count() == 90)
     // 1:2 v1:v2 mix — v1 rows decode with the v1 schema, so size/color are null after merge
@@ -31,59 +34,83 @@ class RawIngestSpec extends SparkTestBase {
     val registry = new InMemorySchemaRegistry
     val batch = gen.envelopeDF(spark, gen.events(30), registry, GlueWire)
     val raw = tmpDir("raw-glue")
-    RawIngest.demuxToTable(batch, registry, GlueWire, raw)
+    RawIngest.demuxToTable(batch, registry, GlueWire, tx(raw), "spec", 0L)
     val out = RawIngest.readRaw(spark, raw)
     assert(out.count() == 30)
     assert(out.select("parsedValue.productId").distinct().count() <= 3)
   }
 
-  test("unifiedWrite appends one merged batch with identical read semantics") {
-    val gen = new EventGenerator(seed = 6)
-    val registry = new InMemorySchemaRegistry
-    val batch = gen.envelopeDF(spark, gen.events(60), registry, ConfluentWire)
-    val raw = tmpDir("raw-unified")
-    RawIngest.demuxToTable(batch, registry, ConfluentWire, raw, unifiedWrite = true)
-    val out = RawIngest.readRaw(spark, raw).select(col("parsedValue.*"))
-    assert(out.count() == 60)
-    assert(out.filter(col("size").isNull).count() == 20) // v1 rows null-padded
-    assert(out.filter(col("color").isNotNull).count() == 40)
-  }
-
-  test("atomic commit: a crash between staging and publish leaves NOTHING visible; " +
-    "publish is one rename; replays are idempotent") {
+  test("a crash between the staged write and the log claim leaves raw unchanged; " +
+    "a replayed (writer, batch) commits once") {
     val gen = new EventGenerator(seed = 11)
     val registry = new InMemorySchemaRegistry
     val batch = gen.envelopeDF(spark, gen.events(60), registry, ConfluentWire)
-    val raw = tmpDir("raw-atomic")
+    val raw = tx(tmpDir("raw-crash"))
+    RawIngest.demuxToTable(batch, registry, ConfluentWire, raw, "spec", 0L)
+    assert(raw.version == 0L && RawIngest.readRaw(spark, raw.tablePath).count() == 60)
 
-    // crash injection: stage the full multi-schema batch, then "die"
-    // before the publish rename — a reader must see an EMPTY table
-    // (the per-group append loop would already expose partial groups)
-    RawIngest.stageBatch(batch, registry, ConfluentWire, raw, batchId = 0L)
-    val rootFiles = new java.io.File(raw).listFiles()
-    assert(rootFiles != null && rootFiles.forall(_.getName.startsWith(".")),
-      "staged data leaked outside the invisible staging dir")
-    // parquet discovery sees no data files at all
-    intercept[Exception] { spark.read.parquet(raw).count() }
+    // crash injection: batch 1's groups are staged, then the writer
+    // dies before claiming the log — readers see the old version only
+    val batch1 = gen.envelopeDF(spark, gen.events(30), registry, ConfluentWire)
+    raw.beforeCommitHook = () => throw new IllegalStateException("crash before claim")
+    intercept[IllegalStateException] {
+      RawIngest.demuxToTable(batch1, registry, ConfluentWire, raw, "spec", 1L)
+    }
+    assert(raw.version == 0L)
+    assert(RawIngest.readRaw(spark, raw.tablePath).count() == 60)
 
-    // recovery replay of the same batch: restages and publishes all
-    // groups in one rename
-    RawIngest.demuxToTableAtomic(batch, registry, ConfluentWire, raw, batchId = 0L)
-    val out = RawIngest.readRaw(spark, raw)
-    assert(out.count() == 60)
-    assert(out.select("parsedValue.eventId").distinct().count() == 60)
-    // the commit id is queryable lineage (discovery infers it as int)
-    assert(out.select("ingest_batch").distinct().collect()
-      .map(_.getAs[Number](0).longValue).toSeq == Seq(0L))
+    // the recovery replay commits the whole batch in one version; a
+    // further redelivery of the same (writer, batch) is a no-op
+    RawIngest.demuxToTable(batch1, registry, ConfluentWire, raw, "spec", 1L)
+    RawIngest.demuxToTable(batch1, registry, ConfluentWire, raw, "spec", 1L)
+    assert(raw.version == 1L)
+    val out = RawIngest.readRaw(spark, raw.tablePath)
+    assert(out.count() == 90)
+    assert(out.select("parsedValue.eventId").distinct().count() == 90)
+  }
 
-    // at-least-once replay of a PUBLISHED batch is a no-op (no dupes)
-    RawIngest.demuxToTableAtomic(batch, registry, ConfluentWire, raw, batchId = 0L)
-    assert(RawIngest.readRaw(spark, raw).count() == 60)
+  test("raw's schema evolves both ways: v1-only after mixed, mixed after v1-only") {
+    val gen = new EventGenerator(seed = 6)
+    val registry = new InMemorySchemaRegistry
+    def mixed(n: Int) = gen.envelopeDF(spark, gen.events(n), registry, ConfluentWire)
+    def v1Only(n: Int) = gen.envelopeDF(spark, gen.events(n).filterNot(_.isV2),
+      registry, ConfluentWire)
+    val mixedFirst = tx(tmpDir("raw-mixed-first"))
+    RawIngest.demuxToTable(mixed(60), registry, ConfluentWire, mixedFirst, "spec", 0L)
+    RawIngest.demuxToTable(v1Only(30), registry, ConfluentWire, mixedFirst, "spec", 1L)
+    val out = RawIngest.readRaw(spark, mixedFirst.tablePath).select(col("parsedValue.*"))
+    assert(out.count() == 70)
+    assert(out.filter(col("size").isNull).count() == 30) // v1 rows null-padded
+    assert(out.filter(col("color").isNotNull).count() == 40)
 
-    // a second batch publishes alongside the first
-    val batch2 = gen.envelopeDF(spark, gen.events(30), registry, ConfluentWire)
-    RawIngest.demuxToTableAtomic(batch2, registry, ConfluentWire, raw, batchId = 1L)
-    assert(RawIngest.readRaw(spark, raw).count() == 90)
+    val v1First = tx(tmpDir("raw-v1-first"))
+    RawIngest.demuxToTable(v1Only(30), registry, ConfluentWire, v1First, "spec", 0L)
+    RawIngest.demuxToTable(mixed(60), registry, ConfluentWire, v1First, "spec", 1L)
+    val out2 = RawIngest.readRaw(spark, v1First.tablePath).select(col("parsedValue.*"))
+    assert(out2.columns.toSeq ==
+      Seq("productId", "eventId", "type", "timestamp", "size", "color"))
+    assert(out2.count() == 70)
+    assert(out2.filter(col("size").isNull).count() == 30)
+  }
+
+  test("RawIngest.run on a new checkpoint over an existing raw table appends its batch 0") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val gen = new EventGenerator(seed = 17)
+    val registry = new InMemorySchemaRegistry
+    val raw = tmpDir("raw-two-checkpoints")
+    def ingest(n: Int, ck: String): Unit = {
+      val stream = MemoryStream[graft.gen.KafkaEnvelope]
+      stream.addData(gen.envelopes(gen.events(n), registry, ConfluentWire))
+      RawIngest.run(stream.toDF(), registry, ConfluentWire, raw, ck).awaitTermination()
+    }
+    ingest(20, tmpDir("raw-ck-a"))
+    // a fresh checkpoint is a fresh writer: its batch 0 is new data,
+    // never a replay of the first query's batch 0
+    ingest(10, tmpDir("raw-ck-b"))
+    assert(new TxTable(spark, raw).version == 1L)
+    assert(RawIngest.readRaw(spark, raw).count() == 30)
   }
 
   test("unknown schema id: fails the batch by default, dead-letters when configured") {
@@ -97,12 +124,14 @@ class RawIngestSpec extends SparkTestBase {
     val batch = good.unionByName(stranger)
 
     intercept[NoSuchElementException] {
-      RawIngest.demuxToTable(batch, registry, ConfluentWire, tmpDir("raw-unknown"))
+      RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(tmpDir("raw-unknown")),
+        "spec", 0L)
     }
 
     val raw = tmpDir("raw-dlq-main")
     val dlq = tmpDir("raw-dlq")
-    RawIngest.demuxToTable(batch, registry, ConfluentWire, raw, deadLetterPath = Some(dlq))
+    RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(raw), "spec", 0L,
+      deadLetterPath = Some(dlq))
     assert(RawIngest.readRaw(spark, raw).count() == 9)
     val dead = spark.read.parquet(dlq)
     assert(dead.count() == 1)
@@ -119,7 +148,8 @@ class RawIngestSpec extends SparkTestBase {
     val batch = good.unionByName(poison)
     val raw = tmpDir("raw-poison-main")
     val dlq = tmpDir("raw-poison-dlq")
-    RawIngest.demuxToTable(batch, registry, ConfluentWire, raw, deadLetterPath = Some(dlq))
+    RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(raw), "spec", 0L,
+      deadLetterPath = Some(dlq))
     assert(RawIngest.readRaw(spark, raw).count() == 6)
     assert(spark.read.parquet(dlq).count() == 1)
   }
@@ -136,12 +166,14 @@ class RawIngestSpec extends SparkTestBase {
     val batch = good.unionByName(corrupt)
 
     val rawPermissive = tmpDir("raw-permissive")
-    RawIngest.demuxToTable(batch, registry, ConfluentWire, rawPermissive, permissive = true)
+    RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(rawPermissive), "spec", 0L,
+      permissive = true)
     assert(RawIngest.readRaw(spark, rawPermissive).count() == 12)
 
     val rawFailfast = tmpDir("raw-failfast")
     intercept[Exception] {
-      RawIngest.demuxToTable(batch, registry, ConfluentWire, rawFailfast, permissive = false)
+      RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(rawFailfast), "spec", 0L,
+        permissive = false)
     }
   }
 
@@ -164,7 +196,7 @@ class RawIngestSpec extends SparkTestBase {
     val dlq = tmpDir("raw-rowdlq")
     // even under FAILFAST semantics (permissive = false), a configured
     // DLQ isolates the bad ROW instead of wedging the batch
-    RawIngest.demuxToTable(batch, registry, ConfluentWire, raw,
+    RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(raw), "spec", 0L,
       permissive = false, deadLetterPath = Some(dlq))
     val out = RawIngest.readRaw(spark, raw)
     assert(out.count() == 20, "every healthy row of every group must land")
@@ -208,7 +240,8 @@ class RawIngestSpec extends SparkTestBase {
     val dlq = tmpDir("raw-strictdlq")
     intercept[Exception] {
       RawIngest.demuxToTable(good.unionByName(corrupt), registry, ConfluentWire,
-        raw, permissive = false, deadLetterPath = Some(dlq), dlqCorrupt = false)
+        tx(raw), "spec", 0L, permissive = false, deadLetterPath = Some(dlq),
+        dlqCorrupt = false)
     }
     // ...while an UNKNOWN schema id still dead-letters under the same flag
     val strangerValue = ConfluentWire.frame(9999, Array[Byte](1, 2, 3))
@@ -216,7 +249,8 @@ class RawIngestSpec extends SparkTestBase {
       .withColumn("value", lit(strangerValue))
     val raw2 = tmpDir("raw-strictdlq-main2")
     RawIngest.demuxToTable(good.unionByName(stranger), registry, ConfluentWire,
-      raw2, permissive = false, deadLetterPath = Some(dlq), dlqCorrupt = false)
+      tx(raw2), "spec", 0L, permissive = false, deadLetterPath = Some(dlq),
+      dlqCorrupt = false)
     assert(RawIngest.readRaw(spark, raw2).count() == 8)
     assert(spark.read.parquet(dlq).count() == 1)
     assert(spark.read.parquet(dlq).select("value").collect().head

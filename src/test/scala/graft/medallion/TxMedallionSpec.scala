@@ -94,6 +94,12 @@ class TxMedallionSpec extends SparkTestBase {
       goldSet(Medallion.batchGold(spark, rawPath, dayStart)))
     val silverV1 = t.silver.version
     val bronzeV1 = t.bronze.version
+    // bronze's progress lives in its own log, under the bronze@raw
+    // cursor, not in a streaming checkpoint
+    assert(!new java.io.File(s"$ckpt/bronze_tx").exists(),
+      "run must keep no bronze checkpoint")
+    assert(t.bronze.state().txns(TxMedallion.BronzeCursor) ==
+      new graft.core.TxTable(spark, rawPath).version)
 
     // run 2: second half PLUS exact redeliveries of first-half events
     // (duplicateEvery spans the split) — cross-increment dedup must hold
@@ -147,8 +153,8 @@ class TxMedallionSpec extends SparkTestBase {
     val t = TxMedallion.tables(spark, base)
     val stream = MemoryStream[KafkaEnvelope]
 
-    // RawIngest and bronze run as streaming queries on cloned sessions:
-    // the codegen cache must outlive each query's session
+    // RawIngest runs as a streaming query on a cloned session: the
+    // codegen cache must outlive each query's session
     def trigger(batch: Seq[graft.gen.ProductEvent], offset: Int): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       stream.addData(gen.envelopes(batch, registry, ConfluentWire, offset))

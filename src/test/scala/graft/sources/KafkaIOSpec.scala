@@ -62,7 +62,8 @@ class KafkaIOSpec extends SparkTestBase {
       $"key", $"value", lit("products").as("topic"), lit(0).as("partition"),
       lit(0L).as("offset"), current_timestamp().as("timestamp"), lit(0).as("timestampType"))
     val raw = tmpDir("kafkaio-raw")
-    RawIngest.demuxToTable(envelope, registry, ConfluentWire, raw)
+    RawIngest.demuxToTable(envelope, registry, ConfluentWire,
+      new graft.core.TxTable(spark, raw), "spec", 0L)
     assert(RawIngest.readRaw(spark, raw).select("parsedValue.type").collect()
       .head.getString(0) == "pants")
   }
