@@ -54,7 +54,9 @@ import org.json4s.jackson.JsonMethods
   * Row-level verbs. [[merge]], [[mergeConditional]], [[mergeScd2]],
   * [[delete]], [[deleteKeys]], [[deleteMergeOnRead]], [[update]],
   * [[updateMergeOnRead]] and [[replaceWhere]] share one private
-  * rewrite core: the provenance collect that names the files holding
+  * rewrite core. Every keyed change has one planner: [[merge]] and
+  * [[deleteKeys]] are clause sets of [[mergeConditional]]. The core
+  * is the provenance collect that names the files holding
   * affected rows, one null-safe key condition over quoted column
   * references, one SET projection (both updates), one deletion-vector
   * path (both merge-on-read verbs), and one commit tail — the
@@ -2004,125 +2006,69 @@ class TxTable(spark: SparkSession, val tablePath: String,
 
   /** Copy-on-write upsert (MERGE): target rows whose key matches a
     * source row are replaced by that source row; unmatched source rows
-    * insert. Only files that ACTUALLY contain a matching key are
-    * rewritten — found by a file-provenance semi-join (`input_file_name`
-    * against the source keys, the published Delta MERGE strategy), so a
-    * merge touching 0.1% of the keys of a key-clustered table rewrites
-    * the few overlapping files, never the table. The swap lands in ONE
+    * insert. It is the clause set `WHEN MATCHED UPDATE SET * / WHEN
+    * NOT MATCHED INSERT *` of [[mergeConditional]], which plans it:
+    * only files that ACTUALLY contain a matching key are rewritten —
+    * found by a file-provenance scan (`input_file_name` against the
+    * source keys, the published Delta MERGE strategy), so a merge
+    * touching 0.1% of the keys of a key-clustered table rewrites the
+    * few overlapping files, never the table. The swap lands in ONE
     * atomic commit (readers see the old or the new rows, never a mix);
     * if a concurrent overwrite/compaction removed a touched file, the
     * merge aborts loudly — rerun against the new state. Source keys
     * must be unique (checked): duplicate matches would make the result
     * depend on row order. Schema merges by name (new source columns
-    * append, nullable).
+    * append, nullable); explicit identity values drag the high-water
+    * mark forward from the one source audit.
     */
   def merge(source: DataFrame, keys: Seq[String]): Unit = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    // ONE materialization of the source: it otherwise re-evaluates for
-    // the duplicate-key check, the provenance semi-join, the rewrite
-    // union and both CDF joins — and pinning a non-deterministic
-    // source (a rand()-derived column, a table mutating mid-merge) to
-    // a single evaluation is what makes the dup check prove the SAME
-    // rows the commit writes
-    source.persist()
-    try merge0(source, keys) finally source.unpersist()
-  }
-
-  private def merge0(source0: DataFrame, keys0: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.lit
-    // surface → physical at the boundary; everything below is physical
-    val snap = state()
-    val source = computeGenerated(snap, physicalize(snap, source0))
-    val keys = keys0.map(physicalName(snap, _))
-    // one job: dup-key proof + conflict-rule key ranges + identity
-    // high-water (was three sequential aggregates over the source)
-    val (mayMatch, identitySync) = auditSourceKeys(snap, source, keys,
-      s"merge source has duplicate keys on (${keys0.mkString(", ")}) — " +
-        "a multi-match replace would be row-order-dependent",
-      syncIdentity = true)
-    // the append path re-maps from the ORIGINAL surface frame: the
-    // already-physicalized one would trip the retired-name guard
-    if (snap.files.isEmpty) { append(source0); return }
-    val srcKeys = source.select(keys.map(qcol(_)): _*).distinct()
-    val touched = filesWithKeys(withFile(readState(snap)), srcKeys, keys)
-    // ONE cached read of the touched files feeds the survivor set AND
-    // the change record — without the cache the rewrite would rescan
-    // them once per consumer
-    val touchedRows = readState(snap.copy(files = touched))
-    if (touched.nonEmpty) touchedRows.persist()
-    val (staged, stagedCdf, newData) = try {
-      // survivors of the touched files (keys not replaced) + all
-      // source rows; files without a matching key are untouched by
-      // construction
-      val data =
-        if (touched.isEmpty) source
-        // survivors may carry pre-declaration rows (null generated
-        // values) — backfill them or the merge's own gate rejects its
-        // carried rows; source rows were computed/validated above
-        else recomputeGenerated(snap, touchedRows.as("t")
-          .join(srcKeys.as("s"), keyCond(keys, "t", "s"), "left_anti"))
-          .unionByName(source, allowMissingColumns = true)
-      // row-level change record, committed ATOMICALLY with the
-      // rewrite: replaced target rows (pre-image), their replacements
-      // (post-image), and genuinely new keys (insert) — what lets an
-      // incremental consumer survive an upstream merge
-      // (readChangeFeed) instead of hard-failing on the removes
-      val tgtKeys = touchedRows.select(keys.map(qcol(_)): _*).distinct()
-      def changes(rows: DataFrame, keyRows: DataFrame, how: String, kind: String) =
-        rows.as("t").join(keyRows.as("s"), keyCond(keys, "t", "s"), how)
-          .withColumn(ChangeTypeCol, lit(kind))
-      val cdfFrame = changes(touchedRows, srcKeys, "left_semi", "update_preimage")
-        .unionByName(changes(source, tgtKeys, "left_semi", "update_postimage"),
-          allowMissingColumns = true)
-        .unionByName(changes(source, tgtKeys, "left_anti", "insert"),
-          allowMissingColumns = true)
-      val (s1, s2) = stageDataAndCdf(data, cdfFrame)
-      (s1, s2, data)
-    } finally if (touched.nonEmpty) touchedRows.unpersist()
-    // LOGICAL conflict rule (Delta's ConcurrentAppend/DeleteRead exceptions):
-    // a concurrent commit aborts the merge only if it could break the
-    // replace-by-key contract — it touched a file this merge rewrites,
-    // changed schema/constraints, or appended files whose key ranges
-    // might overlap the source keys
-    commitRowLevel("merge", snap, Rewrite(touched, staged, stagedCdf), mayMatch,
-      checkUnder = Some(mergeSchemas(snap.schema, newData.schema, widenOn(snap)))) { st =>
-      identitySync :+ Meta(mergeSchemas(st.schema, newData.schema, widenOn(st)).toDDL)
-    }
+    import TxTable.{MatchedUpdate, NotMatchedInsert}
+    mergeConditional0("merge", source, keys, Seq(MatchedUpdate(None)),
+      Some(NotMatchedInsert(None)), Nil, txn = None, evolveSchema = false)
   }
 
   /** Entry to the conditional-MERGE builder ([[TxTable.MergeBuilder]]). */
   def mergeBuilder(source: DataFrame, keys: Seq[String]): TxTable.MergeBuilder =
     new TxTable.MergeBuilder(this, source, keys)
 
-  /** Conditional MERGE — the full published MERGE surface on top of
-    * [[merge]]'s copy-on-write machinery: per target row with a
-    * key-matching source row the first applicable `matched` clause
-    * runs (UPDATE SET / UPDATE SET * / DELETE); per source row with
-    * no target match the optional insert clause runs; per target row
-    * with no source match the first applicable `bySource` clause runs
-    * (the `WHEN NOT MATCHED BY SOURCE` family). Rows no clause claims
-    * are untouched. Clause SQL is written over SURFACE names with
-    * `t.`/`s.` qualifiers (see [[TxTable.MatchedClause]]).
+  /** Conditional MERGE — the full published MERGE surface, and the
+    * one keyed-change planner: [[merge]] (UPDATE SET * + INSERT *) and
+    * [[deleteKeys]] (DELETE over a key set) are clause sets of it. Per
+    * target row with a key-matching source row the first applicable
+    * `matched` clause runs (UPDATE SET / UPDATE SET * / DELETE); per
+    * source row with no target match the optional insert clause runs;
+    * per target row with no source match the first applicable
+    * `bySource` clause runs (the `WHEN NOT MATCHED BY SOURCE` family).
+    * Rows no clause claims are untouched. Clause SQL is written over
+    * SURFACE names with `t.`/`s.` qualifiers (see
+    * [[TxTable.MatchedClause]]).
     *
     * Scale shape: only files that can change are rewritten — files
-    * holding a matching key (via the same `input_file_name`
-    * provenance semi-join as [[merge]]) when matched clauses exist,
-    * plus files holding an unmatched row satisfying some by-source
-    * condition (a predicate-pushed provenance scan). Inserts
-    * anti-join the source against the keys of the MATCHING files
-    * only (a key absent there is absent everywhere, by provenance
-    * construction), so cost is O(touched files + source), never
-    * O(table). The whole effect — removes, adds, and the row-level
-    * change record (update_pre/postimage, delete, insert) — lands in
-    * ONE atomic commit; concurrency rules match [[merge]], except
-    * that by-source clauses read every unmatched row, so ANY
-    * concurrent append conflicts while they are present.
+    * holding a matching key (an `input_file_name` provenance scan
+    * against the source keys, the published Delta MERGE strategy) when
+    * matched clauses exist, plus files holding an unmatched row
+    * satisfying some by-source condition (the same scan). Inserts
+    * anti-join the source against the keys of the MATCHING files only
+    * (a key absent there is absent everywhere, by provenance
+    * construction; with no matching file the source inserts as is), so
+    * cost is O(touched files + source), never O(table). The whole
+    * effect — removes, adds, and the row-level change record
+    * (update_pre/postimage, delete, insert) — lands in ONE atomic
+    * commit. Concurrency follows the logical conflict rule (Delta's
+    * ConcurrentAppend/DeleteRead exceptions): a concurrent commit
+    * aborts the merge only if it touched a rewritten file, changed
+    * schema/constraints, or appended files whose key ranges might
+    * overlap the source keys — except that by-source clauses read every
+    * unmatched row, so ANY concurrent append conflicts while they are
+    * present. A merge that rewrites no file and whose staged inserts
+    * hold no row (their footers count zero) commits nothing; with a
+    * `txn`, only the cursor ([[commitTxnOnly]]).
     *
-    * Contracts shared with [[merge]]: source keys must be unique
-    * (checked); null-safe key matching throughout; generated columns
-    * are recomputed over rewritten rows (SET may not target a
-    * generated or identity column); inserts should carry identity
-    * values where declared (the high-water syncs forward).
+    * Contracts: source keys must be unique (checked); null-safe key
+    * matching throughout; generated columns are recomputed over
+    * rewritten rows (SET may not target a generated or identity
+    * column); inserts should carry identity values where declared (the
+    * high-water syncs forward).
     */
   def mergeConditional(source: DataFrame, keys: Seq[String],
       matched: Seq[TxTable.MatchedClause],
@@ -2130,14 +2076,10 @@ class TxTable(spark: SparkSession, val tablePath: String,
       bySource: Seq[TxTable.BySourceClause],
       txn: Option[TxTable.TxnId] = None,
       evolveSchema: Boolean = false): Unit = {
-    require(keys.nonEmpty, "mergeConditional needs at least one key column")
     require(matched.nonEmpty || notMatchedInsert.nonEmpty || bySource.nonEmpty,
       "mergeConditional needs at least one clause")
-    // one materialization of the source — same reasoning as merge()
-    source.persist()
-    try mergeConditional0(source, keys, matched, notMatchedInsert, bySource,
-      txn, evolveSchema)
-    finally source.unpersist()
+    mergeConditional0("mergeConditional", source, keys, matched, notMatchedInsert,
+      bySource, txn, evolveSchema)
   }
 
   /** A cursor-only commit: the (writer, batch) marker with no data
@@ -2183,14 +2125,19 @@ class TxTable(spark: SparkSession, val tablePath: String,
         }
     }
 
-  private def mergeConditional0(source0: DataFrame, keys: Seq[String],
+  /** The planner behind [[mergeConditional]], [[merge]] and
+    * [[deleteKeys]]; `verb` names the caller in messages.
+    */
+  private def mergeConditional0(verb: String, source0: DataFrame, keys: Seq[String],
       matched: Seq[TxTable.MatchedClause],
       notMatchedInsert: Option[TxTable.NotMatchedInsert],
       bySource: Seq[TxTable.BySourceClause],
       txn: Option[TxTable.TxnId],
       evolveSchema: Boolean): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
-    import TxTable.{BySourceUpdate, MatchedUpdate}
+    import TxTable.{BySourceDelete, BySourceUpdate, MatchedDelete, MatchedUpdate,
+      NotMatchedInsert}
+    require(keys.nonEmpty, s"$verb needs at least one key column")
     val snap = state()
     val surfaceCols: Seq[String] = snap.schema
       .map(_.fields.toSeq.map(_.name).filterNot(snap.dropped.contains)
@@ -2230,131 +2177,131 @@ class TxTable(spark: SparkSession, val tablePath: String,
           s"$tablePath — explicit-values inserts write existing columns only " +
           "(or opt in with withSchemaEvolution())")
     }
-    // one job: dup-key proof + the conflict-rule key ranges the commit
-    // needs when no by-source clause is present (was two aggregates)
-    val (auditMayMatch, _) = auditSourceKeys(snap,
-      physicalize(snap, source0), keys.map(physicalName(snap, _)),
-      s"merge source has duplicate keys on (${keys.mkString(", ")}) — " +
-        "a multi-match clause application would be row-order-dependent",
-      syncIdentity = false)
-    // replay gate: a (writer, batch) already in the log means this
-    // merge's effect landed — re-running (crash between commit and the
-    // caller's ack) must be a no-op, the append idempotency contract
-    if (txn.exists(t => snap.txns.get(t.writerId).exists(_ >= t.batchId))) return
-    if (snap.files.isEmpty) {
-      var inserted = false
-      notMatchedInsert.foreach { ins0 =>
-        val filtered = ins0.condition
-          .map(c => source0.as("s").where(coalesce(expr(c), lit(false))))
-          .getOrElse(source0)
-        val ins =
-          if (ins0.values.isEmpty) filtered
-          else filtered.as("s").select(
-            ins0.values.toSeq.sortBy(_._1)
-              .map { case (c, e) => expr(e).as(c) }: _*)
-        if (ins.limit(1).count() > 0) { append(ins, txn); inserted = true }
-      }
-      if (!inserted) txn.foreach(commitTxnOnly(_,
-        s"cursor-only conditional merge into $tablePath"))
-      return
-    }
-    val srcKeys = source0.select(keys.map(qcol(_)): _*).distinct()
-    val tgtAll = withFile(logicalize(snap, readState(snap)))
-    // ONE provenance pass finds both file classes — files holding a
-    // matching key (bounds the rewrite set and licenses the insert
-    // anti-join below), and files holding an unmatched row some
-    // by-source condition claims
-    val bySourceOr =
-      if (bySource.isEmpty) lit(false)
-      else bySource.map(_.condition
-        .map(c => coalesce(expr(c), lit(false))).getOrElse(lit(true))).reduce(_ || _)
-    val fileFlags = tgtAll.as("t")
-      .join(srcKeys.withColumn("__gmark", lit(true)).as("s"),
-        keyCond(keys, "t", "s"), "left_outer")
-      .withColumn("__gmatch", coalesce(col("__gmark"), lit(false)))
-      .where(col("__gmatch") || bySourceOr)
-      .groupBy(col(FileCol))
-      .agg(org.apache.spark.sql.functions.max(when(col("__gmatch"), 1).otherwise(0)).as("__hasm"),
-        org.apache.spark.sql.functions.max(when(!col("__gmatch") && bySourceOr, 1).otherwise(0)).as("__hasb"))
-      .collect()
-    def flagged(idx: Int): Seq[String] =
-      fileFlags.filter(_.getInt(idx) == 1).map(r => fileName(r.getString(0))).toSeq
-    val matchedFiles = flagged(1)
-    val bySourceFiles = flagged(2)
-    val rewriteFiles =
-      ((if (matched.nonEmpty) matchedFiles else Nil) ++ bySourceFiles).distinct
-    // a source key absent from the matching files is absent from the
-    // whole table — provenance found every file holding any match
-    val tgtMatchKeys = logicalize(snap, readState(snap.copy(files = matchedFiles)))
-      .select(keys.map(qcol(_)): _*).distinct()
-    val insertRows = notMatchedInsert.map { ins0 =>
-      val anti = source0.as("s")
-        .join(tgtMatchKeys.as("t"), keyCond(keys, "s", "t"), "left_anti")
-      val filtered = ins0.condition
-        .map(c => anti.where(coalesce(expr(c), lit(false)))).getOrElse(anti)
-      if (ins0.values.isEmpty) filtered
-      else filtered.select(ins0.values.toSeq.sortBy(_._1)
-        .map { case (c, e) => expr(e).as(c) }: _*)
-    }
-    // the insert probe is only needed for the provable-no-op exit, so
-    // it never runs when a rewrite is already happening
-    if (rewriteFiles.isEmpty && !insertRows.exists(_.limit(1).count() > 0)) {
-      txn.foreach(commitTxnOnly(_,
-        s"cursor-only conditional merge into $tablePath"))
-      return
-    }
-
-    // ---- per-row clause engine over the rewrite set (surface names) ----
-    val tgtRows = logicalize(snap, readState(snap.copy(files = rewriteFiles)))
-    val srcCols = source0.columns.toSeq
-    // schema evolution flows through the * forms (UPDATE SET * /
-    // INSERT * — every new source column rides in) and, under the
-    // withSchemaEvolution() opt-in, through explicit clauses (ONLY the
-    // new columns a clause actually targets ride in — unreferenced
-    // source-side metadata columns never leak into the table)
-    val evolves = matched.exists {
+    // identity values enter only through source-valued clauses (UPDATE
+    // SET * and inserts; SET cannot target them). The plain upsert
+    // writes every source row, so its high-water comes from the source
+    // audit; other source-valued clause sets scan what they write
+    val upsert = matched == Seq(MatchedUpdate(None)) &&
+      notMatchedInsert.contains(NotMatchedInsert(None)) && bySource.isEmpty
+    val updatesAll = matched.exists {
       case MatchedUpdate(_, s) => s.isEmpty
       case _ => false
-    } || notMatchedInsert.exists(_.values.isEmpty)
-    val explicitNew: Set[String] =
-      if (evolveSchema) (allSets ++ unknownIns).diff(surfaceCols.toSet)
-      else Set.empty
-    val extraCols =
-      if (evolves) srcCols.filterNot(surfaceCols.contains)
-      else srcCols.filter(explicitNew.contains)
-    val outCols = surfaceCols ++ extraCols
-    val sPresent = coalesce(col("__s_present"), lit(false))
-    def condCol(c: Option[String]): org.apache.spark.sql.Column =
-      c.map(x => coalesce(expr(x), lit(false))).getOrElse(lit(true))
-    def firstIdx(conds: Seq[org.apache.spark.sql.Column]) =
-      conds.zipWithIndex.foldRight(lit(-1): org.apache.spark.sql.Column) {
-        case ((c, i), els) => when(c, lit(i)).otherwise(els)
-      }
-    def kindOf(idx: org.apache.spark.sql.Column, cls: Seq[Any]) =
-      cls.zipWithIndex.foldLeft(lit(0)) { case (acc, (cl, i)) =>
-        val k = cl match {
-          case _: MatchedUpdate | _: BySourceUpdate => 1
-          case _ => 2
-        }
-        when(idx === i, lit(k)).otherwise(acc)
-      }
-    val mIdx = if (matched.isEmpty) lit(-1)
-      else when(sPresent, firstIdx(matched.map(cl => condCol(cl.condition))))
-        .otherwise(lit(-1))
-    val bIdx = if (bySource.isEmpty) lit(-1)
-      else when(!sPresent, firstIdx(bySource.map(cl => condCol(cl.condition))))
-        .otherwise(lit(-1))
-    val classified = tgtRows.as("t")
-      .join(source0.withColumn("__s_present", lit(true)).as("s"),
-        keyCond(keys, "t", "s"), "left_outer")
-      .withColumn("__m_idx", mIdx)
-      .withColumn("__b_idx", bIdx)
-    val kind = when(col("__m_idx") >= 0, kindOf(col("__m_idx"), matched))
-      .when(col("__b_idx") >= 0, kindOf(col("__b_idx"), bySource))
-      .otherwise(lit(0))
-    val withKind = classified.withColumn("__kind", kind)
-    if (rewriteFiles.nonEmpty) withKind.persist()
+    }
+    val writesSource = updatesAll || notMatchedInsert.nonEmpty
+    // a delete-only clause set removes rows and writes none it could
+    // make violate a CHECK (survivors' generated values are recomputed)
+    val deletesOnly = notMatchedInsert.isEmpty && (matched ++ bySource).forall {
+      case _: MatchedDelete | _: BySourceDelete => true
+      case _ => false
+    }
+    // ONE materialization of the source: it otherwise re-evaluates for
+    // the audit, the provenance scan, the rewrite and the change record
+    // — and pinning a non-deterministic source (a rand()-derived
+    // column, a table mutating mid-merge) to a single evaluation is
+    // what makes the dup check prove the SAME rows the commit writes
+    source0.persist()
     try {
+      // one job: dup-key proof + the conflict-rule key ranges the
+      // commit needs when no by-source clause is present (+ the
+      // upsert's identity high-water)
+      val (auditMayMatch, auditIds) = auditSourceKeys(snap,
+        physicalize(snap, source0), keys.map(physicalName(snap, _)),
+        s"$verb source has duplicate keys on (${keys.mkString(", ")}) — " +
+          "a multi-match clause application would be row-order-dependent",
+        syncIdentity = upsert)
+      // replay gate: a (writer, batch) already in the log means this
+      // merge's effect landed — re-running (crash between commit and the
+      // caller's ack) must be a no-op, the append idempotency contract
+      if (txn.exists(t => snap.txns.get(t.writerId).exists(_ >= t.batchId))) return
+      def cursorOnly(): Unit =
+        txn.foreach(commitTxnOnly(_, s"cursor-only $verb into $tablePath"))
+      // ONE provenance pass finds both file classes — files holding a
+      // matching key (bounds the rewrite set and licenses the insert
+      // anti-join below), and files holding an unmatched row some
+      // by-source condition claims
+      val bySourceOr =
+        if (bySource.isEmpty) lit(false)
+        else bySource.map(_.condition
+          .map(c => coalesce(expr(c), lit(false))).getOrElse(lit(true))).reduce(_ || _)
+      val fileFlags =
+        if (snap.files.isEmpty) Array.empty[Row]
+        else withFile(logicalize(snap, readState(snap))).as("t")
+          .join(source0.select(keys.map(qcol(_)): _*).distinct()
+            .withColumn("__gmark", lit(true)).as("s"),
+            keyCond(keys, "t", "s"), "left_outer")
+          .withColumn("__gmatch", coalesce(col("__gmark"), lit(false)))
+          .where(col("__gmatch") || bySourceOr)
+          .groupBy(col(FileCol))
+          .agg(org.apache.spark.sql.functions.max(when(col("__gmatch"), 1).otherwise(0)).as("__hasm"),
+            org.apache.spark.sql.functions.max(when(!col("__gmatch") && bySourceOr, 1).otherwise(0)).as("__hasb"))
+          .collect()
+      def flagged(idx: Int): Seq[String] =
+        fileFlags.filter(_.getInt(idx) == 1).map(r => fileName(r.getString(0))).toSeq
+      val matchedFiles = flagged(1)
+      val bySourceFiles = flagged(2)
+      val rewriteFiles =
+        ((if (matched.nonEmpty) matchedFiles else Nil) ++ bySourceFiles).distinct
+      val insertRows = notMatchedInsert.map { ins0 =>
+        // a source key absent from the matching files is absent from
+        // the whole table — provenance found every file holding any
+        // match; with none, every source row is unmatched
+        val anti =
+          if (matchedFiles.isEmpty) source0.as("s")
+          else source0.as("s").join(
+            logicalize(snap, readState(snap.copy(files = matchedFiles)))
+              .select(keys.map(qcol(_)): _*).distinct().as("t"),
+            keyCond(keys, "s", "t"), "left_anti")
+        val filtered = ins0.condition
+          .map(c => anti.where(coalesce(expr(c), lit(false)))).getOrElse(anti)
+        // explicit values keep the source's column order (the schema
+        // an insert into an empty table creates), others by name
+        val srcPos = source0.columns.zipWithIndex.toMap
+        if (ins0.values.isEmpty) filtered
+        else filtered.select(ins0.values.toSeq
+          .sortBy { case (c, _) => (srcPos.getOrElse(c, Int.MaxValue), c) }
+          .map { case (c, e) => expr(e).as(c) }: _*)
+      }
+      if (rewriteFiles.isEmpty && insertRows.isEmpty) { cursorOnly(); return }
+
+      // ---- per-row clause engine over the rewrite set (surface names) ----
+      val srcCols = source0.columns.toSeq
+      // schema evolution flows through the * forms (UPDATE SET * /
+      // INSERT * — every new source column rides in) and, under the
+      // withSchemaEvolution() opt-in, through explicit clauses (ONLY the
+      // new columns a clause actually targets ride in — unreferenced
+      // source-side metadata columns never leak into the table)
+      val evolves = updatesAll || notMatchedInsert.exists(_.values.isEmpty)
+      val explicitNew: Set[String] =
+        if (evolveSchema) (allSets ++ unknownIns).diff(surfaceCols.toSet)
+        else Set.empty
+      val extraCols =
+        if (evolves) srcCols.filterNot(surfaceCols.contains)
+        else srcCols.filter(explicitNew.contains)
+      val outCols = surfaceCols ++ extraCols
+      val sPresent = coalesce(col("__s_present"), lit(false))
+      def condCol(c: Option[String]): org.apache.spark.sql.Column =
+        c.map(x => coalesce(expr(x), lit(false))).getOrElse(lit(true))
+      def firstIdx(conds: Seq[org.apache.spark.sql.Column]) =
+        conds.zipWithIndex.foldRight(lit(-1): org.apache.spark.sql.Column) {
+          case ((c, i), els) => when(c, lit(i)).otherwise(els)
+        }
+      def kindOf(idx: org.apache.spark.sql.Column, cls: Seq[Any]) =
+        cls.zipWithIndex.foldLeft(lit(0)) { case (acc, (cl, i)) =>
+          val k = cl match {
+            case _: MatchedUpdate | _: BySourceUpdate => 1
+            case _ => 2
+          }
+          when(idx === i, lit(k)).otherwise(acc)
+        }
+      val mIdx = if (matched.isEmpty) lit(-1)
+        else when(sPresent, firstIdx(matched.map(cl => condCol(cl.condition))))
+          .otherwise(lit(-1))
+      val bIdx = if (bySource.isEmpty) lit(-1)
+        else when(!sPresent, firstIdx(bySource.map(cl => condCol(cl.condition))))
+          .otherwise(lit(-1))
+      val kind = when(col("__m_idx") >= 0, kindOf(col("__m_idx"), matched))
+        .when(col("__b_idx") >= 0, kindOf(col("__b_idx"), bySource))
+        .otherwise(lit(0))
       def tCol(c: String): org.apache.spark.sql.Column =
         if (surfaceCols.contains(c)) qcol(c, "t")
         else lit(null).cast(source0.schema(c).dataType)
@@ -2377,38 +2324,55 @@ class TxTable(spark: SparkSession, val tablePath: String,
       }
       val preCols = surfaceCols.map(c => qcol(c, "t").as(c))
       def toPhysG(df: DataFrame) = recomputeGenerated(snap, physicalize(snap, df))
-      val keptAndUpdated = toPhysG(withKind.where(col("__kind") =!= 2)
-        .select(outCols.map(rewProj): _*))
-      val physInsert = insertRows.map(toPhysG)
-      val newData = (Seq(keptAndUpdated) ++ physInsert.toSeq)
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      // row-level change record, committed atomically with the rewrite:
-      // pre-images as stored (no generated backfill), post-images and
-      // inserts exactly as written
-      val preUpd = physicalize(snap, withKind.where(col("__kind") === 1)
-        .select(preCols: _*))
-        .withColumn(ChangeTypeCol, lit("update_preimage"))
-      val postUpd = toPhysG(withKind.where(col("__kind") === 1)
-        .select(outCols.map(rewProj): _*))
-        .withColumn(ChangeTypeCol, lit("update_postimage"))
-      val preDel = physicalize(snap, withKind.where(col("__kind") === 2)
-        .select(preCols: _*))
-        .withColumn(ChangeTypeCol, lit("delete"))
-      val cdfData = (Seq(preUpd, postUpd, preDel) ++
-        physInsert.map(_.withColumn(ChangeTypeCol, lit("insert"))).toSeq)
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      val (staged, stagedCdf) = stageDataAndCdf(newData, cdfData)
-      val mayMatch: Seq[(String, Option[FileStats])] => Boolean =
-        if (bySource.nonEmpty) _.nonEmpty // by-source reads every unmatched row
-        else auditMayMatch
-      val identitySync = identitySyncActions(snap, newData)
-      commitRowLevel("mergeConditional", snap,
-        Rewrite(rewriteFiles, staged, stagedCdf), mayMatch,
-        checkUnder = Some(mergeSchemas(snap.schema, newData.schema, widenOn(snap))),
-        txn = txn) { st =>
-        identitySync :+ Meta(mergeSchemas(st.schema, newData.schema, widenOn(st)).toDDL)
-      }
-    } finally if (rewriteFiles.nonEmpty) withKind.unpersist()
+      val withKind = Option.when(rewriteFiles.nonEmpty)(
+        logicalize(snap, readState(snap.copy(files = rewriteFiles))).as("t")
+          .join(source0.withColumn("__s_present", lit(true)).as("s"),
+            keyCond(keys, "t", "s"), "left_outer")
+          .withColumn("__m_idx", mIdx)
+          .withColumn("__b_idx", bIdx)
+          .withColumn("__kind", kind)
+          .persist())
+      try {
+        val physInsert = insertRows.map(toPhysG).toSeq
+        val newData = (withKind.map(wk => toPhysG(wk.where(col("__kind") =!= 2)
+          .select(outCols.map(rewProj): _*))).toSeq ++ physInsert)
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+        // row-level change record, committed atomically with the
+        // rewrite: pre-images as stored (no generated backfill),
+        // post-images and inserts exactly as written
+        val rewriteCdf = withKind.toSeq.flatMap { wk =>
+          Seq(physicalize(snap, wk.where(col("__kind") === 1).select(preCols: _*))
+              .withColumn(ChangeTypeCol, lit("update_preimage")),
+            toPhysG(wk.where(col("__kind") === 1).select(outCols.map(rewProj): _*))
+              .withColumn(ChangeTypeCol, lit("update_postimage")),
+            physicalize(snap, wk.where(col("__kind") === 2).select(preCols: _*))
+              .withColumn(ChangeTypeCol, lit("delete")))
+        }
+        val cdfData = (rewriteCdf ++ physInsert.map(_.withColumn(ChangeTypeCol, lit("insert"))))
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+        val (staged, stagedCdf) = stageDataAndCdf(newData, cdfData)
+        // nothing to rewrite and no staged insert holds a row (the
+        // staging drops parts whose footer counts zero): a no-op
+        if (rewriteFiles.isEmpty && staged.isEmpty) {
+          stagedCdf.foreach { case (f, _) => fs.delete(new Path(root, f), false) }
+          cursorOnly()
+          return
+        }
+        val mayMatch: Seq[(String, Option[FileStats])] => Boolean =
+          if (bySource.nonEmpty) _.nonEmpty // by-source reads every unmatched row
+          else auditMayMatch
+        val identitySync =
+          if (upsert) auditIds
+          else if (writesSource) identitySyncActions(snap, newData)
+          else Nil
+        commitRowLevel(verb, snap, Rewrite(rewriteFiles, staged, stagedCdf), mayMatch,
+          checkUnder = Option.unless(deletesOnly)(
+            mergeSchemas(snap.schema, newData.schema, widenOn(snap))),
+          txn = txn) { st =>
+          identitySync :+ Meta(mergeSchemas(st.schema, newData.schema, widenOn(st)).toDDL)
+        }
+      } finally withKind.foreach(_.unpersist())
+    } finally source0.unpersist()
   }
 
   /** SCD TYPE 2 merge — the history-preserving upsert every warehouse
@@ -2622,39 +2586,18 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * `keys0` (a DataFrame — never collected to the driver), the
     * GDPR-/CDC-scale counterpart of [[delete]]: a predicate built
     * from millions of collected keys is both a driver OOM and an
-    * unplannable OR-chain, where this verb is two distributed
-    * semi/anti joins. Touched-file detection, survivor rewrite,
-    * delete change record and the strict concurrency rule all follow
-    * [[merge]] (null-SAFE key matching included: a null-keyed tuple
-    * deletes the null-keyed row). Key columns speak surface names.
+    * unplannable OR-chain, where this verb is distributed joins. It is
+    * the clause set `WHEN MATCHED DELETE` of [[mergeConditional]] over
+    * the distinct key tuples, so touched-file detection, survivor
+    * rewrite, delete change record and the concurrency rule are the
+    * merge's (null-SAFE key matching included: a null-keyed tuple
+    * deletes the null-keyed row); no matching key commits nothing. Key
+    * columns speak surface names.
     */
-  def deleteKeys(keys0: DataFrame, keyCols0: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.lit
-    require(keyCols0.nonEmpty, "deleteKeys needs at least one key column")
-    val snap = state()
-    if (snap.files.isEmpty) return
-    val keyCols = keyCols0.map(physicalName(snap, _))
-    val dead = physicalize(snap, keys0)
-      .select(keyCols.map(qcol(_)): _*).distinct().persist()
-    try {
-      val touched = filesWithKeys(withFile(readState(snap)), dead, keyCols)
-      if (touched.isEmpty) return
-      val touchedRows = readState(snap.copy(files = touched)).persist()
-      val (staged, stagedCdf) = try {
-        stageDataAndCdf(
-          recomputeGenerated(snap, touchedRows.as("t")
-            .join(dead.as("s"), keyCond(keyCols, "t", "s"), "left_anti")),
-          touchedRows.as("t")
-            .join(dead.as("s"), keyCond(keyCols, "t", "s"), "left_semi")
-            .withColumn(ChangeTypeCol, lit("delete")))
-      } finally touchedRows.unpersist()
-      // the dead keys' ranges bound the conflict rule, as a merge
-      // source's do (the key set is distinct, so the dup proof holds)
-      val (mayMatch, _) = auditSourceKeys(snap, dead, keyCols,
-        "deleteKeys key set is not distinct", syncIdentity = false)
-      commitRowLevel("deleteKeys", snap, Rewrite(touched, staged, stagedCdf), mayMatch)()
-    } finally dead.unpersist()
-  }
+  def deleteKeys(keys0: DataFrame, keyCols: Seq[String]): Unit =
+    mergeConditional0("deleteKeys", keys0.select(keyCols.map(qcol(_)): _*).distinct(),
+      keyCols, Seq(TxTable.MatchedDelete(None)), None, Nil, txn = None,
+      evolveSchema = false)
 
   /** Merge-on-read DELETE (deletion vectors — the published Delta
     * protocol feature): instead of rewriting every file that contains

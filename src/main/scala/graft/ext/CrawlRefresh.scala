@@ -616,18 +616,24 @@ object CrawlRefresh {
     * never rescanned or reshuffled per micro-batch. A replayed batch
     * re-appends its keys (duplicate rows are harmless to an
     * anti-join). RESTARTS are O(delta): the frontier artifact (bloom
-    * bytes + bucketed key table) persists per tag, and a new query
+    * bytes + bucketed key table) persists beside the query's
+    * `checkpoint`, at `<checkpoint>_frontier` (so it lives and dies with
+    * the checkpoint it belongs to), and a new query
     * start folds in only the corpus CHANGE FEED since the artifact's
     * watermark version — a frequently-restarted feed never pays a
     * per-restart corpus rescan (full reseed remains the fallback for
     * a different/rebuilt corpus or a non-feed-readable range).
     */
   private[ext] final class FrontierIndex(s: SparkSession, corpus: TxTable,
-                                         tag: String) {
+                                         checkpoint: String) {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.util.sketch.BloomFilter
-    private val table = s"graft_frontier_$tag"
-    private val dataPath = s"${sys.props("java.io.tmpdir")}/graft_frontier_$tag"
+    // catalog name: sanitized checkpoint suffix + hash, readable AND
+    // collision-safe
+    private val table = "graft_frontier_" +
+      checkpoint.replaceAll("[^a-zA-Z0-9]+", "_").takeRight(48) + "_" +
+      java.lang.Long.toHexString(checkpoint.hashCode.toLong & 0xffffffffL)
+    private val dataPath = checkpoint.stripSuffix("/") + "_frontier"
     private val statePath = new Path(dataPath + ".state")
     // RAW fs for the state files (no .crc sidecars): the bloom's own
     // deserialization and the guarded meta parse already catch torn
@@ -928,10 +934,7 @@ object CrawlRefresh {
     }
     val frontierIdx =
       if (!suppressRefetch) None
-      else Some(new FrontierIndex(fetches.sparkSession, corpus,
-        // sanitized checkpoint suffix + hash: readable AND collision-safe
-        checkpoint.replaceAll("[^a-zA-Z0-9]+", "_").takeRight(48) + "_" +
-          java.lang.Long.toHexString(checkpoint.hashCode.toLong & 0xffffffffL)))
+      else Some(new FrontierIndex(fetches.sparkSession, corpus, checkpoint))
     fetches.writeStream
       .queryName("crawl-refresh")
       .option("checkpointLocation", checkpoint)

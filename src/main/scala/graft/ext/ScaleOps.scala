@@ -879,7 +879,7 @@ object ScaleOps {
     * ([[graft.core.TxTable.deleteKeys]]): the dead set (one key in
     * seven) is a DataFrame derived from the table itself and never
     * collected — the GDPR-/CDC-scale deletion path, applied as
-    * distributed semi/anti joins. Built once per (session, dir).
+    * distributed joins. Built once per (session, dir).
     */
   private[ext] def delKeysOrdersTable(s: SparkSession, dir: String): graft.core.TxTable =
     txFixture(s, "tx-delkeys", dir) { t =>

@@ -41,8 +41,7 @@ object RawIngest {
     * metadata + `parsedValue` struct.
     */
   def demux[T](batch: DataFrame, registry: SchemaRegistry, wire: WireFormat,
-               permissive: Boolean = false, deadLetterPath: Option[String] = None,
-               dlqCorrupt: Boolean = true)
+               permissive: Boolean = false, deadLetterPath: Option[String] = None)
               (action: Seq[DataFrame] => T): T = {
     val keyed = batch
       .withColumn("schemaKey", wire.schemaKeyCol(col("value")))
@@ -80,16 +79,12 @@ object RawIngest {
             .write.mode("append").parquet(dlq)
         }
       }
-      // with a dead-letter path AND dlqCorrupt (the default), decode
-      // PERMISSIVE regardless of the flag: a known-id, wrong-payload
-      // record (rogue producer) must not abort the whole micro-batch —
-      // its raw bytes land in the DLQ below and every healthy row
-      // still commits. `dlqCorrupt = false` restores the strict
-      // combination: the DLQ covers ONLY unknown schema ids and a
-      // corrupt payload under permissive=false fails the batch.
-      // Without a DLQ, FAILFAST keeps failing the batch
-      // (at-least-once, no drops).
-      val lenient = permissive || (deadLetterPath.isDefined && dlqCorrupt)
+      // with a dead-letter path, decode PERMISSIVE regardless of the
+      // flag: a known-id, wrong-payload record (rogue producer) must
+      // not abort the whole micro-batch — its raw bytes land in the
+      // DLQ below and every healthy row still commits. Without a DLQ,
+      // FAILFAST keeps failing the batch (at-least-once, no drops).
+      val lenient = permissive || deadLetterPath.isDefined
       val decodedGroups = resolved.collect { case (keyBytes, Some(schema)) =>
         val json = schema.toString
         keyed
@@ -100,10 +95,9 @@ object RawIngest {
       // cache the DECODED groups (not just the raw bytes) while both
       // the corrupt probe and the action consume them — without this
       // every row would pay the Avro decode twice per batch
-      val probeCorrupt = deadLetterPath.isDefined && dlqCorrupt
-      if (probeCorrupt) decodedGroups.foreach(_.persist())
+      if (deadLetterPath.isDefined) decodedGroups.foreach(_.persist())
       try {
-        if (probeCorrupt) deadLetterPath.foreach { dlq =>
+        deadLetterPath.foreach { dlq =>
           // per-ROW isolation of decode failures, same raw layout as
           // the unknown-id groups above: one probe + at most one
           // append per batch, off the cached decoded frames
@@ -116,11 +110,10 @@ object RawIngest {
             if (n > 0) {
               // visible, not silent: under permissive=false this is a
               // deliberate semantic (DLQ row-isolation overrides
-              // FAILFAST for known-id corrupt payloads; opt out with
-              // dlqCorrupt=false)
+              // FAILFAST for known-id corrupt payloads)
               org.slf4j.LoggerFactory.getLogger(getClass)
                 .warn(s"diverting $n corrupt known-schema row(s) to DLQ $dlq" +
-                  (if (permissive) "" else " (FAILFAST overridden by dlqCorrupt=true)"))
+                  (if (permissive) "" else " (a configured DLQ overrides FAILFAST)"))
               c.write.mode("append").parquet(dlq)
             }
           }
@@ -131,7 +124,7 @@ object RawIngest {
           clean.drop("value")
         }
         action(groups)
-      } finally if (probeCorrupt) decodedGroups.foreach(_.unpersist())
+      } finally if (deadLetterPath.isDefined) decodedGroups.foreach(_.unpersist())
     } finally keyed.unpersist()
   }
 
@@ -146,9 +139,8 @@ object RawIngest {
   def demuxToTable(batch: DataFrame, registry: SchemaRegistry, wire: WireFormat,
                    raw: TxTable, writerId: String, batchId: Long,
                    permissive: Boolean = false,
-                   deadLetterPath: Option[String] = None,
-                   dlqCorrupt: Boolean = true): Unit =
-    demux(batch, registry, wire, permissive, deadLetterPath, dlqCorrupt) { groups =>
+                   deadLetterPath: Option[String] = None): Unit =
+    demux(batch, registry, wire, permissive, deadLetterPath) { groups =>
       if (groups.nonEmpty)
         raw.appendBatch(groups.reduce(_.unionByName(_, allowMissingColumns = true)),
           writerId, batchId)
@@ -168,14 +160,13 @@ object RawIngest {
   def run(source: DataFrame, registry: SchemaRegistry, wire: WireFormat,
           rawPath: String, checkpoint: String, permissive: Boolean = false,
           queryName: String = "graftRawIngest",
-          deadLetterPath: Option[String] = None,
-          dlqCorrupt: Boolean = true): StreamingQuery = {
+          deadLetterPath: Option[String] = None): StreamingQuery = {
     val raw = new TxTable(source.sparkSession, rawPath)
     source.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         demuxToTable(batch, registry, wire, raw,
           TxTableSink.queryId(batch.sparkSession.sparkContext, "RawIngest.run"), batchId,
-          permissive, deadLetterPath, dlqCorrupt)
+          permissive, deadLetterPath)
       }
       .queryName(queryName)
       .option("checkpointLocation", checkpoint)

@@ -22,7 +22,13 @@ import org.apache.spark.sql.functions._
   * regression. The remaining row-level verbs are pinned at the counts
   * they ran before they moved onto the shared rewrite core: deleteKeys
   * 3, mergeBuilder update-all + insert-all 3, deleteMergeOnRead 2,
-  * updateMergeOnRead 2, replaceWhere 4.
+  * updateMergeOnRead 2, replaceWhere 4. `merge`, `deleteKeys` and
+  * `CdcApply.apply` are clause sets of the one conditional-merge
+  * planner, whose no-op exit reads the staged write's footers instead
+  * of probing the insert rows: a pure insert (no key matches) is 3
+  * executions through either surface (the conditional merge ran 4
+  * with the probe), an insert-only CDC slice is 3 (the two-commit
+  * apply ran 5), and a key set matching nothing commits no version.
   */
 class MergeJobCountSpec extends SparkTestBase {
 
@@ -121,6 +127,46 @@ class MergeJobCountSpec extends SparkTestBase {
         .whenNotMatchedInsertAll().run()
     }
     assert(n <= 3, s"mergeBuilder ran $n SQL executions — expected <= 3")
+  }
+
+  test("pure insert (no key matches) = 3 actions through merge and mergeBuilder") {
+    val src = spark.range(200, 210).select(col("id").as("k"), lit(-1L).as("v"))
+    src.count()
+    val t1 = freshTable()
+    val v1 = t1.version
+    val n1 = executionsDuring { t1.merge(src, Seq("k")) }
+    assert(n1 <= 3, s"pure-insert merge ran $n1 SQL executions — expected <= 3")
+    val t2 = freshTable()
+    val n2 = executionsDuring {
+      t2.mergeBuilder(src, Seq("k")).whenMatchedUpdateAll()
+        .whenNotMatchedInsertAll().run()
+    }
+    assert(n2 <= 3, s"pure-insert mergeBuilder ran $n2 SQL executions — expected " +
+      "<= 3 (audit + provenance scan + staged write; no insert probe)")
+    assert(t1.version == v1 + 1 && t1.read().count() == 110L)
+    assert(t2.read().count() == 110L)
+  }
+
+  test("an insert-only CdcApply.apply slice = 3 actions in one commit") {
+    val src = freshTable()
+    val dst = new TxTable(spark, tmpDir("merge-jobs-replica"))
+    graft.streaming.CdcApply(dst, src.readChangeFeed(-1L, src.version), Seq("k"))
+    val from = src.version
+    src.append(spark.range(100, 110).select(col("id").as("k"), (col("id") * 2).as("v")))
+    val feed = src.readChangeFeed(from, src.version)
+    val v0 = dst.version
+    val n = executionsDuring { graft.streaming.CdcApply(dst, feed, Seq("k")) }
+    assert(n <= 3, s"insert-only CdcApply.apply ran $n SQL executions — expected " +
+      "<= 3 (audit + provenance scan + staged write)")
+    assert(dst.version == v0 + 1 && dst.read().count() == 110L)
+  }
+
+  test("deleteKeys with no matching key commits no version") {
+    val t = freshTable()
+    val v = t.version
+    t.deleteKeys(spark.range(500, 505).select(col("id").as("k")), Seq("k"))
+    assert(t.version == v, "a key set matching nothing must not commit")
+    assert(t.read().count() == 100L)
   }
 
   test("deleteMergeOnRead = 2 actions: sidecar write and fused staging write") {

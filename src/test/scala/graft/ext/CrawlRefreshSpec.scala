@@ -277,7 +277,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     val corpus = new graft.core.TxTable(spark, s"$base/corpus")
     corpus.append((1L to 1000L).map(i => (i, "seed", s"t$i"))
       .toDF("doc_id", "source", "text"))
-    val st = new CrawlRefresh.FrontierIndex(spark, corpus, "probe_spec")
+    val st = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/probe_spec")
     val batch = (990L to 1010L).map(i => (i, s"u$i")).toDF("doc_id", "text")
       .localCheckpoint()
     val oldBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -307,7 +307,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     val corpus = new graft.core.TxTable(spark, s"$base/corpus")
     corpus.append((1L to 100L).map(i => (i, "seed", s"t$i"))
       .toDF("doc_id", "source", "text"))
-    val st = new CrawlRefresh.FrontierIndex(spark, corpus, "bc_spec")
+    val st = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/bc_spec")
     (1 to 3).foreach { i =>
       st.filterNew((1L to 5L).map(k => (k * 1000L + i, s"u$k"))
         .toDF("doc_id", "text").localCheckpoint()).collect()
@@ -330,7 +330,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     val corpus = new graft.core.TxTable(spark, s"$base/corpus")
     corpus.append((1L to 500L).map(i => (i, "seed", s"t$i"))
       .toDF("doc_id", "source", "text"))
-    val run1 = new CrawlRefresh.FrontierIndex(spark, corpus, "delta_spec")
+    val run1 = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/delta_spec")
     assert(!run1.seededFromDelta && run1.seedScanCount == 500L,
       "first run seeds from the full corpus")
     // the run admits docs by MERGING them into the corpus (the
@@ -338,7 +338,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     // must pick up from the change feed
     corpus.merge(Seq((901L, "crawl", "x"), (902L, "crawl", "y"))
       .toDF("doc_id", "source", "text"), Seq("doc_id"))
-    val run2 = new CrawlRefresh.FrontierIndex(spark, corpus, "delta_spec")
+    val run2 = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/delta_spec")
     assert(run2.seededFromDelta, "restart must reseed from the persisted artifact")
     assert(run2.seedScanCount == 2L,
       s"restart must read only the 2-key delta, scanned ${run2.seedScanCount}")
@@ -349,12 +349,12 @@ class CrawlRefreshSpec extends SparkTestBase {
     assert(kept == Set(903L),
       s"delta-reseeded state must suppress old AND delta keys: kept $kept")
     // a restart with nothing new folds nothing and scans nothing
-    val run3 = new CrawlRefresh.FrontierIndex(spark, corpus, "delta_spec")
+    val run3 = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/delta_spec")
     assert(run3.seededFromDelta && run3.seedScanCount == 0L)
     // a DIFFERENT corpus under the same tag must not trust the state
     val other = new graft.core.TxTable(spark, s"$base/other")
     other.append(Seq((5L, "o", "z")).toDF("doc_id", "source", "text"))
-    val run4 = new CrawlRefresh.FrontierIndex(spark, other, "delta_spec")
+    val run4 = new CrawlRefresh.FrontierIndex(spark, other, s"$base/delta_spec")
     assert(!run4.seededFromDelta, "a corpus swap must force a full reseed")
   }
 
@@ -366,14 +366,13 @@ class CrawlRefreshSpec extends SparkTestBase {
     corpus.append((1L to 200L).map(i => (i, "seed", s"t$i"))
       .toDF("doc_id", "source", "text"))
     val v1 = corpus.version
-    new CrawlRefresh.FrontierIndex(spark, corpus, "torn_spec") // full seed at v1
+    new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/torn_spec") // full seed at v1
     corpus.merge(Seq((901L, "crawl", "x"), (902L, "crawl", "y"))
       .toDF("doc_id", "source", "text"), Seq("doc_id"))
     val v2 = corpus.version
-    val run2 = new CrawlRefresh.FrontierIndex(spark, corpus, "torn_spec")
+    val run2 = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/torn_spec")
     assert(run2.seededFromDelta && run2.seedScanCount == 2L)
-    val stateDir = Paths.get(
-      s"${sys.props("java.io.tmpdir")}/graft_frontier_torn_spec.state")
+    val stateDir = Paths.get(s"$base/torn_spec_frontier.state")
     val metaP = stateDir.resolve("meta.properties")
     // the documented crash window: bloom written at v2, meta still at
     // v1 — the next start re-reads (v1, v2] but the table-side
@@ -381,7 +380,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     // and the kept set must not move
     Files.writeString(metaP, new String(Files.readAllBytes(metaP))
       .replace(s"version=$v2", s"version=$v1"))
-    val run3 = new CrawlRefresh.FrontierIndex(spark, corpus, "torn_spec")
+    val run3 = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/torn_spec")
     assert(run3.seededFromDelta && run3.seedScanCount == 0L,
       s"a stale-meta refold must append nothing new, got ${run3.seedScanCount}")
     val kept = run3.filterNew(
@@ -391,7 +390,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     assert(kept == Set(903L), s"refolded state must still suppress exactly: $kept")
     // a torn bloom (partial write) must not be trusted: full reseed
     Files.write(stateDir.resolve("bloom.bin"), Array[Byte](1, 2, 3))
-    val run4 = new CrawlRefresh.FrontierIndex(spark, corpus, "torn_spec")
+    val run4 = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/torn_spec")
     assert(!run4.seededFromDelta, "a torn bloom must force the full reseed")
     val kept4 = run4.filterNew(
       Seq((902L, "c"), (903L, "d")).toDF("doc_id", "text").localCheckpoint())
@@ -404,7 +403,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     val base = tmpDir("frontier-replay")
     val corpus = new graft.core.TxTable(spark, s"$base/corpus")
     corpus.append(Seq((1L, "seed", "t1")).toDF("doc_id", "source", "text"))
-    val st = new CrawlRefresh.FrontierIndex(spark, corpus, "replay_spec")
+    val st = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/replay_spec")
     // batch 7 admitted doc 42, then the trigger is REPLAYED before its
     // audit committed: the replay must re-see 42 (and re-disposition
     // it via the idempotent merge), not book it _refetch
@@ -423,7 +422,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     // checkpoint-replayed batch 7 after the restart still re-sees 42
     corpus.merge(Seq((42L, "crawl", "x")).toDF("doc_id", "source", "text"),
       Seq("doc_id")) // the run also merged it — what the delta folds
-    val st2 = new CrawlRefresh.FrontierIndex(spark, corpus, "replay_spec")
+    val st2 = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/replay_spec")
     assert(st2.seededFromDelta, "restart must take the delta path for this law")
     val replay2 = st2.filterNew(Seq((42L, "x"), (1L, "y"))
       .toDF("doc_id", "text").localCheckpoint(), batchId = 7L)
@@ -444,7 +443,7 @@ class CrawlRefreshSpec extends SparkTestBase {
     val corpus = new graft.core.TxTable(spark, s"$base/corpus")
     corpus.append(corpusKeys.map(k => (k, "seed", s"t$k"))
       .toDF("doc_id", "source", "text"))
-    val st = new CrawlRefresh.FrontierIndex(spark, corpus, "fuzz_spec")
+    val st = new CrawlRefresh.FrontierIndex(spark, corpus, s"$base/fuzz_spec")
     val admitted = Seq.fill(60)(rnd.nextLong().abs % 100000L).distinct
     st.admit(admitted.toDF("doc_id"), batchId = 1L)
     // batches drawn from the same universe: heavy overlap with both
@@ -468,8 +467,8 @@ class CrawlRefreshSpec extends SparkTestBase {
     c1.append((1L to 10L).map(i => (i, "a", s"t$i")).toDF("doc_id", "source", "text"))
     val c2 = new graft.core.TxTable(spark, s"$base/c2")
     c2.append((101L to 110L).map(i => (i, "b", s"t$i")).toDF("doc_id", "source", "text"))
-    val f1 = new CrawlRefresh.FrontierIndex(spark, c1, "iso_a")
-    val f2 = new CrawlRefresh.FrontierIndex(spark, c2, "iso_b")
+    val f1 = new CrawlRefresh.FrontierIndex(spark, c1, s"$base/iso_a")
+    val f2 = new CrawlRefresh.FrontierIndex(spark, c2, s"$base/iso_b")
     f1.admit(Seq(500L).toDF("doc_id"))
     val probe = Seq((500L, "x"), (1L, "y"), (101L, "z")).toDF("doc_id", "text")
       .localCheckpoint()

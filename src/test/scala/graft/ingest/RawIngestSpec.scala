@@ -225,35 +225,4 @@ class RawIngestSpec extends SparkTestBase {
       "both batches' healthy rows must land across restarts")
     assert(spark.read.parquet(sdlq).count() == 1)
   }
-
-  test("dlqCorrupt=false: the DLQ covers ONLY unknown ids; corrupt known-id payloads keep FAILFAST") {
-    val gen = new EventGenerator(seed = 21)
-    val registry = new InMemorySchemaRegistry
-    val good = gen.envelopeDF(spark, gen.events(8), registry, ConfluentWire)
-    val id = registry.latest("product-value").get._1
-    val corruptValue = ConfluentWire.frame(id, Array[Byte](9))
-    val corrupt = gen.envelopeDF(spark, gen.events(1), registry, ConfluentWire)
-      .withColumn("value", lit(corruptValue))
-    // strict combination: a known-id corrupt payload fails the batch
-    // even though a DLQ is configured (the pre-round-8 contract)
-    val raw = tmpDir("raw-strictdlq-main")
-    val dlq = tmpDir("raw-strictdlq")
-    intercept[Exception] {
-      RawIngest.demuxToTable(good.unionByName(corrupt), registry, ConfluentWire,
-        tx(raw), "spec", 0L, permissive = false, deadLetterPath = Some(dlq),
-        dlqCorrupt = false)
-    }
-    // ...while an UNKNOWN schema id still dead-letters under the same flag
-    val strangerValue = ConfluentWire.frame(9999, Array[Byte](1, 2, 3))
-    val stranger = gen.envelopeDF(spark, gen.events(1), registry, ConfluentWire)
-      .withColumn("value", lit(strangerValue))
-    val raw2 = tmpDir("raw-strictdlq-main2")
-    RawIngest.demuxToTable(good.unionByName(stranger), registry, ConfluentWire,
-      tx(raw2), "spec", 0L, permissive = false, deadLetterPath = Some(dlq),
-      dlqCorrupt = false)
-    assert(RawIngest.readRaw(spark, raw2).count() == 8)
-    assert(spark.read.parquet(dlq).count() == 1)
-    assert(spark.read.parquet(dlq).select("value").collect().head
-      .getAs[Array[Byte]](0).sameElements(strangerValue))
-  }
 }

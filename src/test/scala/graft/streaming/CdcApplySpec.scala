@@ -128,8 +128,8 @@ class CdcApplySpec extends SparkTestBase {
     val v = dst.version
     CdcApply(dst, feed, Seq("id")) // redelivery
     assert(snap(dst) == snap(src))
-    // the replay's merge re-upserts identical rows (harmless commit);
-    // the delete finds nothing; state is unchanged either way
+    // the replay re-upserts identical rows in one harmless commit and
+    // deletes nothing; state is unchanged either way
     assert(snap(dst) == Set((1L, "a", 9.0)))
     assert(dst.version >= v)
   }
@@ -158,23 +158,6 @@ class CdcApplySpec extends SparkTestBase {
     src2.delete(col("id").isNull && col("v") === "x")
     CdcApply(dst2, src2.readChangeFeed(from, src2.version), Seq("id", "v"))
     assert(rows(dst2) == rows(src2) && rows(dst2) == Set((Some(1L), "x")))
-  }
-
-  test("over the collect gate, dead keys delete via the distributed deleteKeys path") {
-    val (src, dst) = tables()
-    src.append(Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0), (4L, "d", 4.0))
-      .toDF("id", "v", "amount"))
-    CdcApply(dst, src.readChangeFeed(-1L, src.version), Seq("id"))
-    val from = src.version
-    src.delete(col("id").isin(1L, 3L))
-    src.update(col("id") === 2L, Map("amount" -> lit(9.0)))
-    // force the over-threshold branch: the dead set must never reach
-    // the driver — TxTable.deleteKeys applies it as semi/anti joins
-    spark.conf.set(CdcApply.MaxDeleteKeysCollectKey, "0")
-    try CdcApply(dst, src.readChangeFeed(from, src.version), Seq("id"))
-    finally spark.conf.unset(CdcApply.MaxDeleteKeysCollectKey)
-    assert(snap(dst) == snap(src))
-    assert(snap(dst) == Set((2L, "b", 9.0), (4L, "d", 4.0)))
   }
 
   test("STREAMING replication: changeFeed source + foreachBatch apply, restartable") {
@@ -220,17 +203,17 @@ class CdcApplySpec extends SparkTestBase {
     assert(snap(dst) == Set((10L, "a", 100.0), (2L, "b", 2.0)))
   }
 
-  test("applyAtomic: one commit per slice, same convergence, no marker leak") {
+  test("apply: one commit per slice, same convergence, no marker leak") {
     val (src, dst) = tables()
     var cursor = -1L
     def sync(): Unit = {
       val to = src.version
       if (to > cursor) {
         val v0 = dst.version
-        CdcApply.applyAtomic(dst, src.readChangeFeed(cursor, to), Seq("id"))
+        CdcApply(dst, src.readChangeFeed(cursor, to), Seq("id"))
         cursor = to
         assert(dst.version <= v0 + 1,
-          s"atomic apply must land in at most one commit (v$v0 -> v${dst.version})")
+          s"apply must land in at most one commit (v$v0 -> v${dst.version})")
       }
       assert(snap(dst) == snap(src), s"replica diverged at v$to")
       assert(!dst.read().columns.contains("__cdc_dead"),
@@ -239,7 +222,7 @@ class CdcApplySpec extends SparkTestBase {
     src.append(Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("id", "v", "amount"))
     sync()
-    // mixed slice: update + delete + insert all in one atomic apply
+    // mixed slice: update + delete + insert all in one apply
     src.update(col("id") === 2L, Map("amount" -> lit(21.0)))
     src.delete(col("id") === 1L)
     src.append(Seq((4L, "d", 40.0)).toDF("id", "v", "amount"))
@@ -249,26 +232,49 @@ class CdcApplySpec extends SparkTestBase {
     sync()
     // at-least-once: re-applying the last slice is a no-op
     val before = snap(dst)
-    CdcApply.applyAtomic(dst, src.readChangeFeed(-1L, src.version), Seq("id"))
+    CdcApply(dst, src.readChangeFeed(-1L, src.version), Seq("id"))
     assert(snap(dst) == before)
   }
 
-  test("applyAtomic recomputes generated columns on the replica") {
+  test("apply recomputes generated columns on the replica") {
     val (src, _) = tables()
     val dst = new TxTable(spark, tmpDir("cdc-dst-gen"))
     src.append(Seq((1L, "a", 10.0)).toDF("id", "v", "amount"))
     // replica declares its own generated column over the replicated data
     dst.append(Seq((0L, "seed", 1.0)).toDF("id", "v", "amount"))
     dst.addGeneratedColumn("amount2", "amount * 2")
-    CdcApply.applyAtomic(dst, src.readChangeFeed(-1L, src.version), Seq("id"))
+    CdcApply(dst, src.readChangeFeed(-1L, src.version), Seq("id"))
     val got = dst.read().where(col("id") === 1L)
       .select("amount2").as[Double].collect().toSeq
     assert(got == Seq(20.0))
     val from = src.version
     src.update(col("id") === 1L, Map("amount" -> lit(15.0)))
-    CdcApply.applyAtomic(dst, src.readChangeFeed(from, src.version), Seq("id"))
+    CdcApply(dst, src.readChangeFeed(from, src.version), Seq("id"))
     val got2 = dst.read().where(col("id") === 1L)
       .select("amount2").as[Double].collect().toSeq
     assert(got2 == Seq(30.0))
+  }
+
+  test("a crash before the commit leaves the replica unchanged; a re-apply converges") {
+    val (src, dst) = tables()
+    src.append(Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
+      .toDF("id", "v", "amount"))
+    CdcApply(dst, src.readChangeFeed(-1L, src.version), Seq("id"))
+    val from = src.version
+    // a slice with an update, a delete and an insert
+    src.update(col("id") === 2L, Map("amount" -> lit(21.0)))
+    src.delete(col("id") === 1L)
+    src.append(Seq((4L, "d", 40.0)).toDF("id", "v", "amount"))
+    val feed = src.readChangeFeed(from, src.version)
+    val (v0, rows0) = (dst.version, snap(dst))
+    dst.beforeCommitHook = () => throw new IllegalStateException("crash before commit")
+    intercept[IllegalStateException](CdcApply(dst, feed, Seq("id")))
+    assert(dst.version == v0, "a crashed apply must not commit any part of the slice")
+    assert(snap(dst) == rows0, "a crashed apply must leave the replica's rows as they were")
+    // the retry (at-least-once redelivery of the same slice) converges
+    CdcApply(dst, feed, Seq("id"))
+    assert(dst.version == v0 + 1)
+    assert(snap(dst) == snap(src))
+    assert(snap(dst) == Set((2L, "b", 21.0), (3L, "c", 30.0), (4L, "d", 40.0)))
   }
 }

@@ -44,17 +44,9 @@ class CdcReplicaModelSpec extends SparkTestBase {
 
       def sync(): Unit = {
         val to = src.version
-        // rotate all three application paths — collected-predicate
-        // deletes, distributed deleteKeys (gate 0), and the atomic
-        // one-commit conditional merge — all must converge identically
-        val mode = rnd.nextInt(3)
-        if (mode == 1) spark.conf.set(CdcApply.MaxDeleteKeysCollectKey, "0")
-        else spark.conf.unset(CdcApply.MaxDeleteKeysCollectKey)
         if (to > cursor) {
-          try {
-            if (mode == 2) CdcApply.applyAtomic(dst, src.readChangeFeed(cursor, to), Seq("k"))
-            else CdcApply(dst, src.readChangeFeed(cursor, to), Seq("k"))
-          } catch {
+          try CdcApply(dst, src.readChangeFeed(cursor, to), Seq("k"))
+          catch {
             case _: IllegalStateException =>
               // the range spans an overwrite/restore: the documented
               // boundary — recover with a full re-sync
@@ -111,7 +103,6 @@ class CdcReplicaModelSpec extends SparkTestBase {
         }
         sync()
       }
-      spark.conf.unset(CdcApply.MaxDeleteKeysCollectKey) // no leak across suites
     }
   }
 }
