@@ -2,9 +2,10 @@ package graft.ingest
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, StructField, StructType}
 
 import graft.codec.{ConfluentWire, GlueWire, WireFormat}
 import graft.core.TxTable
@@ -22,35 +23,59 @@ import graft.streaming.TxTableSink
   * micro-batch is one exactly-once commit, keyed by the streaming
   * query id and the batch id.
   *
-  * 100 TB notes (SURVEY.md §7.5.8): the driver-side collect is over
-  * the *distinct schema ids* of a batch — bounded by registry size
-  * (~handfuls), never O(rows); decode happens executor-side inside
-  * [[AvroDecode]] after the schema-key filter, so each row is decoded
-  * once per batch (the decoded groups are cached across the
-  * dead-letter probe and the write when a DLQ is configured).
+  * A micro-batch costs two Spark jobs, neither with a shuffle: a key
+  * pass that emits one row per input partition holding that
+  * partition's distinct schema keys (deduplicated on the driver), and
+  * the write, where the decoded groups are coalesced back to the input
+  * partition count, so a commit stages one file per input partition
+  * whatever the number of schema versions in the batch.
+  *
+  * 100 TB notes (SURVEY.md §7.5.8): the driver-side collect is one row
+  * per input partition, each holding at most the registry's handful of
+  * schema keys — O(partitions × versions), never O(rows); decode
+  * happens executor-side inside [[AvroDecode]] after the schema-key
+  * filter, so each row is decoded once per batch (the decoded groups
+  * are cached across the dead-letter probe and the write when a DLQ is
+  * configured). The coalesce adds no exchange: a write task decodes
+  * every group of the partitions it owns, so write parallelism is the
+  * input's, as it was per group.
   */
 object RawIngest {
 
   /** Metadata columns carried into the raw table (ingest.scala:155-161). */
   private val metaCols = Seq("topic", "partition", "offset", "timestamp", "timestampType", "key")
 
+  /** A schema key with value equality (None for a null value). */
+  private def keyOf(bytes: Array[Byte]): Option[Seq[Byte]] = Option(bytes).map(_.toSeq)
+  private def bytesOf(key: Option[Seq[Byte]]): Array[Byte] = key.map(_.toArray).orNull
+
+  /** One row per input partition: that partition's distinct keys. */
+  private val keysEncoder = Encoders.row(StructType(Seq(
+    StructField("keys", ArrayType(BinaryType, containsNull = true)))))
+
   /** Demux one (micro-)batch into per-schema decoded groups and run
-    * `action` on them while the keyed batch is cached (the reference
-    * caches the batch across group passes, P9 at ingest.scala:127 —
-    * but leaks it; we release on exit). Group column layout: kafka
-    * metadata + `parsedValue` struct.
+    * `action` on them and the batch's input partition count while the
+    * keyed batch is cached (the reference caches the batch across
+    * group passes, P9 at ingest.scala:127 — but leaks it; we release
+    * on exit). Group column layout: kafka metadata + `parsedValue`
+    * struct.
     */
   def demux[T](batch: DataFrame, registry: SchemaRegistry, wire: WireFormat,
                permissive: Boolean = false, deadLetterPath: Option[String] = None)
-              (action: Seq[DataFrame] => T): T = {
+              (action: (Seq[DataFrame], Int) => T): T = {
     val keyed = batch
       .withColumn("schemaKey", wire.schemaKeyCol(col("value")))
       .withColumn("payload", wire.payloadCol(col("value")))
       .persist()
     try {
-      // P7/P8: tiny distinct set of schema keys crosses to the driver
-      val keys = keyed.select(col("schemaKey")).distinct().collect().map(_.getAs[Array[Byte]](0))
-      val resolved = keys.toSeq.map { keyBytes =>
+      // P7/P8: one map-side pass (it also fills the cache) sends each
+      // partition's distinct keys to the driver — no shuffle, and the
+      // row count is the partition count the write coalesces to
+      val perPartition = keyed.select(col("schemaKey")).mapPartitions { rows =>
+        Iterator.single(Row(rows.map(r => keyOf(r.getAs[Array[Byte]](0))).toSet.toSeq.map(bytesOf)))
+      }(keysEncoder).collect()
+      val keys = perPartition.toSeq.flatMap(_.getSeq[Array[Byte]](0).map(keyOf)).distinct.map(bytesOf)
+      val resolved = keys.map { keyBytes =>
         val schema = try {
           Some(wire match {
             // Confluent's schemaKeyCol is already just the 4 id bytes (F2)
@@ -123,7 +148,7 @@ object RawIngest {
             if (lenient) d.where(col("parsedValue").isNotNull) else d
           clean.drop("value")
         }
-        action(groups)
+        action(groups, perPartition.length)
       } finally if (deadLetterPath.isDefined) decodedGroups.foreach(_.unpersist())
     } finally keyed.unpersist()
   }
@@ -133,17 +158,19 @@ object RawIngest {
     * decoded groups are unioned by name with `allowMissingColumns`, so
     * a narrow schema's rows read the wider one's fields as null, and
     * the table's schema widens by name, nested struct fields included
-    * ([[TxTable]]'s mergeSchema). A crash before the log claim leaves
-    * the table at its old version; a redelivered batch is a no-op.
+    * ([[TxTable]]'s mergeSchema). The union is coalesced to the
+    * batch's input partition count, so the commit stages at most one
+    * file per input partition. A crash before the log claim leaves the
+    * table at its old version; a redelivered batch is a no-op.
     */
   def demuxToTable(batch: DataFrame, registry: SchemaRegistry, wire: WireFormat,
                    raw: TxTable, writerId: String, batchId: Long,
                    permissive: Boolean = false,
                    deadLetterPath: Option[String] = None): Unit =
-    demux(batch, registry, wire, permissive, deadLetterPath) { groups =>
+    demux(batch, registry, wire, permissive, deadLetterPath) { (groups, partitions) =>
       if (groups.nonEmpty)
-        raw.appendBatch(groups.reduce(_.unionByName(_, allowMissingColumns = true)),
-          writerId, batchId)
+        raw.appendBatch(groups.reduce(_.unionByName(_, allowMissingColumns = true))
+          .coalesce(partitions), writerId, batchId)
     }
 
   /** The raw table's current snapshot. */

@@ -25,9 +25,11 @@ object Medallion {
       .withColumn("event_time", timestamp_seconds(col("timestamp")))
 
   /** gold: the day-filtered product-mix aggregate (gold.py:14-42).
-    * `last(timestamp_str)` (gold.py:29) is order-nondeterministic by
-    * definition; kept for fidelity alongside a deterministic
-    * max(event_time).
+    * The reference's `last(timestamp_str)` (gold.py:29) depends on row
+    * order; here `last` is the `timestamp_str` of the group's latest
+    * `event_time`. Both derive from `timestamp`, so tied maxima carry
+    * the same string and `last` always equals `last_event_time`
+    * formatted `dd-MM-yyyy H:mm:ss`.
     */
   private[medallion] def goldAgg(silver: DataFrame,
                                  dayStart: java.sql.Timestamp): DataFrame =
@@ -38,7 +40,7 @@ object Medallion {
         count(col("type")).as("count_type"),
         count(col("color")).as("count_color"),
         count(col("size")).as("count_size"),
-        last(col("timestamp_str")).as("last"),
+        max_by(col("timestamp_str"), col("event_time")).as("last"),
         max(col("event_time")).as("last_event_time"))
 
   /** Pure-batch recomputation of bronze→silver→gold from a raw table —

@@ -32,34 +32,6 @@ import org.apache.spark.sql.functions._
   */
 class MergeJobCountSpec extends SparkTestBase {
 
-  /** SQL executions started while `body` runs (listener delivery is
-    * async — polled until stable).
-    */
-  private def executionsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          n.incrementAndGet()
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = n.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   private def freshTable(): TxTable = {
     val t = new TxTable(spark, tmpDir("merge-jobs"))
     t.append(spark.range(0, 100).select(
@@ -71,7 +43,7 @@ class MergeJobCountSpec extends SparkTestBase {
     val t = freshTable()
     val src = spark.range(0, 10).select(col("id").as("k"), lit(-1L).as("v"))
     src.count() // warm the source's scan outside the window
-    val n = executionsDuring { t.merge(src, Seq("k")) }
+    val n = workDuring { t.merge(src, Seq("k")) }.sqlExecutions
     assert(n <= 3,
       s"merge ran $n SQL executions — expected audit + touched collect + one " +
         "fused staging write (was 5 before the round-13 fusion)")
@@ -79,9 +51,9 @@ class MergeJobCountSpec extends SparkTestBase {
 
   test("update = 2 actions: provenance scan and fused staging write") {
     val t = freshTable()
-    val n = executionsDuring {
+    val n = workDuring {
       t.update(col("k") < 5, Map("v" -> lit(0L)))
-    }
+    }.sqlExecutions
     assert(n <= 2,
       s"update ran $n SQL executions — expected provenance scan + one fused " +
         "staging write (was 3 before the round-13 fusion)")
@@ -89,7 +61,7 @@ class MergeJobCountSpec extends SparkTestBase {
 
   test("delete = 2 actions: provenance scan and fused staging write") {
     val t = freshTable()
-    val n = executionsDuring { t.delete(col("k") < 5) }
+    val n = workDuring { t.delete(col("k") < 5) }.sqlExecutions
     assert(n <= 2,
       s"delete ran $n SQL executions — expected provenance scan + one fused " +
         "staging write (was 3 before the round-13 fusion)")
@@ -101,7 +73,7 @@ class MergeJobCountSpec extends SparkTestBase {
     t.mergeScd2(base, Seq("k"), 1L)
     val src = base.withColumn("v", when(col("k") % 10 === 0, col("v") + 1)
       .otherwise(col("v")))
-    val n = executionsDuring { t.mergeScd2(src, Seq("k"), 2L) }
+    val n = workDuring { t.mergeScd2(src, Seq("k"), 2L) }.sqlExecutions
     // the no-op probe (newRows.isEmpty) runs only when no file is
     // touched, so a churn epoch never pays it
     assert(n <= 4,
@@ -114,7 +86,7 @@ class MergeJobCountSpec extends SparkTestBase {
     val t = freshTable()
     val dead = spark.range(0, 5).select(col("id").as("k"))
     dead.count()
-    val n = executionsDuring { t.deleteKeys(dead, Seq("k")) }
+    val n = workDuring { t.deleteKeys(dead, Seq("k")) }.sqlExecutions
     assert(n <= 3, s"deleteKeys ran $n SQL executions — expected <= 3")
   }
 
@@ -122,10 +94,10 @@ class MergeJobCountSpec extends SparkTestBase {
     val t = freshTable()
     val src = spark.range(95, 105).select(col("id").as("k"), lit(-1L).as("v"))
     src.count()
-    val n = executionsDuring {
+    val n = workDuring {
       t.mergeBuilder(src, Seq("k")).whenMatchedUpdateAll()
         .whenNotMatchedInsertAll().run()
-    }
+    }.sqlExecutions
     assert(n <= 3, s"mergeBuilder ran $n SQL executions — expected <= 3")
   }
 
@@ -134,13 +106,13 @@ class MergeJobCountSpec extends SparkTestBase {
     src.count()
     val t1 = freshTable()
     val v1 = t1.version
-    val n1 = executionsDuring { t1.merge(src, Seq("k")) }
+    val n1 = workDuring { t1.merge(src, Seq("k")) }.sqlExecutions
     assert(n1 <= 3, s"pure-insert merge ran $n1 SQL executions — expected <= 3")
     val t2 = freshTable()
-    val n2 = executionsDuring {
+    val n2 = workDuring {
       t2.mergeBuilder(src, Seq("k")).whenMatchedUpdateAll()
         .whenNotMatchedInsertAll().run()
-    }
+    }.sqlExecutions
     assert(n2 <= 3, s"pure-insert mergeBuilder ran $n2 SQL executions — expected " +
       "<= 3 (audit + provenance scan + staged write; no insert probe)")
     assert(t1.version == v1 + 1 && t1.read().count() == 110L)
@@ -155,7 +127,7 @@ class MergeJobCountSpec extends SparkTestBase {
     src.append(spark.range(100, 110).select(col("id").as("k"), (col("id") * 2).as("v")))
     val feed = src.readChangeFeed(from, src.version)
     val v0 = dst.version
-    val n = executionsDuring { graft.streaming.CdcApply(dst, feed, Seq("k")) }
+    val n = workDuring { graft.streaming.CdcApply(dst, feed, Seq("k")) }.sqlExecutions
     assert(n <= 3, s"insert-only CdcApply.apply ran $n SQL executions — expected " +
       "<= 3 (audit + provenance scan + staged write)")
     assert(dst.version == v0 + 1 && dst.read().count() == 110L)
@@ -171,15 +143,15 @@ class MergeJobCountSpec extends SparkTestBase {
 
   test("deleteMergeOnRead = 2 actions: sidecar write and fused staging write") {
     val t = freshTable()
-    val n = executionsDuring { t.deleteMergeOnRead(col("k") < 5) }
+    val n = workDuring { t.deleteMergeOnRead(col("k") < 5) }.sqlExecutions
     assert(n <= 2, s"deleteMergeOnRead ran $n SQL executions — expected <= 2")
   }
 
   test("updateMergeOnRead = 2 actions: sidecar write and fused staging write") {
     val t = freshTable()
-    val n = executionsDuring {
+    val n = workDuring {
       t.updateMergeOnRead(col("k") < 5, Map("v" -> lit(0L)))
-    }
+    }.sqlExecutions
     assert(n <= 2, s"updateMergeOnRead ran $n SQL executions — expected <= 2")
   }
 
@@ -187,7 +159,7 @@ class MergeJobCountSpec extends SparkTestBase {
     val t = freshTable()
     val repl = spark.range(0, 5).select(col("id").as("k"), lit(7L).as("v"))
     repl.count()
-    val n = executionsDuring { t.replaceWhere(col("k") < 5, repl) }
+    val n = workDuring { t.replaceWhere(col("k") < 5, repl) }.sqlExecutions
     assert(n <= 4, s"replaceWhere ran $n SQL executions — expected <= 4")
   }
 }

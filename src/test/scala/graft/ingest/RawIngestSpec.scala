@@ -29,6 +29,31 @@ class RawIngestSpec extends SparkTestBase {
     assert(out.select("eventId").distinct().count() == 90)
   }
 
+  test("a mixed v1/v2 batch of 4 partitions commits 4 files in 2 jobs with no shuffle") {
+    val gen = new EventGenerator(seed = 21)
+    val registry = new InMemorySchemaRegistry
+    // envelopeDF parallelizes into 4 partitions, each holding both versions
+    val batch = gen.envelopeDF(spark, gen.events(90), registry, ConfluentWire)
+    assert(batch.rdd.getNumPartitions == 4)
+    val raw = tx(tmpDir("raw-two-jobs"))
+    val work = workDuring {
+      RawIngest.demuxToTable(batch, registry, ConfluentWire, raw, "spec", 0L)
+    }
+    // one key pass and one write; the groups share the input's 4 tasks
+    assert(work.jobs == 2, s"demuxToTable ran ${work.jobs} jobs, expected 2")
+    assert(work.shuffleWriteBytes == 0L, s"demuxToTable shuffled ${work.shuffleWriteBytes} B")
+    assert(work.sqlExecutions <= 2, s"demuxToTable ran ${work.sqlExecutions} SQL executions")
+    assert(raw.state().files.size == 4, "one staged file per input partition, not per group")
+    val out = RawIngest.readRaw(spark, raw.tablePath).select(col("parsedValue.*"))
+    assert(out.count() == 90 && out.filter(col("size").isNull).count() == 30)
+
+    val v1 = tx(tmpDir("raw-v1-files"))
+    RawIngest.demuxToTable(
+      gen.envelopeDF(spark, gen.events(60).filterNot(_.isV2), registry, ConfluentWire),
+      registry, ConfluentWire, v1, "spec", 0L)
+    assert(v1.state().files.size == 4, "a one-group batch stages one file per partition")
+  }
+
   test("demux works for the Glue wire format (uuid header demux)") {
     val gen = new EventGenerator(seed = 2)
     val registry = new InMemorySchemaRegistry

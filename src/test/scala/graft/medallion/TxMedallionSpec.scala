@@ -18,6 +18,13 @@ class TxMedallionSpec extends SparkTestBase {
     .map(r => (r.getString(0), Option(r.getString(1)), Option(r.getString(2)), r.getLong(3)))
     .toSet
 
+  /** Gold's `last` is the string form of its `last_event_time`. */
+  private def assertLastIsLatest(gold: org.apache.spark.sql.DataFrame): Unit = {
+    val off = gold.where(!col("last").eqNullSafe(
+      date_format(col("last_event_time"), "dd-MM-yyyy H:mm:ss")))
+    assert(off.isEmpty, s"gold rows whose last is not their latest event: ${off.collect().toSeq}")
+  }
+
   test("streaming medallion chain over the commit-log source equals the batch recompute") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -55,6 +62,7 @@ class TxMedallionSpec extends SparkTestBase {
     val dupCount = t.silver.read().groupBy("eventId").count()
       .where(col("count") > 1).count()
     assert(dupCount == 0, "cross-restart dedup must keep one row per eventId")
+    assertLastIsLatest(t.gold.read())
 
     // run 3: nothing new — no stage commits (checkpointed offsets +
     // idempotent sinks hold), the answer is unchanged
@@ -115,6 +123,7 @@ class TxMedallionSpec extends SparkTestBase {
     val dupCount = t.silver.read().groupBy("eventId").count()
       .where(col("count") > 1).count()
     assert(dupCount == 0, "cross-increment dedup must keep one row per eventId")
+    assertLastIsLatest(t.gold.read())
 
     // run 3: nothing new — bronze and silver commit nothing (the
     // exactly-once cursors hold), gold rebuilds to the same answer
