@@ -4,9 +4,11 @@ import java.util.UUID
 
 import scala.annotation.tailrec
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftWriteBridge, Row, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -990,7 +992,8 @@ class TxTable(spark: SparkSession, val tablePath: String,
     import org.apache.spark.util.sketch.BloomFilter
     if (fileNames.isEmpty || blooms.isEmpty) return
     val rootStr = root.toString
-    val shc = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val shc = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val df = spark.read.option("mergeSchema", "true")
       .parquet(fileNames.map(f => new Path(root, f).toString): _*)
     blooms.foreach { case (colName, cfg) =>
@@ -1025,7 +1028,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
             .reduceByKey { (a, b) => a.mergeInPlace(b); a }
             .foreachPartition { it: Iterator[(String, BloomFilter)] =>
               val rootP = new Path(rootStr)
-              val fsv = rootP.getFileSystem(shc.value)
+              val fsv = rootP.getFileSystem(shc.value.value)
               it.foreach { case (file, bf) =>
                 val out = fsv.create(
                   new Path(rootP, TxTable.bloomName(file, colName)), true)
@@ -1346,12 +1349,13 @@ class TxTable(spark: SparkSession, val tablePath: String,
   private def deletedPairs(fileAndDv: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.Encoders
     val rootStr = root.toString
-    val shc = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val shc = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     spark.createDataset(fileAndDv)(
         Encoders.tuple(Encoders.STRING, Encoders.STRING))
       .flatMap { case (f, dv) =>
         val rootP = new Path(rootStr)
-        readDvFile(rootP.getFileSystem(shc.value), new Path(rootP, dv))
+        readDvFile(rootP.getFileSystem(shc.value.value), new Path(rootP, dv))
           .iterator.map(i => (f, i))
       }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
       .toDF(DvFileCol, DvIdxCol)
@@ -2640,14 +2644,15 @@ class TxTable(spark: SparkSession, val tablePath: String,
       : Seq[(String, String, Long)] = {
     import org.apache.spark.sql.{functions => F, Encoders}
     val rootStr = root.toString
-    val shc = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val shc = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     pairs
       .repartition(F.col(DvFileCol))
       .sortWithinPartitions(F.col(DvFileCol), F.col(DvIdxCol))
       .as[(String, Long)](Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
       .mapPartitions { it =>
         val rootP = new Path(rootStr)
-        val fsv = rootP.getFileSystem(shc.value)
+        val fsv = rootP.getFileSystem(shc.value.value)
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
         var curFile: String = null
         var buf = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -2831,10 +2836,11 @@ class TxTable(spark: SparkSession, val tablePath: String,
       }
       .filter(_.getModificationTime < cutoff)
       .toSeq
-    // a writer that crashed inside stageData leaves its whole
-    // _staging-<uuid> directory behind, never referenced by any
-    // manifest — without this sweep it would leak forever; the same
-    // age guard keeps an IN-FLIGHT writer's staging safe
+    // a table written by an older writer may hold a crashed writer's
+    // _staging-<uuid> directory, never referenced by any manifest —
+    // without this sweep it would leak forever; the same age guard
+    // keeps an IN-FLIGHT writer's staging safe (a crashed in-place
+    // write leaves unreferenced *.parquet files, swept above)
     val deadStaging = rootListing.iterator
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("_staging-"))
       .filter(_.getModificationTime < cutoff)
@@ -3261,17 +3267,19 @@ class TxTable(spark: SparkSession, val tablePath: String,
 
   /** Write df's rows as uniquely-named parquet files in the table root
     * (invisible until a manifest references them); returns each name
-    * with its footer-derived column stats (one cheap footer read per
-    * staged file — the write-side cost of data skipping).
+    * with its footer-derived column stats. Each write task writes its
+    * files in place and reads their footers itself
+    * ([[GraftWriteBridge.writeSplit]]), so a write costs one Spark job
+    * and no rename, listing or driver-side footer read. A task that
+    * fails deletes its files; a failed job's files are deleted by the
+    * write's id; a file a lost executor or a speculative duplicate
+    * leaves behind is unreferenced, and [[vacuum]] sweeps it.
     */
   private def stageData(df: DataFrame, prefix: String = "part",
                         collectStats: Boolean = true,
                         partitionBy: Seq[String] = Nil,
                         filesPerValue: Int = 1): Seq[(String, Option[FileStats])] = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val fsv = fs
-    fsv.mkdirs(root)
-    val staging = new Path(root, s"_staging-${UUID.randomUUID()}")
     // Partitioned staging writes VALUE-PURE files: each partition
     // value is clustered into its own task (hash repartition on the
     // partition columns — plus a deterministic content-hash salt when
@@ -3296,210 +3304,87 @@ class TxTable(spark: SparkSession, val tablePath: String,
         s"column name(s) ${clash.mkString(", ")} collide with the partitioned " +
           "write's reserved __gpart_ staging prefix")
       val dup = partitionBy.foldLeft(df)((d, c) => d.withColumn(s"__gpart_$c", col(c)))
-      // the salt is itself a split dir, so a giant value splits even
+      // the salt is itself a split column, so a giant value splits even
       // when AQE coalesces the clustering shuffle into few tasks (the
-      // shuffle governs parallelism; the dirs govern file boundaries)
+      // shuffle governs parallelism; the split governs file boundaries)
       val salted = if (filesPerValue == 1) dup
         else dup.withColumn("__gpart_salt",
           pmod(xxhash64(df.columns.toIndexedSeq.map(col): _*), lit(filesPerValue)))
       salted.repartition(dirs.map(col): _*)
     }
-    val writer = out.write.mode("overwrite")
-    (if (partitionBy.isEmpty) writer else writer.partitionBy(dirs: _*))
-      .parquet(staging.toString)
-    val names = parquetLeaves(fsv, staging)
-      .map { part =>
-        val name = s"$prefix-${UUID.randomUUID()}.parquet"
-        val target = new Path(root, name)
-        if (!fsv.rename(part.getPath, target))
-          throw new java.io.IOException(s"failed to stage ${part.getPath} -> $name")
-        name -> (if (collectStats) footerStats(target) else None)
-      }.toVector
-    fsv.delete(staging, true)
-    // a PROVABLY empty part (a delete that emptied a file, a skewed
-    // repartition) would live in the table forever, stats-free rows to
-    // scan and never prune — drop it here instead of committing it.
-    // Only a footer that says rows == 0 qualifies; an unreadable footer
-    // stays (never discard data on a guess).
+    val names = writeFiles(out, dirs, _ => prefix, _ => collectStats).map(namedStats)
+    if (collectStats) keepNonEmptyIndexed(names) else names
+  }
+
+  /** The one write primitive under [[stageData]] and [[stageDataAndCdf]]:
+    * one file per (task, value of the `split` columns) in the table
+    * root, named `prefix(split value)-…`, with footer stats read by the
+    * task where `stats(split value)` holds.
+    */
+  private def writeFiles(df: DataFrame, split: Seq[String], prefix: Row => String,
+      stats: Row => Boolean): Seq[GraftWriteBridge.WrittenFile[FileStats]] = {
+    fs.mkdirs(root)
+    GraftWriteBridge.writeSplit[FileStats](df, root, split, prefix,
+      (value, path, conf) => if (stats(value)) TxTable.footerStats(path, conf) else None)
+  }
+
+  private def namedStats(f: GraftWriteBridge.WrittenFile[FileStats])
+      : (String, Option[FileStats]) = f.name -> f.footer
+
+  /** A PROVABLY empty part (a delete that emptied a file, a skewed
+    * repartition) would live in the table forever, stats-free rows to
+    * scan and never prune — drop it instead of committing it. Only a
+    * footer that says rows == 0 qualifies; an unreadable footer stays
+    * (never discard data on a guess). Bloom-index sidecars are staged
+    * WITH the kept data files, before the commit that makes either
+    * visible — a reader can never see an indexed file without its
+    * sidecar. Change-record files are not live data and never pass here.
+    */
+  private def keepNonEmptyIndexed(names: Seq[(String, Option[FileStats])])
+      : Seq[(String, Option[FileStats])] = {
     val (empty, kept) = names.partition(_._2.exists(_.rows == 0L))
-    empty.foreach { case (f, _) => fsv.delete(new Path(root, f), false) }
-    // bloom-index sidecars are staged WITH the data files, before the
-    // commit that makes either visible — a reader can never see an
-    // indexed file without its sidecar. Change-record stages
-    // (collectStats = false) are not live data and are never indexed.
-    if (collectStats && kept.nonEmpty) {
+    empty.foreach { case (f, _) => fs.delete(new Path(root, f), false) }
+    if (kept.nonEmpty) {
       val blooms = state().blooms
       if (blooms.nonEmpty) buildBloomSidecars(kept.map(_._1), blooms)
     }
     kept
   }
 
-  private def parquetLeaves(fsv: FileSystem, p: Path)
-      : Iterator[org.apache.hadoop.fs.FileStatus] =
-    fsv.listStatus(p).iterator.flatMap { st =>
-      if (st.isDirectory) parquetLeaves(fsv, st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) Iterator(st)
-      else Iterator.empty
-    }
-
   /** Stage a rewrite's data files AND its row-level change record in
     * ONE write job (was: two sequential driver-blocking writes, the
     * per-verb floor under every merge/update/delete). The two frames
-    * union under a `__gstage` split directory that the partitioned
-    * write drops from the files; a union concatenates its children's
-    * partitions, so every task still writes exactly one single-sided
-    * file and the file set matches the two separate writes'. The
-    * change-record-only columns (`_change_type`) ride along in the
-    * data files as all-null physical columns — invisible to every
-    * reader, because data reads apply the manifest schema
-    * ([[relationFor]]/[[dvFilteredRead]]) and sidecar builds look
-    * columns up by name; the committed Meta schema comes from the
-    * logical frame and never sees them. Empty-part dropping and bloom
-    * sidecars apply to the data half exactly as in [[stageData]];
-    * change files skip footer stats as before.
+    * union under a `__gstage` split column that the write drops from
+    * the files; a union concatenates its children's partitions, so
+    * every task still writes exactly one single-sided file (`part-`
+    * for data, `cdf-` for the change record) and the file set matches
+    * the two separate writes'. The change-record-only columns
+    * (`_change_type`) ride along in the data files as all-null
+    * physical columns — invisible to every reader, because data reads
+    * apply the manifest schema ([[relationFor]]/[[dvFilteredRead]]) and
+    * sidecar builds look columns up by name; the committed Meta schema
+    * comes from the logical frame and never sees them. The tasks write
+    * in place and read the data files' footer stats, as in
+    * [[stageData]], whose failure cleanup, empty-part dropping and bloom
+    * sidecars apply to the data half; change files skip footer stats.
     */
   private def stageDataAndCdf(data: DataFrame, cdf: DataFrame)
       : (Seq[(String, Option[FileStats])], Seq[(String, Option[FileStats])]) = {
     import org.apache.spark.sql.functions.lit
-    val fsv = fs
-    fsv.mkdirs(root)
     val clash = (data.columns ++ cdf.columns).filter(_ == "__gstage")
     require(clash.isEmpty,
       "column name __gstage collides with the fused staging split column")
-    val staging = new Path(root, s"_staging-${UUID.randomUUID()}")
-    data.withColumn("__gstage", lit("d"))
-      .unionByName(cdf.withColumn("__gstage", lit("c")),
-        allowMissingColumns = true)
-      .write.mode("overwrite").partitionBy("__gstage").parquet(staging.toString)
-    def stagePart(sub: String, prefix: String, collectStats: Boolean)
-        : Vector[(String, Option[FileStats])] = {
-      val dir = new Path(staging, s"__gstage=$sub")
-      if (!fsv.exists(dir)) Vector.empty
-      else parquetLeaves(fsv, dir).map { part =>
-        val name = s"$prefix-${UUID.randomUUID()}.parquet"
-        val target = new Path(root, name)
-        if (!fsv.rename(part.getPath, target))
-          throw new java.io.IOException(s"failed to stage ${part.getPath} -> $name")
-        name -> (if (collectStats) footerStats(target) else None)
-      }.toVector
-    }
-    val dataNames = stagePart("d", "part", collectStats = true)
-    val cdfNames = stagePart("c", "cdf", collectStats = false)
-    fsv.delete(staging, true)
-    val (empty, kept) = dataNames.partition(_._2.exists(_.rows == 0L))
-    empty.foreach { case (f, _) => fsv.delete(new Path(root, f), false) }
-    if (kept.nonEmpty) {
-      val blooms = state().blooms
-      if (blooms.nonEmpty) buildBloomSidecars(kept.map(_._1), blooms)
-    }
-    (kept, cdfNames)
+    val isData: Row => Boolean = _.getString(0) == "d"
+    val (dataFiles, cdfFiles) = writeFiles(
+      data.withColumn("__gstage", lit("d"))
+        .unionByName(cdf.withColumn("__gstage", lit("c")), allowMissingColumns = true),
+      Seq("__gstage"), v => if (isData(v)) "part" else "cdf", isData)
+      .partition(f => isData(f.split))
+    (keepNonEmptyIndexed(dataFiles.map(namedStats)), cdfFiles.map(namedStats))
   }
 
-  /** Per-file (rows, per-column min/max/nullCount) from the parquet
-    * footer — long/double/string columns only; anything else simply
-    * never prunes. Stats collection is best-effort: a footer we cannot
-    * read yields None, which only disables skipping for that file.
-    */
-  private def footerStats(p: Path): Option[FileStats] = try {
-    import org.apache.parquet.column.statistics._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      p, spark.sparkContext.hadoopConfiguration)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val rows = blocks.map(_.getRowCount).sum
-      // fold row-group stats per column; a column is usable only if
-      // EVERY block carries comparable stats for it
-      var cols = Map.empty[String, ColStats]
-      var dropped = Set.empty[String]
-      blocks.foreach(_.getColumns.asScala.foreach { c =>
-        val name = c.getPath.toDotString
-        if (!dropped.contains(name) && !name.contains(".")) {
-          val st = c.getStatistics
-          val logical = c.getPrimitiveType.getLogicalTypeAnnotation
-          val isString =
-            logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-          // int32/int64-backed DECIMAL stats are raw UNSCALED values;
-          // they must be rescaled here or every comparison against a
-          // scaled literal (e.g. lit(BigDecimal("5.00"))) is off by
-          // 10^scale and prunes files that contain matching rows.
-          // Dates/timestamps stay ints and never match a literal kind
-          // literalJ produces, so they are safely never pruned.
-          val decScale: Option[Int] = logical match {
-            case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-              Some(d.getScale)
-            case _ => None
-          }
-          // TIMESTAMP stats normalize to MICROS — the unit literalJ
-          // produces for timestamp literals. NANOS is deliberately
-          // dropped: under spark.sql.legacy.parquet.nanosAsLong Spark
-          // reads that column as a plain LONG of nanos, so a micros
-          // comparison would mis-prune. DATE stats stay raw epoch-days
-          // (what literalJ produces for date literals). A timestamp
-          // unit we do not recognize drops the column (never prunes).
-          import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-          val tsScale: Option[Option[Long => Long]] = logical match {
-            case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              ts.getUnit match {
-                case TimeUnit.MICROS => Some(Some(identity[Long]))
-                case TimeUnit.MILLIS => Some(Some((v: Long) => math.multiplyExact(v, 1000L)))
-                case _ => Some(None) // NANOS or unknown: no stats
-              }
-            case _ => None
-          }
-          def intJ(unscaled: Long): JValue = decScale match {
-            case Some(sc) => JDecimal(BigDecimal(BigInt(unscaled), sc))
-            case None => JLong(tsScale.flatten.map(_(unscaled)).getOrElse(unscaled))
-          }
-          // a block with NO non-null value but a recorded null count is
-          // ALL-NULL: record it as (JNull, JNull) — no comparison, IN,
-          // or isNotNull can ever hold on it, so the kernel may prune
-          // the file (for any column type; there are no values whose
-          // representation could matter). Delta records the same fact
-          // as nullCount == numRecords.
-          val mm: Option[(JValue, JValue)] =
-            if (st == null) None
-            else if (!st.hasNonNullValue)
-              if (st.isNumNullsSet) Some((JNull, JNull)) else None
-            else if (tsScale.contains(None)) None
-            else st match {
-              case s: IntStatistics => Some((intJ(s.getMin.toLong), intJ(s.getMax.toLong)))
-              case s: LongStatistics => Some((intJ(s.getMin), intJ(s.getMax)))
-              case s: FloatStatistics =>
-                Some((JDouble(s.getMin.toDouble), JDouble(s.getMax.toDouble)))
-              case s: DoubleStatistics => Some((JDouble(s.getMin), JDouble(s.getMax)))
-              case s: BinaryStatistics if isString =>
-                Some((JString(s.genericGetMin.toStringUsingUTF8),
-                  JString(s.genericGetMax.toStringUsingUTF8)))
-              case _ => None
-            }
-          // JNull is the identity when folding min/max across blocks:
-          // an all-null block constrains nothing
-          def jmin(a: JValue, b: JValue): JValue =
-            if (a == JNull) b else if (b == JNull) a else minJ(a, b)
-          def jmax(a: JValue, b: JValue): JValue =
-            if (a == JNull) b else if (b == JNull) a else maxJ(a, b)
-          mm match {
-            case None => dropped += name; cols -= name // conservative: no skip
-            case Some((mn, mx)) =>
-              // a footer may legally omit the null count; -1 = unknown,
-              // and unknown is contagious across row groups — an isNull
-              // prune must never treat "unrecorded" as "zero nulls"
-              val nulls = if (st.isNumNullsSet) st.getNumNulls else -1L
-              cols = cols.updatedWith(name) {
-                case None => Some(ColStats(mn, mx, nulls))
-                case Some(prev) => Some(ColStats(
-                  jmin(prev.min, mn), jmax(prev.max, mx),
-                  if (prev.nulls < 0 || nulls < 0) -1L else prev.nulls + nulls))
-              }
-          }
-        }
-      })
-      Some(FileStats(rows, cols))
-    } finally reader.close()
-  } catch { case _: Throwable => None }
+  private def footerStats(p: Path): Option[FileStats] =
+    TxTable.footerStats(p, spark.sparkContext.hadoopConfiguration)
 
   /** Optimistic-concurrency loop: build actions against the freshest
     * state, try to claim head+1, reload on a lost race. `build`
@@ -4349,6 +4234,115 @@ object TxTable {
       JObject("a" -> JString("dropBloomIndex"), "column" -> JString(column))
   }
 
+  /** Per-file (rows, per-column min/max/nullCount) from the parquet
+    * footer — long/double/string columns only; anything else simply
+    * never prunes. Stats collection is best-effort: a footer we cannot
+    * read yields None, which only disables skipping for that file.
+    */
+  private[core] def footerStats(p: Path, conf: Configuration): Option[FileStats] = try {
+    import org.apache.parquet.column.statistics._
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import scala.jdk.CollectionConverters._
+    // read options from `conf`: the one-argument open builds them from
+    // a fresh Configuration, which parses Hadoop's default XML
+    // resources again on every call
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
+    try {
+      val blocks = reader.getFooter.getBlocks.asScala
+      val rows = blocks.map(_.getRowCount).sum
+      // fold row-group stats per column; a column is usable only if
+      // EVERY block carries comparable stats for it
+      var cols = Map.empty[String, ColStats]
+      var dropped = Set.empty[String]
+      blocks.foreach(_.getColumns.asScala.foreach { c =>
+        val name = c.getPath.toDotString
+        if (!dropped.contains(name) && !name.contains(".")) {
+          val st = c.getStatistics
+          val logical = c.getPrimitiveType.getLogicalTypeAnnotation
+          val isString =
+            logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+          // int32/int64-backed DECIMAL stats are raw UNSCALED values;
+          // they must be rescaled here or every comparison against a
+          // scaled literal (e.g. lit(BigDecimal("5.00"))) is off by
+          // 10^scale and prunes files that contain matching rows.
+          // Dates/timestamps stay ints and never match a literal kind
+          // literalJ produces, so they are safely never pruned.
+          val decScale: Option[Int] = logical match {
+            case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+              Some(d.getScale)
+            case _ => None
+          }
+          // TIMESTAMP stats normalize to MICROS — the unit literalJ
+          // produces for timestamp literals. NANOS is deliberately
+          // dropped: under spark.sql.legacy.parquet.nanosAsLong Spark
+          // reads that column as a plain LONG of nanos, so a micros
+          // comparison would mis-prune. DATE stats stay raw epoch-days
+          // (what literalJ produces for date literals). A timestamp
+          // unit we do not recognize drops the column (never prunes).
+          import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+          val tsScale: Option[Option[Long => Long]] = logical match {
+            case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              ts.getUnit match {
+                case TimeUnit.MICROS => Some(Some(identity[Long]))
+                case TimeUnit.MILLIS => Some(Some((v: Long) => math.multiplyExact(v, 1000L)))
+                case _ => Some(None) // NANOS or unknown: no stats
+              }
+            case _ => None
+          }
+          def intJ(unscaled: Long): JValue = decScale match {
+            case Some(sc) => JDecimal(BigDecimal(BigInt(unscaled), sc))
+            case None => JLong(tsScale.flatten.map(_(unscaled)).getOrElse(unscaled))
+          }
+          // a block with NO non-null value but a recorded null count is
+          // ALL-NULL: record it as (JNull, JNull) — no comparison, IN,
+          // or isNotNull can ever hold on it, so the kernel may prune
+          // the file (for any column type; there are no values whose
+          // representation could matter). Delta records the same fact
+          // as nullCount == numRecords.
+          val mm: Option[(JValue, JValue)] =
+            if (st == null) None
+            else if (!st.hasNonNullValue)
+              if (st.isNumNullsSet) Some((JNull, JNull)) else None
+            else if (tsScale.contains(None)) None
+            else st match {
+              case s: IntStatistics => Some((intJ(s.getMin.toLong), intJ(s.getMax.toLong)))
+              case s: LongStatistics => Some((intJ(s.getMin), intJ(s.getMax)))
+              case s: FloatStatistics =>
+                Some((JDouble(s.getMin.toDouble), JDouble(s.getMax.toDouble)))
+              case s: DoubleStatistics => Some((JDouble(s.getMin), JDouble(s.getMax)))
+              case s: BinaryStatistics if isString =>
+                Some((JString(s.genericGetMin.toStringUsingUTF8),
+                  JString(s.genericGetMax.toStringUsingUTF8)))
+              case _ => None
+            }
+          // JNull is the identity when folding min/max across blocks:
+          // an all-null block constrains nothing
+          def jmin(a: JValue, b: JValue): JValue =
+            if (a == JNull) b else if (b == JNull) a else minJ(a, b)
+          def jmax(a: JValue, b: JValue): JValue =
+            if (a == JNull) b else if (b == JNull) a else maxJ(a, b)
+          mm match {
+            case None => dropped += name; cols -= name // conservative: no skip
+            case Some((mn, mx)) =>
+              // a footer may legally omit the null count; -1 = unknown,
+              // and unknown is contagious across row groups — an isNull
+              // prune must never treat "unrecorded" as "zero nulls"
+              val nulls = if (st.isNumNullsSet) st.getNumNulls else -1L
+              cols = cols.updatedWith(name) {
+                case None => Some(ColStats(mn, mx, nulls))
+                case Some(prev) => Some(ColStats(
+                  jmin(prev.min, mn), jmax(prev.max, mx),
+                  if (prev.nulls < 0 || nulls < 0) -1L else prev.nulls + nulls))
+              }
+          }
+        }
+      })
+      Some(FileStats(rows, cols))
+    } finally reader.close()
+  } catch { case _: Throwable => None }
+
   /** Sidecar path of a (data file, indexed column) bloom filter. */
   private[core] def bloomName(dataFile: String, colName: String): String =
     s"bloom-$dataFile.$colName.bin"
@@ -4801,24 +4795,4 @@ object TxTable {
           s"committed ${committed.simpleString} — evolution adds columns, " +
           s"never changes types (set $TypeWideningProp=true for widening)")
     }
-}
-
-/** Hadoop's Configuration is not java-serializable and Spark's own
-  * wrapper is private[spark]; tasks that touch the FileSystem directly
-  * (deletion-vector sidecar IO) carry this minimal Writable-based
-  * clone instead.
-  */
-private[core] class SerializableHadoopConf(
-    @transient private var conf: org.apache.hadoop.conf.Configuration)
-  extends Serializable {
-  def value: org.apache.hadoop.conf.Configuration = conf
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.readFields(in)
-  }
 }

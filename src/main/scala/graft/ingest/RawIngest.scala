@@ -98,8 +98,13 @@ object RawIngest {
       deadLetterPath.foreach { dlq =>
         val unknown = resolved.collect { case (k, None) => k }
         if (unknown.nonEmpty) {
+          // a null value (a Kafka tombstone) has a null key, which IN
+          // never matches: it is dead-lettered by its own test
+          val (nullKey, keys) = unknown.partition(_ == null)
+          val dead = col("schemaKey").isin(keys.map(x => x: Any): _*) ||
+            (if (nullKey.nonEmpty) col("schemaKey").isNull else lit(false))
           keyed
-            .filter(col("schemaKey").isin(unknown.map(x => x: Any): _*))
+            .filter(dead)
             .select((metaCols :+ "value").map(col): _*)
             .write.mode("append").parquet(dlq)
         }

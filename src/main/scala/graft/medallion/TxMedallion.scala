@@ -118,6 +118,16 @@ object TxMedallion {
     * complete-mode streaming aggregate whose every emission lands as
     * one atomic `overwrite`. Safe to re-run any time; AvailableNow
     * drains exactly the unconsumed commits.
+    *
+    * Upgrading over a checkpoint written before gold's `last` became
+    * `max_by(timestamp_str, event_time)`: delete
+    * `<checkpointBase>/gold_tx_stream` before the first run. The old
+    * checkpoint's state has the old aggregate's value schema, so the
+    * gold query fails with `STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE`
+    * (silver's query is unaffected and commits first). Nothing is
+    * lost: gold is a complete-mode aggregate that overwrites the whole
+    * table, so the fresh query re-reads silver from version 0 and
+    * writes the same gold as [[Medallion.batchGold]].
     */
   def runStreaming(spark: SparkSession, rawPath: String, t: Tables,
                    checkpointBase: String, dayStart: java.sql.Timestamp): Unit = {

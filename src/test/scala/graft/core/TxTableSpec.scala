@@ -1133,6 +1133,121 @@ class TxTableSpec extends SparkTestBase {
     assert(t.read().count() == 1L)
   }
 
+  // ---- staged writes: in place, footers read by the write tasks ----
+
+  private def footerOf(path: String): org.apache.parquet.hadoop.metadata.FileMetaData = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
+    try r.getFooter.getFileMetaData finally r.close()
+  }
+
+  private def parquetLeaves(dir: java.io.File): Seq[java.io.File] =
+    dir.listFiles().toSeq.flatMap { f =>
+      if (f.isDirectory) parquetLeaves(f)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    }
+
+  test("a write task that fails mid-partition leaves the version and the table root as they were") {
+    val dir = tmpDir("txtable-failed-write")
+    val t = new TxTable(spark, dir)
+    t.append(Seq((1L, "a")).toDF("id", "v"))
+    def listing: Set[String] = new java.io.File(dir).list().toSet
+    val before = listing
+    // row 87 is the 13th of partition 3's 25 rows: that task has an
+    // open file when it throws, and the other three tasks succeed
+    val boom = udf { (i: Long) =>
+      if (i == 87L) throw new IllegalStateException("boom at 87")
+      i
+    }
+    val df = spark.range(0, 100, 1, 4).select(boom(col("id")).as("id"), lit("x").as("v"))
+    val e = intercept[Exception](t.append(df))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom at 87")), e.toString)
+    assert(t.version == 0L)
+    assert(listing == before, s"the failed write left ${listing -- before}")
+    assert(t.read().count() == 1L)
+  }
+
+  test("a partitioned append stages what Spark's partitioned writer writes") {
+    val types = Seq("view", "click", "cart", "buy")
+    val df = (1L to 400L).map(i => (i, types((i % 4).toInt), s"p${i % 7}", i * 1.5))
+      .toDF("eventId", "type", "product", "price").repartition(3)
+    val t = table()
+    t.append(df, partitionBy = Seq("type"))
+    // the reference: Spark's own partitioned writer over the same
+    // clustering, splitting by a duplicate of the partition column
+    val ref = tmpDir("txtable-ref-partitioned")
+    df.withColumn("__gpart_type", col("type")).repartition(col("__gpart_type"))
+      .write.mode("overwrite").partitionBy("__gpart_type").parquet(ref)
+    val refFiles = parquetLeaves(new java.io.File(ref)).map(_.toString)
+    val s = t.state()
+    assert(s.files.size == refFiles.size && s.files.size == types.size,
+      s"${s.files.size} staged files against ${refFiles.size} from Spark's writer")
+    assert(t.read().collect().toSet ==
+      spark.read.parquet(ref).drop("__gpart_type").collect().toSet)
+    val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    val staged = s.files.map(f => footerOf(s"${t.tablePath}/$f"))
+    val written = refFiles.map(footerOf)
+    assert(staged.map(_.getSchema).toSet == written.map(_.getSchema).toSet)
+    assert(staged.map(_.getKeyValueMetaData.get(rowMeta)).toSet ==
+      written.map(_.getKeyValueMetaData.get(rowMeta)).toSet)
+    // value-pure: every file's stats pin its type to one value
+    val pinned = s.files.map { f =>
+      val c = s.stats(f).cols("type")
+      assert(c.min == c.max, s"$f holds more than one type: $c")
+      c.min
+    }
+    assert(pinned.toSet == types.map(org.json4s.JString(_)).toSet)
+  }
+
+  test("update and merge stage single-sided part- and cdf- files; the feed is unchanged") {
+    val dir = tmpDir("txtable-fused-stage")
+    val t = new TxTable(spark, dir)
+    t.append((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v").repartition(2))
+    def parquetNames: Set[String] =
+      new java.io.File(dir).list().filter(_.endsWith(".parquet")).toSet
+    def newFiles(body: => Unit): (Set[String], Set[String]) = {
+      val before = parquetNames
+      body
+      (parquetNames -- before).partition(_.startsWith("part-"))
+    }
+    def changeTypes(f: String): Set[Any] =
+      spark.read.parquet(s"$dir/$f").select(TxTable.ChangeTypeCol).collect().map(_.get(0)).toSet
+
+    val v0 = t.version
+    val (upData, upCdf) = newFiles(t.update(col("id") <= 3L, Map("v" -> lit("u"))))
+    assert(upData.nonEmpty && upCdf.nonEmpty && upCdf.forall(_.startsWith("cdf-")))
+    assert(upData.forall(changeTypes(_) == Set(null)), "a data file holds no change rows")
+    assert(upCdf.forall(f => !changeTypes(f).contains(null)), "a change file holds only changes")
+    assert(t.readChangeFeed(v0, t.version)
+      .select(col(TxTable.ChangeTypeCol), col("id"), col("v")).as[(String, Long, String)]
+      .collect().toSet ==
+      (1L to 3L).flatMap(i => Seq(("update_preimage", i, s"v$i"), ("update_postimage", i, "u")))
+        .toSet)
+
+    val v1 = t.version
+    val (mData, mCdf) = newFiles(t.merge(Seq((4L, "m"), (21L, "new")).toDF("id", "v"), Seq("id")))
+    assert(mData.nonEmpty && mCdf.nonEmpty && mCdf.forall(_.startsWith("cdf-")))
+    assert(mCdf.forall(f => !changeTypes(f).contains(null)))
+    assert(t.readChangeFeed(v1, t.version)
+      .select(col(TxTable.ChangeTypeCol), col("id"), col("v")).as[(String, Long, String)]
+      .collect().toSet ==
+      Set(("update_preimage", 4L, "v4"), ("update_postimage", 4L, "m"), ("insert", 21L, "new")))
+    assert(t.read().count() == 21L)
+  }
+
+  test("spark.sql.files.maxRecordsPerFile rolls a staged write into more files") {
+    val t = table()
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
+    try t.append((1L to 45L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    val s = t.state()
+    assert(s.files.size == 5, s.files.toString)
+    assert(s.files.map(s.stats(_).rows).sorted == Seq(5L, 10L, 10L, 10L, 10L))
+    assert(t.read().count() == 45L)
+  }
+
   test("truncateLog refuses when the newest checkpoint is unreadable") {
     val dir = tmpDir("txtable-trunc-torn")
     val t = new TxTable(spark, dir, checkpointInterval = 2)

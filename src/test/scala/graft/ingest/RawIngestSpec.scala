@@ -179,6 +179,29 @@ class RawIngestSpec extends SparkTestBase {
     assert(spark.read.parquet(dlq).count() == 1)
   }
 
+  test("a tombstone (null value) dead-letters with a DLQ and fails the batch without one") {
+    val gen = new EventGenerator(seed = 9)
+    val registry = new InMemorySchemaRegistry
+    val good = gen.envelopeDF(spark, gen.events(6), registry, ConfluentWire)
+    val tombstone = gen.envelopeDF(spark, gen.events(1), registry, ConfluentWire)
+      .withColumn("value", lit(null).cast("binary"))
+    val batch = good.unionByName(tombstone)
+
+    intercept[Exception] {
+      RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(tmpDir("raw-tomb-fail")),
+        "spec", 0L)
+    }
+
+    val raw = tmpDir("raw-tomb-main")
+    val dlq = tmpDir("raw-tomb-dlq")
+    RawIngest.demuxToTable(batch, registry, ConfluentWire, tx(raw), "spec", 0L,
+      deadLetterPath = Some(dlq))
+    assert(RawIngest.readRaw(spark, raw).count() == 6)
+    val dead = spark.read.parquet(dlq)
+    assert(dead.count() == 1, "the tombstone must land in the DLQ")
+    assert(dead.where(col("value").isNull).count() == 1)
+  }
+
   test("permissive ingest drops corrupt rows; failfast propagates") {
     val gen = new EventGenerator(seed = 3)
     val registry = new InMemorySchemaRegistry

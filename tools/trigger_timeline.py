@@ -25,7 +25,13 @@ Options: `--last N` prints only the last N triggers; `--summary`
 prints one line per trigger instead of the full breakdown, where
 `ingest_ms` is the streaming batch's execution and `in_jobs_ms` the
 part of it spent in the executions it ran (the rest is driver-side:
-planning, caching, the commit's renames, footer reads and log claim).
+planning, caching, the commit's bloom sidecars and log claim);
+`--jobs` adds, under each execution of the full breakdown, one line
+per job: the milliseconds from the job's submission to the launch of
+its first task (`to_task_ms`), then each task's Executor Deserialize
+and Executor Run milliseconds as `deser/run`, in launch order. A job
+whose tasks take long to deserialize, next to jobs of the same shape
+that do not, has something heavy in its task closure.
 """
 
 import argparse
@@ -64,6 +70,7 @@ class Execution:
         self.label = label(e)
         self.work = Work()
         self.children = []
+        self.jobs = []
 
     @property
     def ms(self):
@@ -84,6 +91,7 @@ class Job:
             self.label = desc.splitlines()[0] + " | " + self.label
         self.work = Work()
         self.work.jobs = 1
+        self.tasks = []  # (launch ms, deserialize ms, run ms)
 
 
 def label(e):
@@ -105,6 +113,7 @@ def read(path):
     executions = {}
     jobs = {}
     stage_owner = {}
+    stage_job = {}
     order = []  # executions and execution-less jobs, in start order
     with open(path) as f:
         for line in f:
@@ -128,10 +137,12 @@ def read(path):
                 owner = x.work if x is not None else j.work
                 if x is not None:
                     x.work.jobs += 1
+                    x.jobs.append(j)
                 else:
                     order.append(("job", j))
                 for s in e.get("Stage Infos") or []:
                     stage_owner[s["Stage ID"]] = owner
+                    stage_job[s["Stage ID"]] = j
             elif kind == "SparkListenerJobEnd":
                 j = jobs.get(e["Job ID"])
                 if j is not None:
@@ -139,10 +150,16 @@ def read(path):
             elif kind == "SparkListenerTaskEnd":
                 owner = stage_owner.get(e["Stage ID"])
                 m = e.get("Task Metrics") or {}
+                deser = m.get("Executor Deserialize Time", 0)
+                run = m.get("Executor Run Time", 0)
                 if owner is not None:
                     owner.tasks += 1
-                    owner.deser_ms += m.get("Executor Deserialize Time", 0)
-                    owner.run_ms += m.get("Executor Run Time", 0)
+                    owner.deser_ms += deser
+                    owner.run_ms += run
+                j = stage_job.get(e["Stage ID"])
+                if j is not None:
+                    launch = (e.get("Task Info") or {}).get("Launch Time", 0)
+                    j.tasks.append((launch, deser, run))
     return order
 
 
@@ -175,11 +192,23 @@ def row(indent, name, ms, w, what):
             f"{w.deser_ms:>9}{w.run_ms:>8}  {what}")
 
 
+def job_lines(indent, job):
+    """One line per job: submission to first task launch, then each
+    task's deserialize/run milliseconds in launch order."""
+    tasks = sorted(job.tasks)
+    to_task = (tasks[0][0] - job.start) if tasks else float("nan")
+    tasks = " ".join(f"{d}/{r}" for _, d, r in tasks)
+    return f"{indent}job {job.id:<5}to_task_ms {to_task:>5.0f}  deser/run {tasks}  {job.label}"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("eventlog", help="an uncompressed event log file, or its directory")
     ap.add_argument("--last", type=int, default=0, help="print only the last N triggers")
     ap.add_argument("--summary", action="store_true", help="one line per trigger")
+    ap.add_argument("--jobs", action="store_true",
+                    help="per job: submission to first task launch, and each task's "
+                         "deserialize/run ms")
     a = ap.parse_args()
     path = a.eventlog
     if os.path.isdir(path):
@@ -216,11 +245,17 @@ def main():
         for kind, item in items:
             if kind == "sql":
                 print(row("  ", str(item.id), item.ms, total(item), item.label))
+                for j in item.jobs if a.jobs else []:
+                    print(job_lines("      ", j))
                 for c in item.children:
                     print(row("    ", str(c.id), c.ms, c.work, c.label))
+                    for j in c.jobs if a.jobs else []:
+                        print(job_lines("        ", j))
             else:
                 ms = (item.end - item.start) if item.end is not None else float("nan")
                 print(row("  ", f"job {item.id}", ms, item.work, "(no SQL execution) " + item.label))
+                if a.jobs:
+                    print(job_lines("      ", item))
         print()
 
 
