@@ -86,53 +86,44 @@ class TxTable(spark: SparkSession, val tablePath: String,
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ new graft.plans.TxSkipRule
 
-  /** Resolved table state at one version: live files, merged schema,
-    * the high-water batch id per streaming writer, and per-file
-    * column stats (for data skipping; absent for files committed
-    * without them).
-    */
-  case class State(version: Long, files: Seq[String], schema: Option[StructType],
-                   txns: Map[String, Long],
-                   stats: Map[String, FileStats] = Map.empty,
-                   constraints: Map[String, String] = Map.empty,
-                   dvs: Map[String, DvRef] = Map.empty,
-                   blooms: Map[String, BloomCfg] = Map.empty,
-                   renames: Map[String, String] = Map.empty,
-                   dropped: Set[String] = Set.empty,
-                   protocol: (Int, Int) = (1, 1),
-                   lastCommitTs: Long = 0L,
-                   generated: Map[String, String] = Map.empty,
-                   identity: Map[String, (Long, Long, Long)] = Map.empty,
-                   properties: Map[String, String] = Map.empty) {
-    /** logical → physical (inverse of [[renames]]). */
-    def toPhysicalName: Map[String, String] =
-      renames.map { case (p, l) => l -> p }
-    /** A column's current surface name ([[renames]] or itself). */
-    def logicalName(physical: String): String =
-      renames.getOrElse(physical, physical)
-  }
-
   /** Newest contiguous committed state (empty state at version -1 for
     * a table with no commits). Contiguity guards a listing that races
     * a claim on non-atomic-listing stores: replay stops at the first
     * gap, never past it.
+    *
+    * Each call lists the log once. The last state resolved for this
+    * table's root in this JVM (by any handle, see [[TxTable.Snapshot]])
+    * is the replay base while its head manifest is still listed with
+    * the length and modification time it had, so a steady caller reads
+    * only the manifests committed since; otherwise replay starts from
+    * the newest checkpoint.
     */
   def state(): State = stateAt(None)
 
   def version: Long = state().version
 
+  /** This table's key in the snapshot cache: its qualified root. */
+  private lazy val snapshotKey = fs.makeQualified(root).toString
+
   private def stateAt(upTo: Option[Long]): State = {
     val fsv = fs
-    if (!fsv.exists(logDir)) return State(-1L, Nil, None, Map.empty)
-    val names = fsv.listStatus(logDir).map(_.getPath.getName)
+    val listing =
+      try fsv.listStatus(logDir)
+      catch { case _: java.io.FileNotFoundException => return State(-1L, Nil, None, Map.empty) }
+    val names = listing.map(_.getPath.getName)
     val manifests = names.flatMap(manifestVersion(_)).sorted
     val limit = upTo.getOrElse(Long.MaxValue)
+    val cached = snapshots.synchronized(Option(snapshots.get(snapshotKey))).filter { c =>
+      c.state.version <= limit &&
+        listing.exists(f => f.getPath.getName == manifestName(c.state.version) &&
+          f.getLen == c.headLen && f.getModificationTime == c.headMtime)
+    }.map(_.state)
     // newest READABLE checkpoint at or below the target is the replay
     // base — O(1) + manifest tail instead of O(commits) (the paper's
     // parquet checkpoint, in JSON here). Checkpoints are derived data:
     // an unreadable one (e.g. listed mid-write by a lagging store)
     // falls back to the next older, then to full replay.
-    val base = names.flatMap(checkpointVersion(_)).filter(_ <= limit)
+    lazy val checkpointed = names.flatMap(checkpointVersion(_)).filter(_ <= limit)
       .sorted.reverseIterator
       .flatMap(v => scala.util.Try(readCheckpoint(fsv, v)).toOption)
       .nextOption()
@@ -144,6 +135,7 @@ class TxTable(spark: SparkSession, val tablePath: String,
               "the requested version predates log truncation")
         State(-1L, Nil, None, Map.empty)
       }
+    val base = cached.getOrElse(checkpointed)
     var expect = base.version + 1
     val replay = manifests.dropWhile(_ <= base.version).takeWhile { v =>
       val ok = v == expect && v <= limit; expect += 1; ok
@@ -155,8 +147,16 @@ class TxTable(spark: SparkSession, val tablePath: String,
         s"$tablePath requires reader protocol ${st.protocol._1} but this client " +
           s"supports ${TxTable.SupportedReaderVersion} — upgrade before reading " +
           "(serving this table anyway could return wrong results)")
+    if (upTo.isEmpty && (cached.isEmpty || replay.nonEmpty))
+      listing.find(_.getPath.getName == manifestName(st.version)).foreach(remember(st, _))
     st
   }
+
+  /** Make `st` this table's cached snapshot; `head` is its manifest. */
+  private def remember(st: State, head: org.apache.hadoop.fs.FileStatus): Unit =
+    snapshots.synchronized {
+      snapshots.put(snapshotKey, Snapshot(st, head.getLen, head.getModificationTime)); ()
+    }
 
   private def applyManifest(st: State, version: Long, actions: Seq[Action]): State = {
     var files = st.files.toVector
@@ -275,6 +275,12 @@ class TxTable(spark: SparkSession, val tablePath: String,
       spark.sparkContext.hadoopConfiguration, candidates, shapes)
   }
 
+  /** The (writer, batch) marks that the commit at `version` itself
+    * carries: e.g. whether the table's head was written under a cursor.
+    */
+  private[graft] def commitTxns(version: Long): Map[String, Long] =
+    readManifest(fs, version).collect { case Txn(w, b) => w -> b }.toMap
+
   /** Time travel: the table exactly as of `version`. */
   def readAt(version: Long): DataFrame = {
     val s = stateAt(Some(version))
@@ -334,12 +340,22 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * files would double-count — re-sync from a full [[read]] instead
     * (the same contract a format's streaming source enforces).
     */
-  def readChanges(fromVersion: Long, toVersion: Long): DataFrame = {
+  def readChanges(fromVersion: Long, toVersion: Long): DataFrame =
+    appendedRows(fromVersion, toVersion).fold(e => throw new IllegalStateException(e), identity)
+
+  /** [[readChanges]] as a test instead of a throw: the added rows of an
+    * append-only range, None when a commit in it is not append-only.
+    */
+  private[graft] def readAppends(fromVersion: Long, toVersion: Long): Option[DataFrame] =
+    appendedRows(fromVersion, toVersion).toOption
+
+  private def appendedRows(fromVersion: Long, toVersion: Long): Either[String, DataFrame] = {
     val head = state()
-    val added = changedFilesFrom(head, fromVersion, toVersion)
-    logicalize(head,
-      if (added.isEmpty) readState(State(toVersion, Nil, head.schema, Map.empty))
-      else spark.read.schema(head.schema.get).parquet(added: _*))
+    addedFiles(head, fromVersion, toVersion).map { added =>
+      logicalize(head,
+        if (added.isEmpty) readState(State(toVersion, Nil, head.schema, Map.empty))
+        else spark.read.schema(head.schema.get).parquet(added: _*))
+    }
   }
 
   /** The ABSOLUTE paths of files added by commits in `(fromVersion,
@@ -349,34 +365,40 @@ class TxTable(spark: SparkSession, val tablePath: String,
     * rewrite commits are skipped, any other remove rejects loudly.
     */
   private[graft] def changedFiles(fromVersion: Long, toVersion: Long): Seq[String] =
-    changedFilesFrom(state(), fromVersion, toVersion)
+    addedFiles(state(), fromVersion, toVersion)
+      .fold(e => throw new IllegalStateException(e), identity)
 
-  private def changedFilesFrom(head: State, fromVersion: Long,
-                               toVersion: Long): Seq[String] = {
+  /** The files added in `(fromVersion, toVersion]`, or why the range is
+    * not append-only. Each manifest is read once, up to the first
+    * commit that is not.
+    */
+  private def addedFiles(head: State, fromVersion: Long,
+                         toVersion: Long): Either[String, Seq[String]] = {
     require(toVersion <= head.version,
       s"toVersion $toVersion not committed (latest contiguous: ${head.version})")
     require(fromVersion <= toVersion,
       s"empty or inverted range ($fromVersion, $toVersion]")
     val fsv = fs
-    var added = Vector.empty[String]
-    ((fromVersion + 1) to toVersion).foreach { v =>
-      val actions = readManifest(fsv, v)
-      // a rewrite commit (compaction) re-adds EXISTING rows in new
-      // files: invisible to an incremental consumer by definition
-      if (!actions.exists(_ == RewriteMarker)) actions.foreach {
-        case Add(p, _) => added :+= p
-        case Remove(p) => throw new IllegalStateException(
-          s"version $v of $tablePath removes $p outside a rewrite commit: the " +
-            s"range ($fromVersion, $toVersion] spans an overwrite and is not " +
-            "append-only — re-sync this consumer from a full read()")
-        case Dv(p, _, _) => throw new IllegalStateException(
-          s"version $v of $tablePath changes the deletion vector of $p: the " +
-            s"range ($fromVersion, $toVersion] spans a row-level delete and is " +
-            "not append-only — re-sync this consumer from a full read()")
-        case _ => ()
+    ((fromVersion + 1) to toVersion)
+      .foldLeft[Either[String, Vector[String]]](Right(Vector.empty)) {
+        case (Right(added), v) =>
+          val actions = readManifest(fsv, v)
+          // a rewrite commit (compaction) re-adds EXISTING rows in new
+          // files: invisible to an incremental consumer by definition
+          if (actions.contains(RewriteMarker)) Right(added)
+          else actions.collectFirst {
+            case Remove(p) =>
+              s"version $v of $tablePath removes $p outside a rewrite commit: the " +
+                s"range ($fromVersion, $toVersion] spans an overwrite and is not " +
+                "append-only — re-sync this consumer from a full read()"
+            case Dv(p, _, _) =>
+              s"version $v of $tablePath changes the deletion vector of $p: the " +
+                s"range ($fromVersion, $toVersion] spans a row-level delete and is " +
+                "not append-only — re-sync this consumer from a full read()"
+          }.toLeft(added ++ actions.collect { case Add(p, _) => p })
+        case (notAppendOnly, _) => notAppendOnly
       }
-    }
-    added.map(f => new Path(root, f).toString)
+      .map(_.map(f => new Path(root, f).toString))
   }
 
   /** GENERATED columns currently declared (surface name → stored
@@ -1552,25 +1574,34 @@ class TxTable(spark: SparkSession, val tablePath: String,
   /** Replace the table contents atomically. Serializes after any
     * concurrent commit: on a lost race the remove-set is rebuilt from
     * the new head, so rows appended concurrently are also replaced —
-    * last-writer-wins, with both versions in the history.
+    * last-writer-wins, with both versions in the history. `txn` is
+    * [[append]]'s exactly-once gate: an overwrite whose batch already
+    * landed commits nothing.
     */
-  def overwrite(df0: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
+  def overwrite(df0: DataFrame, txn: Option[TxnId] = None,
+                partitionBy: Seq[String] = Nil): Unit = {
     val snap0 = state()
     val (readds, snap) = withReadds(snap0, df0)
     val df = computeGenerated(snap, physicalize(snap, df0))
     val staged = stageData(df, partitionBy = partitionBy.map(physicalName(snap, _)))
     var checkedFor: Map[String, String] = null
+    fireBeforeCommitHook()
     commitLoop(s"overwrite of $tablePath") { st =>
-      requireRenamesStable(snap0, st, staged, "overwrite of")
-      requireComputedColumnsStable(snap0, st, staged, "overwrite of")
-      if (effectiveChecks(st) != checkedFor) {
-        enforceConstraints(effectiveChecks(st), staged, df.schema, staged, "overwrite of")
-        checkedFor = effectiveChecks(st)
+      if (txnGate(st, txn, staged, "overwrite of")) {
+        None // already committed by a previous attempt of this batch
+      } else {
+        requireRenamesStable(snap0, st, staged, "overwrite of")
+        requireComputedColumnsStable(snap0, st, staged, "overwrite of")
+        if (effectiveChecks(st) != checkedFor) {
+          enforceConstraints(effectiveChecks(st), staged, df.schema, staged, "overwrite of")
+          checkedFor = effectiveChecks(st)
+        }
+        Some(st.files.map(Remove(_)) ++ staged.map { case (p, s) => Add(p, s) } ++
+          readds.map { case (l, f) => RenameCol(f, l) } ++
+          identitySyncActions(st, df) ++
+          txn.map(t => Txn(t.writerId, t.batchId)).toSeq :+
+          Meta(df.schema.toDDL))
       }
-      Some(st.files.map(Remove(_)) ++ staged.map { case (p, s) => Add(p, s) } ++
-        readds.map { case (l, f) => RenameCol(f, l) } ++
-        identitySyncActions(st, df) :+
-        Meta(df.schema.toDDL))
     }
   }
 
@@ -2892,10 +2923,11 @@ class TxTable(spark: SparkSession, val tablePath: String,
 
   // ---- logical conflict detection ----
 
-  /** One-shot hook fired by the row-mutating verbs right before they
-    * enter the commit loop — deterministic test instrumentation for
-    * the race window between snapshot and claim (a test installs a
-    * concurrent writer here; production never touches it).
+  /** One-shot hook fired by append, overwrite and the row-mutating
+    * verbs right before they enter the commit loop — deterministic
+    * test instrumentation for the race window between snapshot and
+    * claim (a test installs a concurrent writer or a crash here;
+    * production never touches it).
     */
   private[graft] var beforeCommitHook: () => Unit = () => ()
   private def fireBeforeCommitHook(): Unit = {
@@ -3410,7 +3442,11 @@ class TxTable(spark: SparkSession, val tablePath: String,
         val actions = actions0 :+
           CommitTs(math.max(System.currentTimeMillis(), st.lastCommitTs + 1))
         if (!tryClaim(st.version + 1, actions)) commitLoop(what, attempt + 1)(build)
-        else maybeCheckpoint(applyManifest(st, st.version + 1, actions))
+        else {
+          val next = applyManifest(st, st.version + 1, actions)
+          remember(next, fs.getFileStatus(new Path(logDir, manifestName(next.version))))
+          maybeCheckpoint(next)
+        }
     }
   }
 
@@ -3681,6 +3717,32 @@ class TxTable(spark: SparkSession, val tablePath: String,
 }
 
 object TxTable {
+
+  /** Resolved table state at one version: live files, merged schema,
+    * the high-water batch id per streaming writer, and per-file
+    * column stats (for data skipping; absent for files committed
+    * without them).
+    */
+  case class State(version: Long, files: Seq[String], schema: Option[StructType],
+                   txns: Map[String, Long],
+                   stats: Map[String, FileStats] = Map.empty,
+                   constraints: Map[String, String] = Map.empty,
+                   dvs: Map[String, DvRef] = Map.empty,
+                   blooms: Map[String, BloomCfg] = Map.empty,
+                   renames: Map[String, String] = Map.empty,
+                   dropped: Set[String] = Set.empty,
+                   protocol: (Int, Int) = (1, 1),
+                   lastCommitTs: Long = 0L,
+                   generated: Map[String, String] = Map.empty,
+                   identity: Map[String, (Long, Long, Long)] = Map.empty,
+                   properties: Map[String, String] = Map.empty) {
+    /** logical → physical (inverse of [[renames]]). */
+    def toPhysicalName: Map[String, String] =
+      renames.map { case (p, l) => l -> p }
+    /** A column's current surface name ([[renames]] or itself). */
+    def logicalName(physical: String): String =
+      renames.getOrElse(physical, physical)
+  }
 
   /** Newest protocol this implementation understands. v1 = base log
     * (adds/removes/meta/txn/stats/constraints/blooms/cdf/rewrite);
@@ -4186,6 +4248,24 @@ object TxTable {
   val ScdFromCol = "_scd_from"
   val ScdToCol = "_scd_to"
   private val MaxCommitAttempts = 30
+
+  /** A resolved [[State]] with the length and modification time of its
+    * head manifest, as [[TxTable.state]] caches it per qualified table
+    * root. A later `state()` advances it only while that manifest is
+    * listed unchanged: a table deleted and recreated at the same path,
+    * or a manifest rewritten in place, replays from its checkpoint.
+    * Keyed by path, not by handle, because callers build a fresh handle
+    * per use; a successful claim seeds it. At most [[MaxSnapshots]]
+    * tables are kept, least recently used first out.
+    */
+  private final case class Snapshot(state: State, headLen: Long, headMtime: Long)
+  private val MaxSnapshots = 64
+  private val snapshots =
+    new java.util.LinkedHashMap[String, Snapshot](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Snapshot]): Boolean =
+        size() > MaxSnapshots
+    }
+
   private val ManifestRe = """v(\d{20})\.json""".r
   private val CheckpointRe = """v(\d{20})\.ckpt\.json""".r
 

@@ -28,9 +28,14 @@ import graft.core.TxTable
   *     as tie-break), across increments by an anti-join against the
   *     already-committed eventIds (the state-store-free batch form) —
   *     cursor `silver@bronze`.
-  *   - **gold**: one atomic `overwrite` of the complete-mode
-  *     aggregate — readers see the old or the new day-mix, never the
-  *     torn directory a plain overwrite exposes mid-write.
+  *   - **gold**: the complete-mode aggregate, folded: silver's rows
+  *     added since the cursor `gold@silver/<dayStart epoch ms>` are
+  *     combined with gold's current rows ([[Medallion.goldCombine]])
+  *     and land as one atomic `overwrite` that carries the cursor —
+  *     readers see the old or the new day-mix, never the torn
+  *     directory a plain overwrite exposes mid-write. A range of silver
+  *     that is not append-only, a new `dayStart`, or a gold whose last
+  *     commit is not this cursor's rebuilds from all of silver instead.
   *
   * At 100 TB this is the production template: each stage is a
   * scheduled incremental job, restart-safe at every boundary, and the
@@ -53,6 +58,12 @@ object TxMedallion {
   private[medallion] val BronzeCursor = "bronze@raw"
   private[medallion] val SilverCursor = "silver@bronze"
 
+  /** gold's cursor over silver for one day window: a run with another
+    * `dayStart` finds no cursor and rebuilds instead of mixing windows.
+    */
+  private[medallion] def goldCursor(dayStart: java.sql.Timestamp): String =
+    s"gold@silver/${dayStart.getTime}"
+
   /** The one stage step: read `cursor`'s consumed version from
     * `downstream`'s log, `transform` the rows `upstream` added since
     * then up to its head, and append them under `TxnId(cursor, head)`.
@@ -71,12 +82,38 @@ object TxMedallion {
     advance(new TxTable(spark, rawPath), t.bronze, BronzeCursor, Seq("type"))(
       Medallion.bronzeTransform)
 
+  /** gold's step: fold silver's rows added since gold's cursor into
+    * gold's current rows, or rebuild from all of silver when gold's
+    * rows are not this cursor's fold (no cursor, or gold's last commit
+    * did not carry it) or the range is not append-only; commit nothing
+    * when silver has no commit past the cursor.
+    */
+  private def gold(t: Tables, dayStart: java.sql.Timestamp): Unit = {
+    val head = t.silver.version
+    if (head < 0) return
+    val cursor = goldCursor(dayStart)
+    val g = t.gold.state()
+    val at = g.txns.get(cursor)
+    val from = at.filter(_ => t.gold.commitTxns(g.version).contains(cursor))
+    if (from.exists(_ >= head)) return
+    val parts = from.flatMap(t.silver.readAppends(_, head)) match {
+      case Some(fresh) => Medallion.goldContributions(fresh, dayStart)
+        .unionByName(t.gold.readAt(g.version).drop("last"))
+      case None => Medallion.goldContributions(t.silver.readAt(head), dayStart)
+    }
+    // a rebuild at a head the cursor already holds (another writer
+    // overwrote gold since) commits past the gate, without the cursor
+    t.gold.overwrite(Medallion.goldCombine(parts),
+      Some(TxTable.TxnId(cursor, head)).filterNot(_ => at.exists(_ >= head)))
+  }
+
   /** One scheduled run of the chain (the AvailableNow analog of the
     * reference's Trigger.Once DAG): advance bronze over raw's new
-    * commits and silver over bronze's, rebuild gold. Safe to re-run at
-    * any time; every stage is idempotent. All progress lives in the
-    * tables' logs, so `checkpointBase` is unused; it stays in the
-    * signature for the callers that share it with [[runStreaming]].
+    * commits and silver over bronze's, fold silver's new rows into
+    * gold. Safe to re-run at any time; every stage is idempotent. All
+    * progress lives in the tables' logs, so `checkpointBase` is
+    * unused; it stays in the signature for the callers that share it
+    * with [[runStreaming]].
     */
   def run(spark: SparkSession, rawPath: String, t: Tables, checkpointBase: String,
           dayStart: java.sql.Timestamp): Unit = {
@@ -99,7 +136,7 @@ object TxMedallion {
         else firstPer.join(t.silver.read().select(col("eventId")), Seq("eventId"), "left_anti")
       Medallion.silverColumns(novel)
     }
-    t.gold.overwrite(Medallion.goldAgg(t.silver.read(), dayStart))
+    gold(t, dayStart)
   }
 
   /** The same chain with silver and gold as REAL `readStream` queries
@@ -115,12 +152,13 @@ object TxMedallion {
     * anti-join, and exactly-once is the checkpoint + idempotent
     * `appendBatch` pair — redelivery of a batch after a
     * sink-success/checkpoint-fail crash is a no-op. Gold is a
-    * complete-mode streaming aggregate whose every emission lands as
-    * one atomic `overwrite`. Safe to re-run any time; AvailableNow
-    * drains exactly the unconsumed commits.
+    * complete-mode streaming aggregate of [[run]]'s formulation
+    * (contributions, then [[Medallion.goldCombine]]) whose every
+    * emission lands as one atomic `overwrite`. Safe to re-run any
+    * time; AvailableNow drains exactly the unconsumed commits.
     *
-    * Upgrading over a checkpoint written before gold's `last` became
-    * `max_by(timestamp_str, event_time)`: delete
+    * Upgrading over a checkpoint written before gold's aggregate became
+    * sums of non-null flags and a max of `event_time`: delete
     * `<checkpointBase>/gold_tx_stream` before the first run. The old
     * checkpoint's state has the old aggregate's value schema, so the
     * gold query fails with `STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE`
@@ -148,9 +186,9 @@ object TxMedallion {
     silverQ.awaitTermination()
     if (t.silver.version < 0) return
 
-    val goldQ = Medallion.goldAgg(
+    val goldQ = Medallion.goldCombine(Medallion.goldContributions(
         spark.readStream.format("graft-txtable")
-          .option("path", t.silver.tablePath).load(), dayStart)
+          .option("path", t.silver.tablePath).load(), dayStart))
       .writeStream
       .queryName("graftTxGoldStream")
       .outputMode("complete")

@@ -606,9 +606,9 @@ private[sql] class GraftWriteBuilder(dir: String, partCols: Seq[String])
         val t = new TxTable(data.sparkSession, dir)
         mode match {
           case AppendMode => t.append(data, partitionBy = partCols)
-          case TruncateMode => t.overwrite(data, partCols)
+          case TruncateMode => t.overwrite(data, partitionBy = partCols)
           case OverwriteMode(fs) if fs.forall(_.isInstanceOf[AlwaysTrue]) =>
-            t.overwrite(data, partCols)
+            t.overwrite(data, partitionBy = partCols)
           case OverwriteMode(fs) =>
             // INSERT OVERWRITE with a static partition spec: replace
             // exactly the addressed slice, atomically, leaving every

@@ -201,7 +201,7 @@ class TxTableSink(sqlContext: SQLContext, tablePath: String,
     // the micro-batch DF is streaming-tagged; re-wrap as a batch DF
     // (what ForeachBatchSink does) so the table can .write it
     val batchDF = GraftStreamBridge.asBatchDF(data)
-    if (mode == OutputMode.Complete()) table.overwrite(batchDF, partitionCols)
+    if (mode == OutputMode.Complete()) table.overwrite(batchDF, partitionBy = partitionCols)
     else {
       val queryId = TxTableSink.queryId(sqlContext.sparkContext, "graft-txtable sink")
       table.appendBatch(batchDF, queryId, batchId, partitionCols)
@@ -358,7 +358,7 @@ class TxTableSourceProvider extends StreamSourceProvider with StreamSinkProvider
       .map(DataSourceUtils.decodePartitioningColumns).getOrElse(Nil)
     mode match {
       case SaveMode.Append => t.append(data, partitionBy = partCols)
-      case SaveMode.Overwrite => t.overwrite(data, partCols)
+      case SaveMode.Overwrite => t.overwrite(data, partitionBy = partCols)
       case SaveMode.ErrorIfExists =>
         require(t.version < 0,
           s"${path(parameters)} already has commits (v${t.version}); " +

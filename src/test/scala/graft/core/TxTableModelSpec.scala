@@ -110,7 +110,7 @@ class TxTableModelSpec extends SparkTestBase {
             // col); re-adds a dropped value column, and wipes the
             // identity column from the schema until the next append
             val batch = rows(1 + rnd.nextInt(4))
-            if (rnd.nextBoolean()) t.overwrite(batch.toDF(kc, vc), Seq(vc))
+            if (rnd.nextBoolean()) t.overwrite(batch.toDF(kc, vc), partitionBy = Seq(vc))
             else t.overwrite(batch.toDF(kc, vc))
             model = batch.map { case (k, v) => (k, Some(v)) }.toVector
             vLive = true

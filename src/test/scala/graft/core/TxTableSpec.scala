@@ -938,6 +938,85 @@ class TxTableSpec extends SparkTestBase {
     assert(keys == expected)
   }
 
+  /** `body`'s result and the bytes this thread read through the
+    * `file:` file systems while it ran.
+    */
+  private def bytesReadBy[A](body: => A): (A, Long) = {
+    import scala.jdk.CollectionConverters._
+    def read() = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getThreadStatistics.getBytesRead).sum
+    val before = read()
+    val a = body
+    (a, read() - before)
+  }
+
+  private def manifestFile(dir: String, v: Long) =
+    new java.io.File(dir, TxTable.LogDirName + "/" + "v%020d.json".format(v))
+
+  test("state() advances a cached snapshot: no manifest read when unchanged, one per new commit") {
+    val dir = tmpDir("txtable-snapshot")
+    val t = new TxTable(spark, dir)
+    (0 until 3).foreach(i => t.append(Seq((s"k$i", i.toLong)).toDF("k", "v")))
+    // a fresh handle: the snapshot is kept per table path, and the
+    // last claim seeded it
+    val fresh = new TxTable(spark, dir)
+    val (s1, read1) = bytesReadBy(fresh.state())
+    assert(s1.version == 2L)
+    assert(read1 == 0L, s"an unchanged table re-read $read1 bytes of its log")
+    // a commit whose claim this JVM never saw: another process's
+    withChildWriter(dir, 1, "child", "append") {}
+    val (s2, read2) = bytesReadBy(fresh.state())
+    assert(s2.version == 3L)
+    assert(read2 == manifestFile(dir, 3L).length(),
+      s"read $read2 bytes for one ${manifestFile(dir, 3L).length()}-byte manifest")
+    assert(t.read().select("k").as[String].collect().toSet ==
+      Set("k0", "k1", "k2", "child-0"))
+  }
+
+  test("the snapshot cache sees other handles' commits and never serves a recreated table") {
+    val dir = tmpDir("txtable-snapshot-recreate")
+    val (a, b) = (new TxTable(spark, dir), new TxTable(spark, dir))
+    a.append(Seq((1L, "a")).toDF("id", "v"))
+    assert(b.version == 0L)
+    b.append(Seq((2L, "b")).toDF("id", "v"))
+    assert(a.version == 1L)
+    assert(a.read().select("id").as[Long].collect().toSet == Set(1L, 2L))
+    // another table of the same shape and commit count, copied over
+    // this one's path file by file (fresh modification times): its
+    // manifests carry this table's names and, here, lengths
+    val other = new TxTable(spark, tmpDir("txtable-snapshot-other"))
+    other.append(Seq((3L, "c")).toDF("id", "v"))
+    other.append(Seq((4L, "d")).toDF("id", "v"))
+    val (src, dst) = (java.nio.file.Paths.get(other.tablePath), java.nio.file.Paths.get(dir))
+    org.apache.commons.io.FileUtils.deleteDirectory(dst.toFile)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach(p => java.nio.file.Files.copy(p, dst.resolve(src.relativize(p))))
+    finally walk.close()
+    assert(manifestFile(dir, 1L).length() == manifestFile(other.tablePath, 1L).length())
+    assert(a.version == 1L)
+    assert(a.read().select("id").as[Long].collect().toSet == Set(3L, 4L))
+  }
+
+  test("a cached snapshot survives truncateLog and still passes the reader-protocol gate") {
+    val dir = tmpDir("txtable-snapshot-trunc")
+    val t = new TxTable(spark, dir, checkpointInterval = 2)
+    (0 until 5).foreach(i => t.append(Seq((i.toLong, s"r$i")).toDF("id", "v")))
+    t.truncateLog()
+    val fresh = new TxTable(spark, dir)
+    assert(fresh.version == 4L)
+    assert(fresh.read().select("id").as[Long].collect().toSet == (0L to 4L).toSet)
+    assert(intercept[IllegalStateException](t.readChanges(0L, t.version))
+      .getMessage.contains("truncation"))
+    assert(t.readChanges(3L, 4L).count() == 1L)
+    // a future client's commit on top of the cached head
+    java.nio.file.Files.writeString(manifestFile(dir, 5L).toPath,
+      """{"a":"protocol","minReader":99,"minWriter":99}""" + "\n")
+    val e = intercept[IllegalStateException](t.state())
+    assert(e.getMessage.contains("reader protocol 99"), e.getMessage)
+    assert(intercept[IllegalStateException](new TxTable(spark, dir).read())
+      .getMessage.contains("reader protocol 99"))
+  }
+
   test("cross-process merge: no lost update against a racing appender") {
     val dir = tmpDir("txtable-2jvm-merge")
     val t = new TxTable(spark, dir)

@@ -125,12 +125,13 @@ class TxMedallionSpec extends SparkTestBase {
     assert(dupCount == 0, "cross-increment dedup must keep one row per eventId")
     assertLastIsLatest(t.gold.read())
 
-    // run 3: nothing new — bronze and silver commit nothing (the
-    // exactly-once cursors hold), gold rebuilds to the same answer
-    val (bv, sv) = (t.bronze.version, t.silver.version)
+    // run 3: nothing new — no stage commits (the exactly-once cursors
+    // hold, gold's included), the answer is unchanged
+    val (bv, sv, gv) = (t.bronze.version, t.silver.version, t.gold.version)
     TxMedallion.run(spark, rawPath, t, ckpt, dayStart)
     assert(t.bronze.version == bv, "no new raw data: bronze must not commit")
     assert(t.silver.version == sv, "no new bronze commits: silver must not commit")
+    assert(t.gold.version == gv, "no new silver commits: gold must not commit")
     assert(goldSet(t.gold.read()) ==
       goldSet(Medallion.batchGold(spark, rawPath, dayStart)))
 
@@ -177,5 +178,110 @@ class TxMedallionSpec extends SparkTestBase {
     assert(trigger(b3, 80) == 0L, "a steady trigger recompiled generated classes")
     assert(goldSet(t.gold.read()) ==
       goldSet(Medallion.batchGold(spark, rawPath, dayStart)))
+  }
+
+  /** One ingest-fed chain on fresh tables under a temp dir. */
+  private class Chain(name: String, seed: Long) {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val gen = new EventGenerator(seed)
+    val registry = new InMemorySchemaRegistry
+    val base = tmpDir(name)
+    val rawPath = s"$base/raw"
+    val ckpt = s"$base/_checkpoints"
+    val t = TxMedallion.tables(spark, base)
+    private val stream = MemoryStream[KafkaEnvelope]
+    private var offset = 0
+    /** Ingest `events`, then one `TxMedallion.run`. */
+    def trigger(events: Seq[graft.gen.ProductEvent], dayStart: java.sql.Timestamp): Unit = {
+      if (events.nonEmpty) {
+        stream.addData(gen.envelopes(events, registry, ConfluentWire, offset))
+        offset += events.size
+        RawIngest.run(stream.toDF(), registry, ConfluentWire, rawPath, s"$ckpt/raw")
+          .awaitTermination()
+      }
+      TxMedallion.run(spark, rawPath, t, ckpt, dayStart)
+    }
+    /** Gold equals the batch recompute for `dayStart`, counts and time. */
+    def assertGold(dayStart: java.sql.Timestamp): Unit = {
+      val cols = Seq("type", "color", "size", "count_type", "count_color", "count_size",
+        "last_event_time").map(col)
+      val gold = t.gold.read().select(cols: _*)
+      val expected = Medallion.batchGold(spark, rawPath, dayStart).select(cols: _*)
+      assert(gold.collect().toSet == expected.collect().toSet)
+      assert(gold.count() == expected.count())
+      assertLastIsLatest(t.gold.read())
+    }
+  }
+
+  private val day = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+  // the generator's events are one second apart from 2024-01-01 00:00:00
+  private val dayLate = java.sql.Timestamp.valueOf("2024-01-01 00:00:30")
+
+  test("gold folds silver's increment under its cursor and commits once per silver head") {
+    val c = new Chain("tx-medallion-fold", seed = 61)
+    val Seq(b1, b2) = c.gen.events(80, duplicateEvery = 6).grouped(40).toSeq
+    c.trigger(b1, day)
+    assert(c.t.gold.state().txns(TxMedallion.goldCursor(day)) == c.t.silver.version)
+    val gv = c.t.gold.version
+    c.trigger(b2, day)
+    assert(c.t.gold.version == gv + 1, "one fold is one gold commit")
+    assert(c.t.gold.state().txns(TxMedallion.goldCursor(day)) == c.t.silver.version)
+    c.assertGold(day)
+    // the folded plan aggregates with hashes, not sorts
+    val parts = Medallion.goldCombine(Medallion.goldContributions(c.t.silver.read(), day))
+    val plan = parts.queryExecution.executedPlan.toString
+    assert(!plan.contains("SortAggregate"), plan)
+  }
+
+  test("a non-append silver commit makes the next run rebuild gold in full") {
+    val c = new Chain("tx-medallion-rebuild", seed = 67)
+    c.trigger(c.gen.events(60, duplicateEvery = 6), dayLate)
+    val gv = c.t.gold.version
+    // rows outside gold's window: the delete rewrites the files that
+    // hold them, so silver's range since gold's cursor removes files
+    c.t.silver.delete(col("event_time") < lit(dayLate))
+    assert(c.t.silver.readAppends(c.t.silver.version - 1, c.t.silver.version).isEmpty)
+    c.trigger(Nil, dayLate)
+    assert(c.t.gold.version == gv + 1)
+    // a fold of the rewritten files would count their rows twice
+    c.assertGold(dayLate)
+  }
+
+  test("a crash before gold's claim leaves the cursor, and the rerun folds exactly once") {
+    val c = new Chain("tx-medallion-crash", seed = 71)
+    val Seq(b1, b2) = c.gen.events(80, duplicateEvery = 6).grouped(40).toSeq
+    c.trigger(b1, day)
+    val (gv, at) = (c.t.gold.version, c.t.gold.state().txns(TxMedallion.goldCursor(day)))
+    c.t.gold.beforeCommitHook = () => throw new IllegalStateException("crash before claim")
+    val e = intercept[IllegalStateException](c.trigger(b2, day))
+    assert(e.getMessage == "crash before claim")
+    assert(c.t.gold.version == gv, "the crashed run committed gold")
+    assert(c.t.gold.state().txns(TxMedallion.goldCursor(day)) == at)
+    assert(c.t.silver.version > at, "silver committed before gold's crash")
+    c.trigger(Nil, day)
+    assert(c.t.gold.version == gv + 1)
+    c.assertGold(day)
+    c.trigger(Nil, day)
+    assert(c.t.gold.version == gv + 1, "the rerun's fold is not repeated")
+  }
+
+  test("a run with another dayStart rebuilds gold for that window, and switching back too") {
+    val c = new Chain("tx-medallion-window", seed = 73)
+    val Seq(b1, b2, b3) = c.gen.events(120, duplicateEvery = 6).grouped(40).toSeq
+    c.trigger(b1, day)
+    c.trigger(b2, day)
+    c.assertGold(day)
+    // no silver commit in between: only the cursor's window differs
+    c.trigger(Nil, dayLate)
+    c.assertGold(dayLate)
+    // back to the first window, at the head its cursor already holds
+    c.trigger(Nil, day)
+    c.assertGold(day)
+    // and past it: gold's last commit was a rebuild without the cursor
+    c.trigger(b3, day)
+    c.assertGold(day)
+    c.trigger(Nil, dayLate)
+    c.assertGold(dayLate)
   }
 }

@@ -31,7 +31,12 @@ per job: the milliseconds from the job's submission to the launch of
 its first task (`to_task_ms`), then each task's Executor Deserialize
 and Executor Run milliseconds as `deser/run`, in launch order. A job
 whose tasks take long to deserialize, next to jobs of the same shape
-that do not, has something heavy in its task closure.
+that do not, has something heavy in its task closure. `--gaps` prints,
+per trigger, the driver time before each top-level SQL execution (or
+execution-less job): the milliseconds from the end of the previous one
+to its start (`gap_ms`), and the gap from the last one's end to the
+next trigger. That is where table-state loads, planning and log claims
+show: they run on the driver between executions.
 """
 
 import argparse
@@ -201,11 +206,29 @@ def job_lines(indent, job):
     return f"{indent}job {job.id:<5}to_task_ms {to_task:>5.0f}  deser/run {tasks}  {job.label}"
 
 
+def gap_lines(items, nxt):
+    """The driver time before each top-level item and after the last."""
+    out, total, done = [], 0, items[0][1].start
+    for kind, item in items:
+        gap = max(0, item.start - done)
+        total += gap
+        name = str(item.id) if kind == "sql" else f"job {item.id}"
+        what = item.label if kind == "sql" else "(no SQL execution) " + item.label
+        ms = (end_of(item) - item.start)
+        out.append(f"  {gap:>7.0f}  {name:<8}{ms:>8.0f}  {what}")
+        done = max(done, end_of(item))
+    tail = max(0, nxt - done)
+    out.append(f"  {tail:>7.0f}  {'(end)':<8}{'':>8}  to the next trigger")
+    return out, total + tail
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("eventlog", help="an uncompressed event log file, or its directory")
     ap.add_argument("--last", type=int, default=0, help="print only the last N triggers")
     ap.add_argument("--summary", action="store_true", help="one line per trigger")
+    ap.add_argument("--gaps", action="store_true",
+                    help="per trigger: driver ms before each top-level execution")
     ap.add_argument("--jobs", action="store_true",
                     help="per job: submission to first task launch, and each task's "
                          "deserialize/run ms")
@@ -233,6 +256,14 @@ def main():
             w.add(total(item))
         sql = [i for k, i in items if k == "sql"]
         sql_ms = sum(i.ms for i in sql if i.end is not None)
+        if a.gaps:
+            lines, gaps = gap_lines(items, nxt)
+            print(f"trigger {n} at +{(start - t0) / 1e3:.1f} s: wall {nxt - start:.0f} ms, "
+                  f"{gaps:.0f} ms of it between top-level executions")
+            print(f"  {'gap_ms':>7}  {'exec':<8}{'ms':>8}  what")
+            print("\n".join(lines))
+            print()
+            continue
         if a.summary:
             print(f"{n:>7}{(start - t0) / 1e3:>8.1f}{nxt - start:>9.0f}{sql_ms:>8.0f}{len(sql):>6}"
                   f"{w.jobs:>6}{w.tasks:>7}{w.deser_ms:>9}{w.run_ms:>8}{sql[0].ms:>10.0f}"
